@@ -1,14 +1,27 @@
-"""Table loaders for the driver-generated parquet test data.
+"""Table loaders for the driver-generated parquet test data, and the one
+owner of directories derived from it.
 
 Scans are plain ``spark.read.parquet`` so Catalyst gets predicate pushdown,
 column pruning and (on a real lake) partition pruning for free — the scan
 layer the reference lacks entirely (SURVEY.md §2.D: file scans ABSENT in
 reference, supplied by Spark built-ins here).
+
+``derived_dir`` caches a directory whose content is a pure function of
+``sf_dir`` (a produced stream, a re-laid-out table, a drained index) under
+one root in ``tempfile.gettempdir()``, keyed on what produced it: the
+name, the sf_dir's real path and table files (name, size, mtime), and the
+package's own sources. Directories a query writes on every call belong in
+``shared.scratch_dir`` instead.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -129,3 +142,62 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (for spark.sql-expressed queries)."""
     for name in TABLES:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+DERIVED_ROOT = "aks_derived"
+
+
+@functools.cache
+def _sources_digest() -> str:
+    """Digest of the package's ``*.py`` sources, once per process: a
+    directory built by one tree is never served to another."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    h = hashlib.sha1()
+    for d, subdirs, files in os.walk(pkg):
+        subdirs.sort()
+        for f in sorted(files):
+            if f.endswith(".py"):
+                p = os.path.join(d, f)
+                h.update(os.path.relpath(p, pkg).encode())
+                with open(p, "rb") as fh:
+                    h.update(fh.read())
+    return h.hexdigest()
+
+
+def derived_key(sf_dir: str, name: str) -> str:
+    """``name`` plus a digest of what a directory derived from ``sf_dir``
+    depends on. Also names catalog tables built from the same inputs."""
+    real = os.path.realpath(sf_dir)
+    h = hashlib.sha1(f"{real}\0{_sources_digest()}".encode())
+    for t in TABLES:
+        try:
+            st = os.stat(os.path.join(real, f"{t}.parquet"))
+        except FileNotFoundError:
+            continue
+        h.update(f"\0{t}:{st.st_size}:{st.st_mtime_ns}".encode())
+    return f"{name}_{h.hexdigest()[:16]}"
+
+
+def derived_dir(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[str], None]
+) -> str:
+    """Return the cached directory for (``name``, ``sf_dir``), running
+    ``build(path)`` on a miss. A sibling ``<path>.complete`` marker,
+    written only after ``build`` returns, marks completion; a directory
+    without it is partial and is removed before the rebuild. Spark jobs
+    the build runs are labelled ``derived <name>``."""
+    path = os.path.join(tempfile.gettempdir(), DERIVED_ROOT, derived_key(sf_dir, name))
+    marker = path + ".complete"
+    if os.path.exists(marker):
+        return path
+    shutil.rmtree(path, ignore_errors=True)
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"derived {name}")
+    try:
+        build(path)
+    finally:
+        sc.setJobDescription(prev)
+    os.makedirs(path, exist_ok=True)
+    open(marker, "w").close()
+    return path

@@ -16,8 +16,9 @@ scans — the two storage-side levers that matter most at 100 TB.
 
 Reference parity: none — the reference has no file storage at all
 (SURVEY.md §2.D: file scans/sinks ABSENT, supplied by Spark built-ins).
-Writes land under the session warehouse dir (``spark-warehouse/``),
-per-SF-tagged so sf0.001/sf0.01/sf0.1 runs don't collide.
+Every re-laid-out copy is an ``io.derived_dir`` cache: keyed on the sf
+dir's real path and table files plus the package sources, so two scale
+factors, two data sets or two trees never share a copy.
 """
 
 from __future__ import annotations
@@ -28,36 +29,26 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import MONEY_CENTS_DUCK, money_cents
-from ..io import table
+from ..io import derived_dir, derived_key, table
 from ..registry import query
 
 _BUCKETS = 16
 
 
-def _tag(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-
-
 def _bucketed(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
-    """Materialize ``name`` as a bucketed+sorted catalog table (idempotent
-    per session+SF) and return it.
+    """Materialize ``name`` as a bucketed+sorted catalog table and return
+    it. The files are a ``derived_dir`` cache; the external catalog table
+    over them, named from the same key, is re-registered per session.
 
     ``repartition(_BUCKETS, key)`` uses the same Murmur3 hash as the
     bucket spec, so every write task holds exactly one bucket and emits
     exactly one (sorted) file per bucket — the layout the scan-side
     bucketing optimization requires to drop both the Exchange and the
     Sort under a sort-merge join."""
-    tbl = f"aks_{name}_by_{key}_{_tag(sf_dir)}"
-    if not spark.catalog.tableExists(tbl):
-        # a previous session's managed-table files may survive while the
-        # in-memory catalog entry did not; clear the stale location so the
-        # (deterministic) re-materialization can proceed
-        import shutil
+    layout = f"{name}_by_{key}"
+    tbl = f"aks_{derived_key(sf_dir, layout)}"
 
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:")
-        shutil.rmtree(os.path.join(wh, tbl.lower()), ignore_errors=True)
+    def build(path: str) -> None:
         (
             table(spark, sf_dir, name)
             .repartition(_BUCKETS, key)
@@ -65,7 +56,20 @@ def _bucketed(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFram
             .format("parquet")
             .bucketBy(_BUCKETS, key)
             .sortBy(key)
+            .option("path", path)
             .saveAsTable(tbl)
+        )
+
+    path = derived_dir(spark, sf_dir, layout, build)
+    if not spark.catalog.tableExists(tbl):
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}"
+            for f in spark.read.parquet(path).schema
+        )
+        spark.sql(
+            f"CREATE TABLE {tbl} ({cols}) USING parquet "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {_BUCKETS} BUCKETS "
+            f"LOCATION '{path}'"
         )
     return spark.table(tbl)
 
@@ -113,15 +117,11 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
-    """Write events partitioned by day (idempotent per session+SF) and
+    """Write events partitioned by day (a ``derived_dir`` cache) and
     return the path. Partition values become directory names, so the
     date-range scan below prunes at file-listing time."""
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    out = os.path.join(wh, f"aks_events_by_date_{_tag(sf_dir)}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
+
+    def build(out: str) -> None:
         (
             table(spark, sf_dir, "events")
             .withColumn("event_date", F.to_date("ts"))
@@ -129,7 +129,25 @@ def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("event_date")
             .parquet(out)
         )
-    return out
+
+    return derived_dir(spark, sf_dir, "events_by_date", build)
+
+
+def _compacted_events_path(spark: SparkSession, sf_dir: str) -> str:
+    """The day-partitioned events rewritten one file per day (a
+    ``derived_dir`` cache)."""
+    src = partitioned_events_path(spark, sf_dir)
+
+    def build(out: str) -> None:
+        (
+            spark.read.option("basePath", src).parquet(src)
+            .repartition("event_date")
+            .write.mode("overwrite")
+            .partitionBy("event_date")
+            .parquet(out)
+        )
+
+    return derived_dir(spark, sf_dir, "events_compacted", build)
 
 
 @query(
@@ -198,20 +216,7 @@ def layout_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a boolean asserting the partition really is one file — row loss,
     duplication, or failed compaction all break the hash against the
     plain events oracle."""
-    src = partitioned_events_path(spark, sf_dir)
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    out = os.path.join(wh, f"aks_events_compacted_{_tag(sf_dir)}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        (
-            spark.read.option("basePath", src).parquet(src)
-            .repartition("event_date")
-            .write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(out)
-        )
+    out = _compacted_events_path(spark, sf_dir)
     compacted = spark.read.option("basePath", out).parquet(out)
     # One-file check runs INSIDE the scan via input_file_name(): works
     # identically on local FS and object stores (no driver-side directory
@@ -266,9 +271,6 @@ def scan_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each write/read is an embarrassingly parallel format
     transcode; the aggregates are plain partial+final hash-aggs."""
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
     src = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -277,18 +279,21 @@ def scan_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and the one timestamp flavor all four formats round-trip
         F.col("o_orderdate").cast("timestamp").alias("o_orderdate"),
     )
-    outs = {"parquet": src}
-    for fmt in _RT_FORMATS[1:]:
-        out = os.path.join(wh, f"aks_orders_rt_{fmt}_{_tag(sf_dir)}")
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
+
+    def build(base: str) -> None:
+        for fmt in _RT_FORMATS[1:]:
             w = src.write.mode("overwrite").format(fmt)
             if fmt == "csv":
                 w = w.option("header", "true")
-            w.save(out)
+            w.save(os.path.join(base, fmt))
+
+    base = derived_dir(spark, sf_dir, "orders_roundtrip", build)
+    outs = {"parquet": src}
+    for fmt in _RT_FORMATS[1:]:
         r = spark.read.format(fmt).schema(_RT_SCHEMA)
         if fmt == "csv":
             r = r.option("header", "true")
-        outs[fmt] = r.load(out)
+        outs[fmt] = r.load(os.path.join(base, fmt))
     parts = []
     for fmt, df in outs.items():
         parts.append(
@@ -347,18 +352,12 @@ def maintenance_retention_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's date-filtered aggregate over raw events — deleting a
     retained partition, keeping an expired one, or touching row data all
     break the hash."""
-    import shutil as _shutil
+    import shutil
 
     src = partitioned_events_path(spark, sf_dir)
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    out = os.path.join(wh, f"aks_events_retained_{_tag(sf_dir)}")
-    marker = os.path.join(out, "_VACUUMED")
-    if not os.path.exists(marker):
-        if os.path.exists(out):
-            _shutil.rmtree(out)
-        _shutil.copytree(src, out)
+
+    def build(out: str) -> None:
+        shutil.copytree(src, out)
         part_df = spark.read.option("basePath", out).parquet(out)
         # metadata-only: distinct partition values come from directory
         # names, no data-file reads
@@ -371,9 +370,9 @@ def maintenance_retention_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for d in days:
             if d >= cutoff:
-                _shutil.rmtree(os.path.join(out, f"event_date={d}"))
-        with open(marker, "w") as f:
-            f.write("ok")
+                shutil.rmtree(os.path.join(out, f"event_date={d}"))
+
+    out = derived_dir(spark, sf_dir, "events_retained", build)
     retained = spark.read.option("basePath", out).parquet(out)
     return (
         retained.groupBy(
@@ -422,14 +421,8 @@ def layout_manifest_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one pass over the table, partial+final agg keyed by
     (partition, file); the manifest output is O(|files|), the whole
     point — planners read IT, not the data."""
-    src = partitioned_events_path(spark, sf_dir)
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    out = os.path.join(wh, f"aks_events_compacted_{_tag(sf_dir)}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        # reuse the compaction operator's one-file-per-day table
-        layout_compact_small_files(spark, sf_dir).count()
+    # the compaction operator's one-file-per-day table
+    out = _compacted_events_path(spark, sf_dir)
     compacted = spark.read.option("basePath", out).parquet(out)
     per_file = (
         compacted.select(
@@ -498,17 +491,16 @@ def layout_sorted_write_clustering(spark: SparkSession, sf_dir: str) -> DataFram
     how a nightly re-cluster job lays out a 100 TB table); the audit is
     one pass over the written table collapsing to |files| zone rows."""
     e = table(spark, sf_dir, "events")
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    out = os.path.join(wh, f"aks_events_sorted_{_tag(sf_dir)}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+
+    def build(out: str) -> None:
         (
             e.repartitionByRange(_SW_FILES, "user_id")
             .sortWithinPartitions("user_id", "ts", "event_id")
             .write.mode("overwrite")
             .parquet(out)
         )
+
+    out = derived_dir(spark, sf_dir, "events_sorted", build)
     written = spark.read.parquet(out)
     zones = (
         written.select(F.input_file_name().alias("_file"), "user_id")
@@ -594,12 +586,6 @@ def layout_partition_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFra
     Scale shape: both writes are embarrassingly parallel partitioned
     sinks; the union read is two pruned scans with no shuffle until the
     final rollup's map-side partials."""
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    v1_dir = os.path.join(wh, f"aks_pse_v1_{_tag(sf_dir)}")
-    v2_dir = os.path.join(wh, f"aks_pse_v2_{_tag(sf_dir)}")
-
     e = table(spark, sf_dir, "events").select(
         "event_id",
         "ts",
@@ -609,19 +595,20 @@ def layout_partition_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFra
         F.hour("ts").alias("event_hour"),
         F.dayofmonth("ts").alias("_dom"),
     )
-    if not os.path.exists(os.path.join(v1_dir, "_SUCCESS")):
+
+    def build(base: str) -> None:
         e.filter(F.col("_dom") < _PSE_CUT_DAY).drop("_dom", "event_hour").write.mode(
             "overwrite"
-        ).partitionBy("event_date").parquet(v1_dir)
-    if not os.path.exists(os.path.join(v2_dir, "_SUCCESS")):
+        ).partitionBy("event_date").parquet(os.path.join(base, "v1"))
         e.filter(F.col("_dom") >= _PSE_CUT_DAY).drop("_dom").write.mode(
             "overwrite"
-        ).partitionBy("event_date", "event_hour").parquet(v2_dir)
+        ).partitionBy("event_date", "event_hour").parquet(os.path.join(base, "v2"))
 
-    v1 = spark.read.parquet(v1_dir).select(
+    base = derived_dir(spark, sf_dir, "partition_spec_evolution", build)
+    v1 = spark.read.parquet(os.path.join(base, "v1")).select(
         F.lit("v1_daily").alias("spec"), "event_type", "value"
     )
-    v2 = spark.read.parquet(v2_dir).select(
+    v2 = spark.read.parquet(os.path.join(base, "v2")).select(
         F.lit("v2_hourly").alias("spec"), "event_type", "value"
     )
     return (

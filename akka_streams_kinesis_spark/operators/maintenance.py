@@ -27,22 +27,13 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..io import table
+from ..io import derived_dir, table
 from ..registry import query
+from ..shared import scratch_dir
 
 _N_BUCKETS = 16
 # deterministic CDC split: every 5th event is the "incoming change batch"
 _CDC_PRED = "event_id % 5 = 4"
-
-
-def _wh(spark: SparkSession) -> str:
-    return spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-
-
-def _tag(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
 
 
 def _latest_per_user(df: DataFrame) -> DataFrame:
@@ -66,19 +57,20 @@ def merge_upsert_path(spark: SparkSession, sf_dir: str) -> str:
     """Build the snapshot (non-CDC events → latest per user, partitioned
     by key bucket), then MERGE the CDC batch into it: union changed-key
     state with the snapshot, keep latest per key, and dynamic-partition-
-    overwrite ONLY the buckets the CDC batch touches. Idempotent per
-    session+SF; returns the merged table path.
+    overwrite ONLY the buckets the CDC batch touches. A ``derived_dir``
+    cache; returns the merged table path.
 
     The scale contract: the merge plan joins the (small) set of touched
     buckets against the snapshot READ, and the write rewrites just those
     partitions — at 100 TB with e.g. 4096 buckets a trickle of changes
     rewrites a handful of partitions, never the table. Untouched buckets
     are bit-identical files the overwrite never lists."""
-    wh = _wh(spark)
-    out = os.path.join(wh, f"aks_user_state_merged_{_tag(sf_dir)}")
-    marker = os.path.join(out, "_MERGED")
-    if os.path.exists(marker):
-        return out
+    return derived_dir(
+        spark, sf_dir, "user_state_merged", lambda out: _merge_upsert(spark, sf_dir, out)
+    )
+
+
+def _merge_upsert(spark: SparkSession, sf_dir: str, out: str) -> None:
     e = table(spark, sf_dir, "events")
     snap = _latest_per_user(e.filter(~F.expr(_CDC_PRED)))
     snap.write.mode("overwrite").partitionBy("bucket").parquet(out)
@@ -119,9 +111,6 @@ def merge_upsert_path(spark: SparkSession, sf_dir: str) -> str:
             spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         else:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    with open(marker, "w") as f:
-        f.write("ok")
-    return out
 
 
 @query(
@@ -598,15 +587,9 @@ def maintenance_manifest_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(|files|), dimension-sized — never touches row data), so the same
     plan reconciles a million-file table: the listing comes from the
     filesystem/catalog, the row counts from the manifest, not a scan."""
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    # DEDICATED table: the fixture plants junk files, so it must never
-    # share a directory with tables other queries glob-scan (planting
-    # orphans into the shared compacted table broke two layout queries'
-    # footer inference — measured in the round-6 full run)
-    out = os.path.join(wh, f"aks_manifest_audit_{_tag(sf_dir)}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    orphans = ["part-orphan-000.parquet.tmp", "part-orphan-001.parquet"]
+
+    def build(out: str) -> None:
         (
             table(spark, sf_dir, "events")
             .withColumn("event_date", F.to_date("ts"))
@@ -615,17 +598,17 @@ def maintenance_manifest_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("event_date")
             .parquet(out)
         )
-
-    orphan_dir = os.path.join(out, "event_date=1999-01-01")
-    orphans = [
-        os.path.join(orphan_dir, "part-orphan-000.parquet.tmp"),
-        os.path.join(orphan_dir, "part-orphan-001.parquet"),
-    ]
-    if not os.path.exists(orphan_dir):
-        os.makedirs(orphan_dir, exist_ok=True)
-        for p in orphans:
-            with open(p, "wb") as f:
+        orphan_dir = os.path.join(out, "event_date=1999-01-01")
+        os.makedirs(orphan_dir)
+        for name in orphans:
+            with open(os.path.join(orphan_dir, name), "wb") as f:
                 f.write(b"not a committed file")
+
+    # DEDICATED table: the fixture plants junk files, so it must never
+    # share a directory with tables other queries glob-scan (planting
+    # orphans into the shared compacted table broke two layout queries'
+    # footer inference — measured in the round-6 full run)
+    out = derived_dir(spark, sf_dir, "manifest_audit", build)
 
     # manifest: the file set of the committed table (derived once from the
     # physical layout via input_file_name — in a real lake this is the
@@ -812,13 +795,8 @@ def maintenance_schema_evolution_audit(spark: SparkSession, sf_dir: str) -> Data
     work, not data); the audit itself is one conditional hash-agg. Parquet
     column pruning still applies per file — v1 files simply have no pages
     for the new column."""
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     e = table(spark, sf_dir, "events")
-    base = os.path.join(
-        _tempfile.gettempdir(), f"schema_evo_{_uuid.uuid4().hex[:10]}"
-    )
+    base = scratch_dir("schema_evo")
     # v1: the pre-evolution schema (no value column)
     e.filter(F.col("event_id") % 2 == 0).select(
         "event_id", "event_type"
@@ -884,7 +862,7 @@ def maintenance_incremental_view_refresh(spark: SparkSession, sf_dir: str) -> Da
     via the shared FLOOR idiom) — float partial sums would make the
     merged view diverge from recompute by summation order.
 
-    Snapshot write is per-(sf,query) tagged and overwritten each run —
+    Both snapshots are written to a fresh ``scratch_dir`` each run —
     rerunnable, no cross-query state."""
     e = table(spark, sf_dir, "events")
     rollup_cols = [
@@ -900,7 +878,8 @@ def maintenance_incremental_view_refresh(spark: SparkSession, sf_dir: str) -> Da
             ).cast("long").alias("cents"),
         )
 
-    path = os.path.join(_wh(spark), f"ivr_view_{_tag(sf_dir)}")
+    base = scratch_dir("ivr_view")
+    path, refreshed_path = os.path.join(base, "view"), os.path.join(base, "refreshed")
     # 1) materialize the standing view from the base corpus
     _agg(e.filter(_IVR_BASE_PRED)).write.mode("overwrite").parquet(path)
     # 2) incremental refresh: aggregate ONLY the delta, merge partials
@@ -915,9 +894,9 @@ def maintenance_incremental_view_refresh(spark: SparkSession, sf_dir: str) -> Da
             F.sum("cents").cast("long").alias("cents"),
         )
     )
-    refreshed.write.mode("overwrite").parquet(path + "_v2")
+    refreshed.write.mode("overwrite").parquet(refreshed_path)
     # 3) serve from the refreshed physical view
-    return spark.read.parquet(path + "_v2").select(
+    return spark.read.parquet(refreshed_path).select(
         "day", "event_type", "n", "cents"
     )
 
@@ -967,35 +946,27 @@ def maintenance_delete_vectors_mor(spark: SparkSession, sf_dir: str) -> DataFram
 
     Reference parity: none (connector has no table maintenance); this is
     the lakehouse-maintenance surface of SURVEY §2.D file sinks."""
-    wh = _wh(spark)
-    base_dir = os.path.join(wh, f"aks_dv_base_{_tag(sf_dir)}")
-    dv_dir = os.path.join(wh, f"aks_dv_deletes_{_tag(sf_dir)}")
-    compact_dir = os.path.join(wh, f"aks_dv_compacted_{_tag(sf_dir)}")
+    schema = "event_id long, ts timestamp, event_type string, value double"
 
-    e = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    if not os.path.exists(os.path.join(base_dir, "_SUCCESS")):
-        e.write.mode("overwrite").parquet(base_dir)
-    base = spark.read.schema(
-        "event_id long, ts timestamp, event_type string, value double"
-    ).parquet(base_dir)
+    def _mor(d: str) -> DataFrame:
+        # merge-on-read: base minus sidecar at scan time
+        base = spark.read.schema(schema).parquet(os.path.join(d, "base"))
+        deletes = spark.read.schema("event_id long").parquet(os.path.join(d, "deletes"))
+        return base.join(F.broadcast(deletes), "event_id", "left_anti")
 
-    if not os.path.exists(os.path.join(dv_dir, "_SUCCESS")):
-        base.filter(F.col("event_type") == "error").select("event_id").write.mode(
-            "overwrite"
-        ).parquet(dv_dir)
-    deletes = spark.read.schema("event_id long").parquet(dv_dir)
+    def build(d: str) -> None:
+        table(spark, sf_dir, "events").select(
+            "event_id", "ts", "event_type", "value"
+        ).write.mode("overwrite").parquet(os.path.join(d, "base"))
+        spark.read.schema(schema).parquet(os.path.join(d, "base")).filter(
+            F.col("event_type") == "error"
+        ).select("event_id").write.mode("overwrite").parquet(os.path.join(d, "deletes"))
+        # compaction: fold the deletes into a rewritten base, sidecar retired
+        _mor(d).write.mode("overwrite").parquet(os.path.join(d, "compacted"))
 
-    # merge-on-read: base minus sidecar at scan time
-    mor = base.join(F.broadcast(deletes), "event_id", "left_anti")
-
-    # compaction: fold the deletes into a rewritten base, sidecar retired
-    if not os.path.exists(os.path.join(compact_dir, "_SUCCESS")):
-        mor.write.mode("overwrite").parquet(compact_dir)
-    compacted = spark.read.schema(
-        "event_id long, ts timestamp, event_type string, value double"
-    ).parquet(compact_dir)
+    d = derived_dir(spark, sf_dir, "delete_vectors", build)
+    mor = _mor(d)
+    compacted = spark.read.schema(schema).parquet(os.path.join(d, "compacted"))
 
     def _agg(df: DataFrame, label: str) -> DataFrame:
         return df.groupBy("event_type").agg(

@@ -1,7 +1,9 @@
-"""Cross-query shared cached frames + transient-persist registry.
+"""Cross-query shared cached frames, transient persists, and per-process
+scratch state.
 
-Two cache tiers with ONE documented lifecycle (round-8 ADVICE: persisted
-frames were accumulating with no owner, relying silently on LRU eviction):
+Two cache tiers plus a scratch tier with ONE documented lifecycle
+(round-8 ADVICE: persisted frames were accumulating with no owner,
+relying silently on LRU eviction):
 
 ``shared_frame(spark, name, sf_dir, build)``
     Build-once, reuse-everywhere frames consumed by SEVERAL registry
@@ -20,10 +22,19 @@ frames were accumulating with no owner, relying silently on LRU eviction):
     registered here so a harness can bound memory with one call instead
     of each operator guessing when its last consumer ran.
 
+``scratch_dir(name)`` / ``transient_view(spark, name)``
+    Per-call on-disk state: a fresh directory under one per-process
+    scratch root (tables, checkpoints and streams a query writes on every
+    call) and the temp views memory-sink drains register. Directories
+    that are a pure function of the input data are cached by
+    ``io.derived_dir`` instead, outside this lifecycle.
+
 ``release_shared()``
-    Unpersists and forgets everything in both tiers. ``bench.py`` calls
-    it after the headline loop; long-lived sessions that never call it
-    fall back to Spark's LRU block eviction (persist() is
+    Unpersists and forgets both frame tiers, drops the registered views
+    and removes the scratch root (which is also removed at interpreter
+    exit). It never touches ``io.derived_dir`` caches. ``bench.py``
+    calls it after the headline loop; long-lived sessions that never
+    call it fall back to Spark's LRU block eviction (persist() is
     MEMORY_AND_DISK — eviction is safe, never wrong), which is the
     documented, deliberate fallback rather than an accident.
 
@@ -38,6 +49,9 @@ weakref, never a strong session reference.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 import threading
 import time
 import weakref
@@ -48,6 +62,9 @@ from pyspark.sql import DataFrame, SparkSession
 # key: (id(session), name, sf_dir) → (session_weakref, DataFrame)
 _SHARED: dict[tuple, tuple[weakref.ref, DataFrame]] = {}
 _TRANSIENT: list[DataFrame] = []
+# (session_weakref, temp view name) registered by transient_view
+_VIEWS: list[tuple[weakref.ref, str]] = []
+_SCRATCH_ROOT: str | None = None
 _LOCK = threading.RLock()
 # key → Event: a build in flight for that key. The LOCK only guards map
 # access; the (job-running) build itself happens outside it, so a slow
@@ -168,13 +185,45 @@ def transient_persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def transient_view(spark: SparkSession, name: str) -> None:
+    """Register a temp view for release_shared() to drop."""
+    with _LOCK:
+        _VIEWS.append((weakref.ref(spark), name))
+
+
+def scratch_dir(name: str) -> str:
+    """A fresh, empty directory under this process's scratch root."""
+    global _SCRATCH_ROOT
+    with _LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="aks_scratch_")
+        return tempfile.mkdtemp(prefix=f"{name}_", dir=_SCRATCH_ROOT)
+
+
+@atexit.register
+def _remove_scratch_root() -> None:
+    global _SCRATCH_ROOT
+    with _LOCK:
+        root, _SCRATCH_ROOT = _SCRATCH_ROOT, None
+    if root is not None:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def release_shared() -> None:
-    """Unpersist every registered frame (both tiers) and forget them."""
+    """Unpersist every registered frame (both tiers) and forget them, drop
+    the registered views and remove the scratch root."""
+    _remove_scratch_root()
     with _LOCK:
         entries = list(_SHARED.values())
         _SHARED.clear()
         transient = list(_TRANSIENT)
         _TRANSIENT.clear()
+        views = list(_VIEWS)
+        _VIEWS.clear()
+    for ref, name in views:
+        spark = ref()
+        if not _session_stopped(spark):
+            spark.catalog.dropTempView(name)
     for _, df in entries:
         try:
             df.unpersist()

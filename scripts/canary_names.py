@@ -10,7 +10,7 @@ sf1 OOM or a super-linear plan (precedent: round 4's text_fingerprint
 per-doc gram-array OOM, caught only at sf1).
 
 Consumed by:
-- correctness: ``python scripts/driver_sim.py /root/repo/.scale/sf1
+- correctness: ``python scripts/driver_sim.py .scale/sf1
   --engine-session --names "$(python scripts/canary_names.py --correctness)"
   --rows-only "$(python scripts/canary_names.py --rows-only)"
   --json CORRECTNESS_SF1_canary.json``

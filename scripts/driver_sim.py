@@ -11,13 +11,14 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import time
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as se  # noqa: E402
 
 def _flag_value(flag: str) -> str:

@@ -5,9 +5,11 @@ any of the listed operators: ``python scripts/explain_flagships.py``.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from akka_streams_kinesis_spark import get_session, registry  # noqa: E402
 
@@ -334,7 +336,7 @@ def main() -> None:
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
         out.append("```\n" + plan.strip() + "\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

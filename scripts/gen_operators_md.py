@@ -9,10 +9,12 @@ tests/test_operators_md.py pins that the committed file is current.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 from akka_streams_kinesis_spark import registry  # noqa: E402
 from canary_names import SF1_CANARY  # noqa: E402
@@ -69,7 +71,7 @@ def render() -> str:
     rows = []
     for name, fn in registry.QUERIES.items():
         mod = sys.modules[fn.__module__]
-        path = mod.__file__.replace("/root/repo/", "")
+        path = os.path.relpath(mod.__file__, ROOT)
         line = fn.__code__.co_firstlineno
         doc = (fn.__doc__ or "").strip().split("\n")[0].rstrip()
         sect = "stream (rows/s)" if name in bench.STREAM_SECTION else "headline"

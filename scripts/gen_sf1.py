@@ -1,5 +1,5 @@
 """Generate an sf1 dataset (10× sf0.1) for the scale canary, under
-/root/repo/.scale/sf1 (gitignored — regenerate with this script).
+.scale/sf1 in the repo root (gitignored — regenerate with this script).
 
 Method: 10 key-shifted copies of every sf0.1 fact table, with foreign
 keys shifted by the SAME stride so join integrity is exactly preserved
@@ -23,7 +23,9 @@ import sys
 import duckdb
 
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-DST = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scale/sf1"
+DST = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale", "sf1"
+)
 COPIES = int(sys.argv[3]) if len(sys.argv) > 3 else 10  # sf3 spot: pass 30
 STRIDE = 10_000_000  # far above any sf0.1 key; 10 copies stay well in int64
 

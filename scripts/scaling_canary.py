@@ -23,7 +23,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from akka_streams_kinesis_spark import get_session, registry  # noqa: E402
 from canary_names import SF1_CANARY  # noqa: E402
@@ -31,8 +32,8 @@ from canary_names import SF1_CANARY  # noqa: E402
 RATIO_FLAG = 15.0
 FLOOR_SEC = 0.5
 SF01_DIR = "/root/testdata/sf0.1"
-SF1_DIR = "/root/repo/.scale/sf1"
-OUT = "/root/repo/BENCH_SCALING.json"
+SF1_DIR = os.path.join(ROOT, ".scale", "sf1")
+OUT = os.path.join(ROOT, "BENCH_SCALING.json")
 
 registry.load_all()
 

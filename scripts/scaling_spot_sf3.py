@@ -24,14 +24,15 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 from akka_streams_kinesis_spark import registry  # noqa: E402
 from scaling_canary import FLOOR_SEC, SF1_DIR, time_all  # noqa: E402
 
-SF3_DIR = "/root/repo/.scale/sf3"
-OUT = "/root/repo/BENCH_SCALING.json"
+SF3_DIR = os.path.join(ROOT, ".scale", "sf3")
+OUT = os.path.join(ROOT, "BENCH_SCALING.json")
 EXPONENT_FLAG = 1.3   # p in t ∝ n^p between the 10× and 30× points
 TOP_N = 5
 
@@ -57,7 +58,7 @@ def main() -> None:
     if not os.path.exists(os.path.join(SF3_DIR, "lineitem.parquet")):
         print(f"# generating {SF3_DIR} (30 shifted copies of sf0.1)…", file=sys.stderr)
         subprocess.run(
-            [sys.executable, "/root/repo/scripts/gen_sf1.py",
+            [sys.executable, os.path.join(ROOT, "scripts", "gen_sf1.py"),
              "/root/testdata/sf0.1", SF3_DIR, "30"],
             check=True,
         )

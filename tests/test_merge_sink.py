@@ -5,10 +5,6 @@ contract the latest-wins rule guarantees."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from akka_streams_kinesis_spark import registry
 from akka_streams_kinesis_spark.operators.streaming_queries import (
     _EVENT_SCHEMA,
@@ -21,11 +17,10 @@ from akka_streams_kinesis_spark.streaming.merge_sink import start_user_state_tab
 registry.load_all()
 
 
-def _drain(spark, sf_dir, path):
+def _drain(spark, sf_dir, path, ckpt):
     stream = _materialize_events_stream(spark, sf_dir, copies=1, flavor="once")
     records = stream.read_stream(spark, TrimHorizon(), max_files_per_trigger=64)
     events = decode_json_payload(records, _EVENT_SCHEMA)
-    ckpt = os.path.join(tempfile.gettempdir(), f"msink_ckpt_{uuid.uuid4().hex[:10]}")
     q = start_user_state_table(events, path, ckpt)
     q.awaitTermination()
 
@@ -37,16 +32,17 @@ def _snapshot(spark, path):
     }
 
 
-def test_merge_sink_replay_is_idempotent(spark, sf_dir):
-    path = os.path.join(tempfile.gettempdir(), f"msink_tbl_{uuid.uuid4().hex[:10]}")
-    _drain(spark, sf_dir, path)
+def test_merge_sink_replay_is_idempotent(spark, sf_dir, tmp_path):
+    path = str(tmp_path / "table")
+    _drain(spark, sf_dir, path, str(tmp_path / "ckpt1"))
     first = _snapshot(spark, path)
     assert first, "empty state table after first drain"
-    _drain(spark, sf_dir, path)  # fresh checkpoint: full replay over existing
+    # fresh checkpoint: full replay over existing
+    _drain(spark, sf_dir, path, str(tmp_path / "ckpt2"))
     assert _snapshot(spark, path) == first
 
 
-def test_merge_sink_multi_batch_drain_keeps_all_users(spark, sf_dir):
+def test_merge_sink_multi_batch_drain_keeps_all_users(spark, sf_dir, tmp_path):
     """Regression (round-7 sf1 canary catch): with a tiny trigger the
     drain spans MANY micro-batches, and each batch's merge must carry the
     existing table forward. The round-6 code gated the merge branch on a
@@ -59,9 +55,8 @@ def test_merge_sink_multi_batch_drain_keeps_all_users(spark, sf_dir):
     stream = _materialize_events_stream(spark, sf_dir, copies=1, flavor="once")
     records = stream.read_stream(spark, TrimHorizon(), max_files_per_trigger=2)
     events = decode_json_payload(records, _EVENT_SCHEMA)
-    path = os.path.join(tempfile.gettempdir(), f"msink_mb_{uuid.uuid4().hex[:10]}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"msink_mbck_{uuid.uuid4().hex[:10]}")
-    q = start_user_state_table(events, path, ckpt)
+    path = str(tmp_path / "table")
+    q = start_user_state_table(events, path, str(tmp_path / "ckpt"))
     q.awaitTermination()
     got = spark.read.option("basePath", path).parquet(path).count()
     want = load_table(spark, sf_dir, "events").select("user_id").distinct().count()

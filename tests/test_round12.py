@@ -585,14 +585,14 @@ class TestServeDuringDrain:
                 if crc.endswith(".crc"):
                     os.remove(os.path.join(d, crc))
 
-        real = sq._stream_cache_dir
+        real = sq.derived_dir
 
-        def _redirect(sf, flavor):
-            if flavor == "annidx_timetravel_v2":
+        def _redirect(spark_, sf, name, build):
+            if name == "annidx_timetravel":
                 return base
-            return real(sf, flavor)
+            return real(spark_, sf, name, build)
 
-        monkeypatch.setattr(sq, "_stream_cache_dir", _redirect)
+        monkeypatch.setattr(sq, "derived_dir", _redirect)
         with pytest.raises(RuntimeError, match="diverges"):
             sq.similarity_standing_index_time_travel(spark, sf_dir).collect()
 
