@@ -9,9 +9,10 @@ still hash-match a plain SQL oracle on the original table, because the
 pipe is lossless.
 
 Each produced stream is a ``derived_dir`` cache keyed on (flavor,
-sf_dir, package sources); tables, checkpoints and indexes a query writes
-on every call live in a ``scratch_dir``, and each drain's checkpoint is
-removed as soon as it terminates. Both the produce step
+sf_dir, package sources); tables and indexes a query writes on every
+call live in a ``scratch_dir``. Every drain runs through
+``streaming.drain.drain``, which removes its checkpoint as soon as it
+terminates. Both the produce step
 (SimStream.put_records_distributed — executors write shard files, driver
 reserves sequence ranges) and read+aggregate are distributed paths.
 """
@@ -21,17 +22,18 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
 from datetime import datetime, timezone
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.streaming import StreamingQuery
 
 from ..functions import div_round4
 from ..io import derived_dir, table
 from ..registry import query
-from ..shared import scratch_dir, transient_persist, transient_view
+from ..shared import scratch_dir, transient_persist
 from ..sources.kinesis_sim import AtTimestamp, SimStream, TrimHorizon
+from ..streaming.drain import drain
 from ..streaming.windows import (
     decode_json_payload,
     hourly_rollup,
@@ -109,99 +111,10 @@ def _materialize_phased_stream(
     return SimStream(derived_dir(spark, sf_dir, f"stream_{flavor}", build))
 
 
-def _state_partitions_override(default: int | None) -> int | None:
-    """Resolve the per-drain state-store count: the
-    ``SPARK_GRAFT_STATE_PARTITIONS`` env var beats the caller's default —
-    an integer forces that count, ``session``/``none`` inherits the
-    session's ``spark.sql.shuffle.partitions`` (returns None → no pin)."""
-    env_cap = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    if env_cap is None:
-        return default
-    if env_cap.lower() in ("session", "none"):
-        return None
-    n = int(env_cap)  # non-numeric garbage raises here, at config time
-    if n < 1:
-        # fail loudly HERE, not deep inside the first drain with an
-        # opaque Spark error (spark.sql.shuffle.partitions must be ≥ 1)
-        raise ValueError(
-            f"SPARK_GRAFT_STATE_PARTITIONS must be >= 1 or "
-            f"'session'/'none', got {env_cap!r}"
-        )
-    return n
-
-
-def _run_available_now(
-    sdf: DataFrame,
-    spark: SparkSession,
-    mode: str,
-    state_partitions: int | None = 16,
-    progress_out: list | None = None,
-) -> DataFrame:
-    """Drain the stream with an availableNow trigger into a memory sink and
-    return the final result as a batch DataFrame.
-
-    ``state_partitions`` caps ``spark.sql.shuffle.partitions`` for the
-    drain (restored afterwards): a stateful operator materializes one
-    state store per shuffle partition per micro-batch, so a
-    200-partition default session pays 200 store commits × batches ×
-    stateful stages for a query whose state fits in a handful — pure
-    fixed overhead, no result change (state partitioning is internal;
-    the drain is complete either way; the shuffle-256 canary pins
-    partition-count independence for the batch plans, and the drained
-    RESULT here is independent of the store count by the same argument).
-    The default 16 is sized for these drains' state (≤ a few hundred
-    thousand keys); production sizing would RAISE it with state volume —
-    the knob is the same one, explicitly surfaced per drain.
-
-    ``SPARK_GRAFT_STATE_PARTITIONS`` overrides the cap for every drain
-    (round-9 ADVICE: the 16-cap silently narrowed the shuffle-256
-    canary's stateful coverage to batch plans): an integer forces that
-    state-store count, ``session`` (or ``none``) inherits the session's
-    ``spark.sql.shuffle.partitions`` — the shuffle-256 canary exports
-    ``SPARK_GRAFT_STATE_PARTITIONS=session`` so its 256-partition run
-    exercises stateful operators at 256 state stores too."""
-    state_partitions = _state_partitions_override(state_partitions)
-    name = f"q_{uuid.uuid4().hex[:10]}"
-    # nothing resumes a terminated availableNow drain: its checkpoint is
-    # removed on termination, its memory-sink view by release_shared()
-    ckpt = scratch_dir("ckpt")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        transient_view(spark, name)
-        q.awaitTermination()
-        if progress_out is not None:
-            # per-micro-batch StreamingQueryProgress dicts (watermark,
-            # stateOperators.numRowsTotal, observedMetrics, …) — the
-            # observable a test needs to assert state-size bounds
-            # (round-9 VERDICT ask #3)
-            progress_out.extend(json.loads(p.json) for p in q.recentProgress)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
-
-
-def _drain_foreach_batch(sdf: DataFrame, fn, ckpt: str) -> None:
-    """Run ``fn(batch, batch_id)`` over every micro-batch of an
-    availableNow drain checkpointed at ``ckpt``."""
-    (
-        sdf.writeStream.foreachBatch(fn)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-        .awaitTermination()
-    )
+def _run_available_now(sdf: DataFrame, spark: SparkSession, mode: str) -> DataFrame:
+    """Drain the stream into a memory sink and return the final result as
+    a batch DataFrame."""
+    return spark.table(drain(sdf, "memory", mode=mode).name)
 
 
 @query(
@@ -511,7 +424,7 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 2 HOURS")),
         "leftOuter",
     )
-    drained = _run_available_now(joined, spark, mode="append", state_partitions=16)
+    drained = _run_available_now(joined, spark, mode="append")
     cutoff_us = hi_us - span_us // 4
     return (
         drained.filter(F.unix_micros("v_ts") <= cutoff_us)
@@ -599,15 +512,17 @@ def stream_rollup_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     The read-back table must equal the batch aggregate of the source —
     the convergence + idempotence contract of the incremental sink
     (tests/test_streaming_analytics.py drives the multi-drain cases)."""
-    from ..streaming.rollup_sink import start_rollup_table
+    from ..streaming.rollup_sink import hourly_rollup_updates, rollup_writer
 
     stream = _materialize_events_stream(spark, sf_dir, copies=1, flavor="once")
     records = stream.read_stream(spark, TrimHorizon(), max_files_per_trigger=512)
     events = decode_json_payload(records, _EVENT_SCHEMA)
-    base = scratch_dir("rollup_tbl")
-    path, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
-    q = start_rollup_table(events, path, ckpt, watermark="40 days")
-    q.awaitTermination()
+    path = os.path.join(scratch_dir("rollup_tbl"), "table")
+    drain(
+        hourly_rollup_updates(events, watermark="40 days"),
+        rollup_writer(spark, path),
+        mode="update",
+    )
     return spark.read.parquet(path).select("hour_part", "event_type", "n", "total_value")
 
 
@@ -704,7 +619,7 @@ def stream_incremental_dedup_store(spark: SparkSession, sf_dir: str) -> DataFram
     hash-match the original table exactly."""
     stream = _materialize_events_stream(spark, sf_dir, copies=2, flavor="twice")
     base = scratch_dir("dedup_store")
-    store, out, ckpt = (os.path.join(base, d) for d in ("store", "out", "ckpt"))
+    store, out = (os.path.join(base, d) for d in ("store", "out"))
 
     records = stream.read_stream(spark, TrimHorizon(), max_files_per_trigger=512)
     events = decode_json_payload(records, _EVENT_SCHEMA).withColumn(
@@ -721,7 +636,7 @@ def stream_incremental_dedup_store(spark: SparkSession, sf_dir: str) -> DataFram
         b.select("digest").write.mode("append").parquet(store)
         b.unpersist()
 
-    _drain_foreach_batch(events, _ingest, ckpt)
+    drain(events, _ingest)
     return (
         spark.read.schema("event_type string, value double")
         .parquet(out)
@@ -759,15 +674,13 @@ def stream_merge_upsert_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     table equals the batch answer regardless of micro-batch chopping —
     which is exactly what the oracle (latest row per user over the raw
     log) hash-checks."""
-    from ..streaming.merge_sink import start_user_state_table
+    from ..streaming.merge_sink import user_state_merger
 
     stream = _materialize_events_stream(spark, sf_dir, copies=1, flavor="once")
-    base = scratch_dir("ustate")
-    path, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
+    path = os.path.join(scratch_dir("ustate"), "table")
     records = stream.read_stream(spark, TrimHorizon(), max_files_per_trigger=64)
     events = decode_json_payload(records, _EVENT_SCHEMA)
-    q = start_user_state_table(events, path, ckpt)
-    q.awaitTermination()
+    drain(events, user_state_merger(spark, path))
     return (
         spark.read.option("basePath", path)
         .parquet(path)
@@ -1003,8 +916,7 @@ def stream_egress_pyds_relay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pyds.register(spark)
     src = _materialize_events_stream(spark, sf_dir, copies=1, flavor="once")
-    base = scratch_dir("sink_relay")
-    dst = os.path.join(base, "stream")
+    dst = os.path.join(scratch_dir("sink_relay"), "stream")
     SimStream.create(dst, n_shards=3)
     sdf = (
         spark.readStream.format(pyds.FORMAT_NAME)
@@ -1012,15 +924,7 @@ def stream_egress_pyds_relay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
         .select("partition_key", "data")
     )
-    q = (
-        sdf.writeStream.format(pyds.FORMAT_NAME)
-        .option("path", dst)
-        .option("arrival_ts", "2024-06-01T00:00:00")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(sdf, pyds.FORMAT_NAME, path=dst, arrival_ts="2024-06-01T00:00:00")
     back = spark.read.format(pyds.FORMAT_NAME).option("path", dst).load()
     events = decode_json_payload(back, _EVENT_SCHEMA)
     return events.groupBy("event_type").agg(
@@ -1234,14 +1138,12 @@ def stream_observed_ingest_metrics(spark: SparkSession, sf_dir: str) -> DataFram
         F.min("event_id").alias("min_event_id"),
         F.max("event_id").alias("max_event_id"),
     )
-    progress: list = []
-    landed = _run_available_now(
-        observed, spark, mode="append", progress_out=progress
-    )
+    q = drain(observed, "memory")
+    landed = spark.table(q.name)
     n_rows = total_cents = 0
     min_id = max_id = None
-    for p in progress:
-        m = (p.get("observedMetrics") or {}).get("ingest")
+    for p in q.recentProgress:
+        m = (json.loads(p.json).get("observedMetrics") or {}).get("ingest")
         if not m:
             continue
         n_rows += m["n_rows"]
@@ -1307,7 +1209,6 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir("eos")
     out = os.path.join(base, "table")
     log = os.path.join(base, "commits")
-    ckpt = os.path.join(base, "ckpt")
     os.makedirs(out, exist_ok=True)
     os.makedirs(log, exist_ok=True)
 
@@ -1335,7 +1236,7 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(marker, "w") as f:
             f.write("committed")
 
-    _drain_foreach_batch(events, _commit, ckpt)
+    drain(events, _commit)
     # simulate the crash-retry window: re-deliver an already-committed
     # batch (re-read from the landed table, exactly what a restarted query
     # would hand the sink again) through the same sink function; the
@@ -1633,7 +1534,6 @@ def stream_two_sinks_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw_out = os.path.join(base, "raw")
     roll_out = os.path.join(base, "rollup")
     log = os.path.join(base, "commits")
-    ckpt = os.path.join(base, "ckpt")
     for p in (raw_out, roll_out, log):
         os.makedirs(p, exist_ok=True)
 
@@ -1669,7 +1569,7 @@ def stream_two_sinks_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(marker, "w") as f:
             f.write("committed")
 
-    _drain_foreach_batch(events, _commit, ckpt)
+    drain(events, _commit)
 
     committed = sorted(
         int(m.split("_", 1)[1]) for m in os.listdir(log) if m.startswith("batch_")
@@ -1845,14 +1745,7 @@ def source_checkpoint_restart_rollup(spark: SparkSession, sf_dir: str) -> DataFr
         events = decode_json_payload(records, _EVENT_SCHEMA).select(
             "event_id", "ts", "event_type", "value"
         )
-        q = (
-            events.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(events, "parquet", checkpoint=ckpt, path=out)
 
     _drain()  # query lifetime #1: first half
     stream.put_records_distributed(_encode_events(ev.filter(F.col("event_id") % 2 == 1)))
@@ -1870,11 +1763,11 @@ def source_checkpoint_restart_rollup(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 def _session_timeout_drain(
-    spark: SparkSession, sf_dir: str, progress_out: list | None = None
-) -> tuple[DataFrame, int, int]:
+    spark: SparkSession, sf_dir: str
+) -> tuple[StreamingQuery, int, int]:
     """The stream_session_timeout_eviction drain, factored out so the
-    state-bound test can run the IDENTICAL pipeline with per-batch
-    progress capture (round-9 VERDICT ask #3). Returns (drained sessions,
+    state-bound test can read the IDENTICAL pipeline's per-batch progress
+    (round-9 VERDICT ask #3). Returns (terminated memory-sink query,
     lo_us, hi_us) with bounds from _ms_bounds_us."""
     from ..streaming.stateful import sessions_by_timeout
 
@@ -1887,10 +1780,7 @@ def _session_timeout_drain(
     lo_us, hi_us = _ms_bounds_us(spark, sf_dir)
     span_us = hi_us - lo_us
     sessions = sessions_by_timeout(events, delay=f"{span_us // 8} microseconds")
-    drained = _run_available_now(
-        sessions, spark, mode="append", progress_out=progress_out
-    )
-    return drained, lo_us, hi_us
+    return drain(sessions, "memory"), lo_us, hi_us
 
 
 @query(
@@ -1960,7 +1850,8 @@ def stream_session_timeout_eviction(spark: SparkSession, sf_dir: str) -> DataFra
     Reference parity: none (SURVEY §2.D stateful-ops north-star; closes
     the 'live deployments evict with a timeout' deferral in the CEP
     operator's docstring)."""
-    drained, lo_us, hi_us = _session_timeout_drain(spark, sf_dir)
+    q, lo_us, hi_us = _session_timeout_drain(spark, sf_dir)
+    drained = spark.table(q.name)
     cutoff_us = hi_us - (hi_us - lo_us) // 4
     return drained.filter(F.col("last_us") <= cutoff_us).select(
         "user_id",
@@ -2207,15 +2098,12 @@ def stream_ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     produce path is the reference's put pipeline (W2/W9), and the replay
     discipline mirrors tests/test_pyds_source.py applied to index state.
     """
-    from ..streaming.ann_index import start_ann_index
+    from ..streaming.ann_index import index_merger
 
     stream = _ann_upsert_stream(spark, sf_dir)
     upserts = _ann_upserts_df(spark, stream)
-    scratch = scratch_dir("annidx")
-    root = os.path.join(scratch, "index")
-    ckpt = os.path.join(scratch, "_ckpt")
-    q = start_ann_index(upserts, root, ckpt)
-    q.awaitTermination()
+    root = os.path.join(scratch_dir("annidx"), "index")
+    drain(upserts, index_merger(spark, root))
     return _verify_ann_index(spark, sf_dir, root)
 
 
@@ -2297,14 +2185,12 @@ def stream_ann_index_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: none (SURVEY §2.D north-star); the delete model
     is the CDC before-image convention, chosen precisely because it
     keeps the merge a pure latest-wins fold."""
-    from ..streaming.ann_index import read_store, start_ann_index
+    from ..streaming.ann_index import index_merger, read_store
 
     stream = _ann_cdc_stream(spark, sf_dir)
     upserts = _ann_upserts_df(spark, stream, cdc=True)
-    scratch = scratch_dir("anncdc")
-    root = os.path.join(scratch, "index")
-    q = start_ann_index(upserts, root, os.path.join(scratch, "_ckpt"))
-    q.awaitTermination()
+    root = os.path.join(scratch_dir("anncdc"), "index")
+    drain(upserts, index_merger(spark, root))
 
     # (1)+(2) in ONE marker-inclusive store scan (was three jobs each
     # re-reading the store): per-id duplicate detection, dead ids
@@ -2384,15 +2270,14 @@ def _ensure_standing_cdc_index(spark: SparkSession, sf_dir: str) -> str:
     built once per derived_dir key by draining the shared CDC stream;
     each compaction run then works on a fresh COPY so the query is
     deterministic run-over-run."""
-    from ..streaming.ann_index import start_ann_index
+    from ..streaming.ann_index import index_merger
 
     def build(base: str) -> None:
         stream = _ann_cdc_stream(spark, sf_dir)
-        start_ann_index(
+        drain(
             _ann_upserts_df(spark, stream, cdc=True),
-            os.path.join(base, "index"),
-            os.path.join(base, "_ckpt"),
-        ).awaitTermination()
+            index_merger(spark, os.path.join(base, "index")),
+        )
 
     return os.path.join(
         derived_dir(spark, sf_dir, "anncdc_standing", build), "index"
@@ -2523,14 +2408,12 @@ def _ensure_standing_index(spark: SparkSession, sf_dir: str) -> str:
     bench.py builds this in its untimed warm-up (index construction is
     the stream section's job to measure; the headline entry measures
     SEARCH)."""
-    from ..streaming.ann_index import start_ann_index
+    from ..streaming.ann_index import index_merger
 
     def build(base: str) -> None:
         root = os.path.join(base, "index")
         stream = _ann_upsert_stream(spark, sf_dir)
-        start_ann_index(
-            _ann_upserts_df(spark, stream), root, os.path.join(base, "_ckpt")
-        ).awaitTermination()
+        drain(_ann_upserts_df(spark, stream), index_merger(spark, root))
         _verify_ann_index(spark, sf_dir, root)
 
     return os.path.join(
@@ -3412,7 +3295,7 @@ def _serve_then_merge_drain(
         merge(batch_df, batch_id)
         batch_df.unpersist()
 
-    _drain_foreach_batch(upserts, _serve_then_merge, os.path.join(base, "_ckpt"))
+    drain(upserts, _serve_then_merge)
     if current_version(root) != 2:
         raise RuntimeError(
             f"serve-during-drain committed {current_version(root)} "

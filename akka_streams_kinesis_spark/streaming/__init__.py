@@ -8,5 +8,4 @@ from .writer import (  # noqa: F401
     encode_records,
     kinesis_write_flow,
     with_retries,
-    write_stream_to_kinesis,
 )

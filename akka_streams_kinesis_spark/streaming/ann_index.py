@@ -123,7 +123,6 @@ import posixpath
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 COARSE_BITS = 8     # depth of the always-present coarse cell (256 cells)
@@ -443,10 +442,12 @@ def index_merger(
     store_buckets: int = N_STORE_BUCKETS,
     pre_commit_hook=None,
 ):
-    """The per-micro-batch upsert function (what ``start_ann_index``
-    hands to foreachBatch), exposed so tests can drive arbitrary
-    choppings and crash/replay schedules against the index WITHOUT the
-    streaming runtime: latest-wins makes ``merge(batch)`` associative,
+    """The per-micro-batch upsert function that maintains the index under
+    ``root`` from a stream of (vec_id, seq, code, *payload) upserts, for
+    ``drain(upserts, index_merger(spark, root))``. Latest-wins by
+    ``seq``. Tests call it directly to drive arbitrary choppings and
+    crash/replay schedules against the index WITHOUT the streaming
+    runtime: latest-wins makes ``merge(batch)`` associative,
     commutative and idempotent over the upsert multiset, so any call
     sequence whose union covers the stream must converge to the rebuild.
     Payload columns are the UNION of the batch's schema and the standing
@@ -668,28 +669,6 @@ def index_merger(
                 prior.unpersist()
 
     return _merge
-
-
-def start_ann_index(
-    upserts: DataFrame,
-    root: str,
-    checkpoint: str,
-    store_buckets: int = N_STORE_BUCKETS,
-) -> StreamingQuery:
-    """Start maintaining the IVF index under ``root`` from a stream of
-    (vec_id, seq, code, *payload) upserts; availableNow trigger, so
-    awaiting termination drains the current backlog. Latest-wins by
-    ``seq``. Payload columns (e.g. the embedding itself) ride along in
-    the store."""
-    return (
-        upserts.writeStream.foreachBatch(
-            index_merger(upserts.sparkSession, root, store_buckets)
-        )
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
 
 
 # ---------------------------------------------------------------------------

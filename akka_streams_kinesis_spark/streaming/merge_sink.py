@@ -25,8 +25,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import DataFrame, SparkSession, Window
 
 _N_BUCKETS = 16
 
@@ -49,12 +48,9 @@ def _latest_in_batch(events: DataFrame) -> DataFrame:
     )
 
 
-def start_user_state_table(
-    events: DataFrame, path: str, checkpoint: str
-) -> StreamingQuery:
-    """Start maintaining latest-state-per-user at ``path``; availableNow
-    trigger, so awaiting termination drains the current backlog."""
-    spark = events.sparkSession
+def user_state_merger(spark: SparkSession, path: str):
+    """The per-micro-batch latest-wins merge into the user-state table at
+    ``path``, for ``drain(events, user_state_merger(spark, path))``."""
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:
         state = _latest_in_batch(batch_df)
@@ -91,10 +87,4 @@ def start_user_state_table(
             .parquet(path)
         )
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    return _merge

@@ -38,8 +38,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import DataFrame, SparkSession
 
 
 def hourly_rollup_updates(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -58,13 +57,10 @@ def hourly_rollup_updates(events: DataFrame, watermark: str = "1 hour") -> DataF
     )
 
 
-def start_rollup_table(
-    events: DataFrame, path: str, checkpoint: str, watermark: str = "1 hour"
-) -> StreamingQuery:
-    """Start maintaining the rollup table at ``path``; returns the query
-    (use ``availableNow`` semantics by awaiting termination for backfills)."""
-    updates = hourly_rollup_updates(events, watermark)
-    spark = events.sparkSession
+def rollup_writer(spark: SparkSession, path: str):
+    """The per-micro-batch merge into the rollup table at ``path``, for
+    ``drain(hourly_rollup_updates(events, wm), rollup_writer(spark, path),
+    mode="update")``."""
 
     def _write(batch_df: DataFrame, _batch_id: int) -> None:
         new = batch_df.withColumn(
@@ -95,10 +91,4 @@ def start_rollup_table(
             .parquet(path)
         )
 
-    return (
-        updates.writeStream.foreachBatch(_write)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    return _write

@@ -36,7 +36,6 @@ import time
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -196,38 +195,3 @@ def kinesis_write_flow(
         yield from flush(final=True)
 
     return df.mapInPandas(_write, schema=out_schema)
-
-
-def write_stream_to_kinesis(
-    sdf: DataFrame,
-    put_fn: PutFn,
-    stream_name: str,
-    success_path: str,
-    dlq_path: str,
-    checkpoint_path: str,
-    trigger_available_now: bool = True,
-    **flow_kwargs,
-):
-    """Streaming egress: foreachBatch → writer flow → split results into a
-    success table and a dead-letter table (the Either partitioning, W7, as
-    two parquet sinks). At-least-once like the reference (SURVEY §4)."""
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        annotated = kinesis_write_flow(batch_df, put_fn, stream_name, **flow_kwargs)
-        annotated.persist()
-        try:
-            annotated.filter(F.col("error_code").isNull()).drop(
-                "error_code", "error_message"
-            ).write.mode("append").parquet(success_path)
-            annotated.filter(F.col("error_code").isNotNull()).write.mode("append").parquet(
-                dlq_path
-            )
-        finally:
-            annotated.unpersist()
-
-    writer = sdf.writeStream.foreachBatch(_write_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

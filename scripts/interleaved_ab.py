@@ -14,6 +14,9 @@ PYTHONPATH trees, alternating: A(3 rounds), B(3 rounds), A(3), B(3).
 
 Usage:
   python scripts/interleaved_ab.py TREE q1,q2 [--rounds N] [--sf DIR]
+
+``--rounds 1`` is a one-shot timing of the list. A name missing from
+TREE's registry (an older checkout) is reported as null.
 """
 
 from __future__ import annotations
@@ -47,9 +50,10 @@ def main() -> None:
             "overwrite"
         ).save()
 
-    per: dict[str, list[float]] = {n: [] for n in NAMES}
+    present = [n for n in NAMES if n in registry.QUERIES]
+    per: dict[str, list[float]] = {n: [] for n in present}
     for r in range(ROUNDS):
-        for name in NAMES:
+        for name in present:
             t0 = time.perf_counter()
             try:
                 registry.QUERIES[name](spark, SF_DIR).write.format("noop").mode(
@@ -59,7 +63,7 @@ def main() -> None:
             except Exception as e:
                 print(f"# {name}: ERROR {str(e)[:160]}", file=sys.stderr)
                 per[name].append(float("nan"))
-        print(f"# round {r}: " + " ".join(f"{n}={per[n][-1]}" for n in NAMES), file=sys.stderr)
+        print(f"# round {r}: " + " ".join(f"{n}={per[n][-1]}" for n in present), file=sys.stderr)
 
     def med(xs: list[float]) -> float:
         ys = sorted(x for x in xs if x == x)
@@ -68,12 +72,15 @@ def main() -> None:
         m = len(ys) // 2
         return ys[m] if len(ys) % 2 else (ys[m - 1] + ys[m]) / 2
 
+    def stat(fn) -> dict:
+        return {n: fn(per[n]) if n in per else None for n in NAMES}
+
     print(json.dumps({
         "tree": TREE,
         "rounds": ROUNDS,
-        "times": per,
-        "median": {n: med(v) for n, v in per.items()},
-        "min": {n: min((x for x in v if x == x), default=float("nan")) for n, v in per.items()},
+        "times": stat(list),
+        "median": stat(med),
+        "min": stat(lambda v: min((x for x in v if x == x), default=float("nan"))),
     }))
     spark.stop()
 

@@ -201,8 +201,8 @@ def test_sink_to_source_round_trip(spark, stream):
     out = kinesis_write_flow(df.coalesce(1), put, "sim", sleep_fn=no_sleep)
     # ONE action: the flow has a side effect, and each Spark action would
     # re-execute it (at-least-once, same as the reference's whole-request
-    # retry, SURVEY §4) — production use goes through foreachBatch which
-    # persists before fan-out (see write_stream_to_kinesis).
+    # retry, SURVEY §4) — production use persists the flow's output
+    # before fanning it out to more than one action.
     rows = out.collect()
     assert len(rows) == 100
     assert all(r["error_code"] is None for r in rows)

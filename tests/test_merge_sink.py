@@ -12,17 +12,17 @@ from akka_streams_kinesis_spark.operators.streaming_queries import (
     decode_json_payload,
 )
 from akka_streams_kinesis_spark.sources.kinesis_sim import TrimHorizon
-from akka_streams_kinesis_spark.streaming.merge_sink import start_user_state_table
+from akka_streams_kinesis_spark.streaming.drain import drain
+from akka_streams_kinesis_spark.streaming.merge_sink import user_state_merger
 
 registry.load_all()
 
 
-def _drain(spark, sf_dir, path, ckpt):
+def _drain(spark, sf_dir, path):
     stream = _materialize_events_stream(spark, sf_dir, copies=1, flavor="once")
     records = stream.read_stream(spark, TrimHorizon(), max_files_per_trigger=64)
     events = decode_json_payload(records, _EVENT_SCHEMA)
-    q = start_user_state_table(events, path, ckpt)
-    q.awaitTermination()
+    drain(events, user_state_merger(spark, path))
 
 
 def _snapshot(spark, path):
@@ -34,11 +34,11 @@ def _snapshot(spark, path):
 
 def test_merge_sink_replay_is_idempotent(spark, sf_dir, tmp_path):
     path = str(tmp_path / "table")
-    _drain(spark, sf_dir, path, str(tmp_path / "ckpt1"))
+    _drain(spark, sf_dir, path)
     first = _snapshot(spark, path)
     assert first, "empty state table after first drain"
     # fresh checkpoint: full replay over existing
-    _drain(spark, sf_dir, path, str(tmp_path / "ckpt2"))
+    _drain(spark, sf_dir, path)
     assert _snapshot(spark, path) == first
 
 
@@ -56,8 +56,7 @@ def test_merge_sink_multi_batch_drain_keeps_all_users(spark, sf_dir, tmp_path):
     records = stream.read_stream(spark, TrimHorizon(), max_files_per_trigger=2)
     events = decode_json_payload(records, _EVENT_SCHEMA)
     path = str(tmp_path / "table")
-    q = start_user_state_table(events, path, str(tmp_path / "ckpt"))
-    q.awaitTermination()
+    drain(events, user_state_merger(spark, path))
     got = spark.read.option("basePath", path).parquet(path).count()
     want = load_table(spark, sf_dir, "events").select("user_id").distinct().count()
     assert got == want, f"merge sink dropped users across batches: {got} != {want}"

@@ -98,8 +98,14 @@ LEAK_QUERIES = [
     "stream_exactly_once_sink",
     "source_checkpoint_restart_rollup",
     "stream_observed_ingest_metrics",
+    "stream_rollup_table_maintenance",
     "maintenance_schema_evolution_audit",
 ]
+
+
+def _checkpoints(root: str) -> list[str]:
+    """Spark checkpoints under ``root``: dirs holding offsets/ and commits/."""
+    return [d for d, subs, _ in os.walk(root) if {"offsets", "commits"} <= set(subs)]
 
 
 def _temp_views(spark) -> set[str]:
@@ -112,12 +118,12 @@ def test_release_shared_leaves_only_the_cache_root(spark, sf_dir, tmp_root):
     for name in LEAK_QUERIES:
         registry.QUERIES[name](spark, sf_dir).collect()
     (scratch_root,) = (e for e in os.listdir(tmp_root) if e != DERIVED_ROOT)
+    scratch_root = os.path.join(tmp_root, scratch_root)
     # drain checkpoints are gone as soon as their query terminates
-    assert not [
-        e
-        for e in os.listdir(os.path.join(tmp_root, scratch_root))
-        if e.startswith("ckpt_")
-    ]
+    assert not [e for e in os.listdir(scratch_root) if e.startswith("ckpt_")]
+    # ... except the one the restart query passes explicitly to resume it
+    kept = [os.path.relpath(c, scratch_root) for c in _checkpoints(scratch_root)]
+    assert len(kept) == 1 and kept[0].startswith("ckrestart_"), kept
     assert _temp_views(spark) - views_before  # the drains' memory sinks
 
     release_shared()

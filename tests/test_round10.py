@@ -4,6 +4,7 @@ sentinel plumbing, shared-build accounting, session-timeout state bound."""
 from __future__ import annotations
 
 import datetime
+import json
 
 import pytest
 
@@ -47,10 +48,9 @@ class TestSessionTimeoutStateBound:
             _session_timeout_drain,
         )
 
-        prog: list = []
-        drained, lo_us, hi_us = _session_timeout_drain(
-            spark, sf_dir, progress_out=prog
-        )
+        q, lo_us, hi_us = _session_timeout_drain(spark, sf_dir)
+        drained = spark.table(q.name)
+        prog = [json.loads(p.json) for p in q.recentProgress]
         assert drained.count() > 0
         mx = sorted(
             r["mx"]
@@ -83,12 +83,12 @@ class TestSessionTimeoutStateBound:
         from akka_streams_kinesis_spark.operators.streaming_queries import (
             _EVENT_SCHEMA,
             _encode_events,
-            _run_available_now,
         )
         from akka_streams_kinesis_spark.sources.kinesis_sim import (
             SimStream,
             TrimHorizon,
         )
+        from akka_streams_kinesis_spark.streaming.drain import drain
         from akka_streams_kinesis_spark.streaming.stateful import (
             sessions_by_timeout,
         )
@@ -132,8 +132,8 @@ class TestSessionTimeoutStateBound:
         sessions = sessions_by_timeout(
             decoded, delay=f"{span_us // 8} microseconds"
         )
-        prog: list = []
-        _run_available_now(sessions, spark, mode="append", progress_out=prog)
+        q = drain(sessions, "memory")
+        prog = [json.loads(p.json) for p in q.recentProgress]
         with_state = [
             (p["batchId"], _state_rows(p), _wm_us(p))
             for p in prog
@@ -162,7 +162,7 @@ class TestStatePartitionsOverride:
     shuffle-256 canary's 256-partition coverage)."""
 
     def _resolve(self, monkeypatch, env, default=16):
-        from akka_streams_kinesis_spark.operators.streaming_queries import (
+        from akka_streams_kinesis_spark.streaming.drain import (
             _state_partitions_override,
         )
 

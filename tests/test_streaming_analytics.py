@@ -223,7 +223,11 @@ def test_rollup_table_incrementally_maintained(spark, tmp_path):
     """The partition-overwrite rollup sink converges to the batch truth
     across drains: updated hours are rewritten, untouched hours keep their
     files, and re-draining is idempotent."""
-    from akka_streams_kinesis_spark.streaming.rollup_sink import start_rollup_table
+    from akka_streams_kinesis_spark.streaming import drain as drain_mod
+    from akka_streams_kinesis_spark.streaming.rollup_sink import (
+        hourly_rollup_updates,
+        rollup_writer,
+    )
 
     stream = SimStream.create(str(tmp_path / "s5"), n_shards=1)
     table_path, ckpt = str(tmp_path / "rollup"), str(tmp_path / "c5")
@@ -231,8 +235,12 @@ def test_rollup_table_incrementally_maintained(spark, tmp_path):
     def drain():
         records = stream.read_stream(spark, TrimHorizon())
         events = decode_json_payload(records, SCHEMA)
-        q = start_rollup_table(events, table_path, ckpt)
-        q.awaitTermination()
+        drain_mod.drain(
+            hourly_rollup_updates(events),
+            rollup_writer(spark, table_path),
+            mode="update",
+            checkpoint=ckpt,
+        )
         return spark.read.parquet(table_path)
 
     # hour A: two clicks; hour B: one purchase
