@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..functions import NORM_TEXT_DUCK, div_round4
 from ..io import table
 from ..registry import query
-from ..shared import shared_frame, transient_persist
+from ..shared import _persist, shared_frame, transient_persist
 from .dedup import _band_cap_ctes, _minhash_ctes, minhash_pairs_shared
 
 _NORM = NORM_TEXT_DUCK.format(col="text")
@@ -95,7 +95,7 @@ def connected_components(undirected_edges: DataFrame, max_rounds: int = 20) -> D
     Property-tested against a union-find ground truth on random graphs
     incl. long chains (tests/test_cc_property.py).
     """
-    edges = undirected_edges.persist()
+    edges = _persist(undirected_edges)
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()

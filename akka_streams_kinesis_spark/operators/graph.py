@@ -91,9 +91,11 @@ def _purchase_dir_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     LPA's first round). persist (via shared_frame) rather than
     localCheckpoint is load-bearing: InMemoryRelation preserves the
     child's outputPartitioning, Scan ExistingRDD discards it (measured).
-    repartition by COLUMN (no fixed N) keeps the partition count on
-    spark.sql.shuffle.partitions / AQE — scale-adaptive, not a local[32]
-    tune."""
+    repartition by COLUMN (no fixed N) leaves the partition count to AQE:
+    shared._persist plans the cache with AQE, which coalesces it to the
+    data's size and keeps it hash-partitioned on dst — scale-adaptive,
+    not a local[32] tune (tests/test_plans.py pins the Exchange-free
+    rounds)."""
 
     def build() -> DataFrame:
         edges = _purchase_edges(spark, sf_dir)

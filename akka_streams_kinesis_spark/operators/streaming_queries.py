@@ -31,7 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..functions import div_round4
 from ..io import derived_dir, table
 from ..registry import query
-from ..shared import scratch_dir, transient_persist
+from ..shared import _persist, scratch_dir, transient_persist
 from ..sources.kinesis_sim import AtTimestamp, SimStream, TrimHorizon
 from ..streaming.drain import drain
 from ..streaming.windows import (
@@ -631,7 +631,7 @@ def stream_incremental_dedup_store(spark: SparkSession, sf_dir: str) -> DataFram
         if os.path.isdir(store) and os.listdir(store):
             seen = batch.sparkSession.read.parquet(store).select("digest")
             b = b.join(seen, "digest", "left_anti")
-        b = b.persist()
+        b = _persist(b)
         b.select("event_type", "value").write.mode("append").parquet(out)
         b.select("digest").write.mode("append").parquet(store)
         b.unpersist()
@@ -2559,7 +2559,7 @@ def _si_cand_checked(
         )
         # consumed repeatedly (count self-check, query extraction,
         # rerank): one persist instead of repeated pruned scans
-        cand = pruned.join(F.broadcast(probe_df), "c8").persist()
+        cand = _persist(pruned.join(F.broadcast(probe_df), "c8"))
         n_scan = cand.groupBy("query_id").agg(F.count("*").alias("n_scan"))
         bad = (
             _si_dir_counts(spark, root, snap, probe_df)
@@ -3281,7 +3281,7 @@ def _serve_then_merge_drain(
     merge = index_merger(spark, root)
 
     def _serve_then_merge(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
+        batch_df = _persist(batch_df)
         seqs = sorted(
             r[0] for r in batch_df.select("seq").distinct().collect()
         )

@@ -22,6 +22,19 @@ relying silently on LRU eviction):
     registered here so a harness can bound memory with one call instead
     of each operator guessing when its last consumer ran.
 
+``_persist(df)``
+    The one ``persist()`` call of the package; both tiers above and the
+    operators' own short-lived caches go through it. Spark plans a
+    cached frame with AQE off unless
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is set
+    when the plan is registered, so the cache would keep
+    ``spark.sql.shuffle.partitions`` partitions (32 under
+    ``get_session``, 200 in a vanilla session) and every later scan of a
+    few-KB frame would run that many near-empty tasks. ``_persist`` sets
+    the conf around the registration only, so AQE sizes each cache from
+    its data (a column-keyed ``repartition`` stays hash-partitioned,
+    coalesced) and the session's own value is left as it was.
+
 ``scratch_dir(name)`` / ``transient_view(spark, name)``
     Per-call on-disk state: a fresh directory under one per-process
     scratch root (tables, checkpoints and streams a query writes on every
@@ -66,6 +79,9 @@ _TRANSIENT: list[DataFrame] = []
 _VIEWS: list[tuple[weakref.ref, str]] = []
 _SCRATCH_ROOT: str | None = None
 _LOCK = threading.RLock()
+# serializes _persist's set/persist/restore of the session conf
+_PERSIST_LOCK = threading.Lock()
+_AQE_CACHED_PLAN = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 # key → Event: a build in flight for that key. The LOCK only guards map
 # access; the (job-running) build itself happens outside it, so a slow
 # materialization never blocks unrelated shared_frame callers (round-10
@@ -92,6 +108,22 @@ def build_times() -> dict[str, float]:
 def build_seconds_total() -> float:
     with _LOCK:
         return round(sum(_BUILD_SECONDS.values()), 3)
+
+
+def _persist(df: DataFrame) -> DataFrame:
+    """``df.persist()`` with AQE allowed to re-partition the cached plan.
+
+    The conf is read when the cache manager registers the plan, which
+    ``persist()`` does before it returns (the cache is filled by the
+    first action, after the restore)."""
+    spark = df.sparkSession
+    with _PERSIST_LOCK:
+        prev = spark.conf.get(_AQE_CACHED_PLAN)
+        spark.conf.set(_AQE_CACHED_PLAN, "true")
+        try:
+            return df.persist()
+        finally:
+            spark.conf.set(_AQE_CACHED_PLAN, prev)
 
 
 def _session_stopped(spark: SparkSession | None) -> bool:
@@ -138,7 +170,8 @@ def shared_frame(
                 break  # this thread builds
         ev.wait()
     # Timed + EAGER build (outside the lock): count() fills the persisted
-    # cache now, so the build cost lands in _BUILD_SECONDS instead of
+    # cache now, in the partitions AQE chose for it (see _persist), so the
+    # build cost lands in _BUILD_SECONDS instead of
     # inside the first consumer's wall clock. Total work is unchanged —
     # the cache fill was always paid exactly once, on first action; this
     # only moves WHERE it is attributed. Exclusive-time bookkeeping:
@@ -152,7 +185,7 @@ def shared_frame(
     t0 = time.perf_counter()
     ok = False
     try:
-        df = build().persist()
+        df = _persist(build())
         df.count()
         ok = True
     finally:
@@ -178,8 +211,8 @@ def shared_frame(
 
 
 def transient_persist(df: DataFrame) -> DataFrame:
-    """persist() + register for a later release_shared()."""
-    df = df.persist()
+    """_persist() + register for a later release_shared()."""
+    df = _persist(df)
     with _LOCK:
         _TRANSIENT.append(df)
     return df

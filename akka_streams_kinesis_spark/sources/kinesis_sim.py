@@ -58,6 +58,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..shared import _persist
+
 MAX_HASH = (1 << 128) - 1
 
 RECORD_SCHEMA = StructType(
@@ -68,6 +70,36 @@ RECORD_SCHEMA = StructType(
         StructField("ts", TimestampType()),
     ]
 )
+
+
+def write_put_file(shard_dir: str, seqs, pks, datas, naive_ts: datetime) -> str:
+    """Publish one put file of ``(seqs[i], pks[i], datas[i])`` records
+    arrived at ``naive_ts``. It is written under a dot-prefixed temp name,
+    which readers skip, and renamed to ``put-<uuid>.parquet`` once whole:
+    a reader never lists a half-written file, and a file it lists never
+    changes. A failed write leaves nothing behind."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pa.table(
+        {
+            "sequence_number": pa.array(seqs, pa.int64()),
+            "partition_key": pa.array(pks, pa.string()),
+            "data": pa.array(datas, pa.binary()),
+            "ts": pa.array([naive_ts] * len(seqs), pa.timestamp("us")),
+        }
+    )
+    os.makedirs(shard_dir, exist_ok=True)
+    name = f"put-{uuid.uuid4().hex}.parquet"
+    final, tmp = os.path.join(shard_dir, name), os.path.join(shard_dir, f".{name}.tmp")
+    try:
+        pq.write_table(tbl, tmp)
+        os.replace(tmp, final)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    return final
 
 
 # ---------------------------------------------------------------------------
@@ -248,9 +280,6 @@ class SimStream:
         shard's hash range, assign the shard's next sequence numbers, write
         one parquet file per touched shard. Returns per-record placement
         (shard_id, sequence_number) like PutRecords result entries."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         meta = self._meta()
         open_shards = [s for s in meta["shards"] if not s["closed"]]
         ts = ts or datetime.now(timezone.utc)
@@ -268,18 +297,11 @@ class SimStream:
             placed.setdefault(shard["shard_id"], []).append((seq, pk, data))
             results.append({"shard_id": shard["shard_id"], "sequence_number": seq})
         for shard_id, rows in placed.items():
-            d = os.path.join(self.data_dir, f"shard_id={shard_id}")
-            os.makedirs(d, exist_ok=True)
-            naive_ts = _as_utc_naive(ts)
-            tbl = pa.table(
-                {
-                    "sequence_number": pa.array([r[0] for r in rows], pa.int64()),
-                    "partition_key": pa.array([r[1] for r in rows], pa.string()),
-                    "data": pa.array([r[2] for r in rows], pa.binary()),
-                    "ts": pa.array([naive_ts] * len(rows), pa.timestamp("us")),
-                }
+            seqs, pks, datas = zip(*rows)
+            write_put_file(
+                os.path.join(self.data_dir, f"shard_id={shard_id}"),
+                seqs, pks, datas, _as_utc_naive(ts),
             )
-            pq.write_table(tbl, os.path.join(d, f"put-{uuid.uuid4().hex}.parquet"))
         self._write_meta(meta)
         return results
 
@@ -333,9 +355,9 @@ class SimStream:
                     }
                 )
 
-        assigned = df.select("partition_key", "data").mapInPandas(
+        assigned = _persist(df.select("partition_key", "data").mapInPandas(
             _assign, "partition_key string, data binary, shard_id string"
-        ).persist()
+        ))
         counts = {
             r["shard_id"]: r["count"]
             for r in assigned.groupBy("shard_id").count().collect()
@@ -350,26 +372,15 @@ class SimStream:
         seqd = assigned.withColumn("rn", F.row_number().over(w) - 1)
 
         def _write(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
             for b in batches:
                 for shard_id, g in b.groupby("shard_id"):
-                    d = os.path.join(data_dir, f"shard_id={shard_id}")
-                    os.makedirs(d, exist_ok=True)
-                    tbl = pa.table(
-                        {
-                            "sequence_number": pa.array(
-                                bases[shard_id] + g["rn"].to_numpy(), pa.int64()
-                            ),
-                            "partition_key": pa.array(g["partition_key"], pa.string()),
-                            "data": pa.array(
-                                [bytes(x) for x in g["data"]], pa.binary()
-                            ),
-                            "ts": pa.array([naive_ts] * len(g), pa.timestamp("us")),
-                        }
+                    write_put_file(
+                        os.path.join(data_dir, f"shard_id={shard_id}"),
+                        bases[shard_id] + g["rn"].to_numpy(),
+                        g["partition_key"],
+                        [bytes(x) for x in g["data"]],
+                        naive_ts,
                     )
-                    pq.write_table(tbl, os.path.join(d, f"put-{uuid.uuid4().hex}.parquet"))
                     yield pd.DataFrame({"n": [len(g)]})
 
         written = (

@@ -34,11 +34,17 @@ Options:
                      min(since, now) (`KinesisSource.scala:100-102`; the
                      reference injects java.time.Clock the same way)
 
-Scale notes: partition planning lists shard directories only (no data
-read); `latest`/`at_timestamp` offset resolution reads just the
-sequence_number/ts columns of the affected shard (column-pruned parquet
-scan); all record bytes flow executor-side as Arrow batches, never through
-the driver.
+Scale notes: each reader keeps the (min, max) sequence number of every
+put file it has seen, read once from the parquet footer (``_SeqRanges``),
+so a stream trigger's ``latestOffset`` reads only the footers of new files
+and ``partitions()`` ships only the files whose range overlaps the batch's
+``[lo, hi)``. ``latest`` resolution reads no data; ``at_timestamp`` reads
+the sequence_number/ts columns of a shard's oldest files until none can
+hold an earlier match. All record bytes flow executor-side as Arrow
+batches, never through the driver. Put files are published by rename
+(``kinesis_sim.write_put_file``), so a listed file is whole and never
+changes. The reader and the relay path persist no frame, so the
+AQE-sized caches of ``shared._persist`` play no part here.
 """
 
 from __future__ import annotations
@@ -102,26 +108,64 @@ def _shard_files(shard_dir: str) -> list[str]:
     return sorted(glob.glob(os.path.join(shard_dir, "*.parquet")))
 
 
-def _max_seq(shard_dir: str) -> int | None:
-    """Max sequence number in a shard, reading only the seq column."""
+def _seq_range(path: str) -> tuple[int, int] | None:
+    """(min, max) sequence number of one put file, from its parquet footer
+    statistics; reads the column when a row group has none. None for a
+    file without rows."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    best: int | None = None
-    for f in _shard_files(shard_dir):
-        col = pq.read_table(f, columns=["sequence_number"])["sequence_number"]
-        if len(col):
-            m = max(col.to_pylist())
-            best = m if best is None else max(best, m)
-    return best
+    md = pq.read_metadata(path)
+    col = md.schema.names.index("sequence_number")
+    stats = [md.row_group(i).column(col).statistics for i in range(md.num_row_groups)]
+    if any(st is None or not st.has_min_max for st in stats):
+        mm = pc.min_max(pq.read_table(path, columns=["sequence_number"])[0]).as_py()
+        return None if mm["min"] is None else (mm["min"], mm["max"])
+    if not stats:
+        return None
+    return min(st.min for st in stats), max(st.max for st in stats)
 
 
-def _first_seq_at_or_after(shard_dir: str, since: datetime) -> int | None:
+class _SeqRanges:
+    """Per-reader footer cache: shard dir → {put file → _seq_range}.
+
+    A put file is published whole under its final name and never changes
+    (see ``kinesis_sim.write_put_file``), so each footer is read once per
+    reader; a listing keeps only the files that still exist."""
+
+    def __init__(self) -> None:
+        self._by_shard: dict[str, dict[str, tuple[int, int] | None]] = {}
+
+    def shard(self, shard_dir: str) -> dict[str, tuple[int, int] | None]:
+        seen = self._by_shard.get(shard_dir, {})
+        cur = {
+            f: seen[f] if f in seen else _seq_range(f)
+            for f in _shard_files(shard_dir)
+        }
+        self._by_shard[shard_dir] = cur
+        return cur
+
+
+def _max_seq(ranges: dict[str, tuple[int, int] | None]) -> int | None:
+    """Max sequence number over one shard's ``_SeqRanges.shard`` entry."""
+    return max((r[1] for r in ranges.values() if r is not None), default=None)
+
+
+def _first_seq_at_or_after(
+    ranges: dict[str, tuple[int, int] | None], since: datetime
+) -> int | None:
     """Smallest sequence number whose ts >= since (arrival-time positioning:
-    AT_TIMESTAMP reads from the first record that arrived at/after t)."""
+    AT_TIMESTAMP reads from the first record that arrived at/after t).
+    Files are read in ascending order of their smallest sequence number,
+    stopping at the first that cannot hold a smaller answer."""
     import pyarrow.parquet as pq
 
     best: int | None = None
-    for f in _shard_files(shard_dir):
+    for f, r in sorted(
+        ((f, r) for f, r in ranges.items() if r is not None), key=lambda x: x[1]
+    ):
+        if best is not None and r[0] >= best:
+            break
         t = pq.read_table(f, columns=["sequence_number", "ts"])
         for seq, ts in zip(
             t["sequence_number"].to_pylist(), t["ts"].to_pylist()
@@ -317,7 +361,7 @@ class KinesisSimBatchReader(DataSourceReader):
         for shard_id, d in dirs.items():
             p = ShardPartition(shard_id=shard_id, files=_shard_files(d))
             if self.position == "latest":
-                m = _max_seq(d)
+                m = _max_seq(_SeqRanges().shard(d))
                 p.lo = 0 if m is None else m + 1  # nothing newer yet
             elif self.position.startswith("at_timestamp:"):
                 since = _parse_iso(self.position.split(":", 1)[1])
@@ -341,38 +385,33 @@ class KinesisSimStreamReader(DataSourceStreamReader):
         self.path = options["path"]
         self.position = options.get("starting_position", "trim_horizon").lower()
         self.now = _parse_iso(options["now"]) if "now" in options else None
+        # footer cache: a trigger reads only the footers of new put files
+        self.ranges = _SeqRanges()
         # S17 seam: fault-injectable read client (fake-client tests)
         self.read_file = read_file
         self.sleep_fn = sleep_fn
 
+    def _end(self, shard_dir: str) -> int:
+        m = _max_seq(self.ranges.shard(shard_dir))
+        return (m if m is not None else -1) + 1
+
     def initialOffset(self) -> dict:
         dirs = _shard_dirs(self.path)
         if self.position == "latest":
-            out = {}
-            for s, d in dirs.items():
-                m = _max_seq(d)
-                out[s] = (m if m is not None else -1) + 1
-            return out
+            return {s: self._end(d) for s, d in dirs.items()}
         if self.position.startswith("at_timestamp:"):
             since = _parse_iso(self.position.split(":", 1)[1])
             now = self.now or datetime.utcnow()
             since = min(since, now)
             out = {}
             for s, d in dirs.items():
-                first = _first_seq_at_or_after(d, since)
-                if first is None:
-                    m = _max_seq(d)
-                    first = (m if m is not None else -1) + 1
-                out[s] = first
+                first = _first_seq_at_or_after(self.ranges.shard(d), since)
+                out[s] = self._end(d) if first is None else first
             return out
         return {s: 0 for s in dirs}  # trim_horizon
 
     def latestOffset(self) -> dict:
-        out = {}
-        for s, d in _shard_dirs(self.path).items():
-            m = _max_seq(d)
-            out[s] = (m if m is not None else -1) + 1
-        return out
+        return {s: self._end(d) for s, d in _shard_dirs(self.path).items()}
 
     def partitions(self, start: dict, end: dict) -> list[ShardPartition]:
         parts = []
@@ -381,13 +420,14 @@ class KinesisSimStreamReader(DataSourceStreamReader):
             lo = int(start.get(shard_id, 0))  # unseen shard ⇒ from its start (S7)
             hi = int(hi)
             if hi > lo and shard_id in dirs:
+                ranges = self.ranges.shard(dirs[shard_id])
+                files = [
+                    f
+                    for f, r in ranges.items()
+                    if r is not None and r[1] >= lo and r[0] < hi
+                ]
                 parts.append(
-                    ShardPartition(
-                        shard_id=shard_id,
-                        files=_shard_files(dirs[shard_id]),
-                        lo=lo,
-                        hi=hi,
-                    )
+                    ShardPartition(shard_id=shard_id, files=files, lo=lo, hi=hi)
                 )
         return parts
 
@@ -524,12 +564,10 @@ def _task_put(
     parquet file per shard."""
     import time as _time
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
     from pyspark import TaskContext
 
     from ..streaming.writer import AWS_MAX_BUFFER_SIZE, _flush_chunk
-    from .kinesis_sim import hash_key_for_partition_key
+    from .kinesis_sim import hash_key_for_partition_key, write_put_file
 
     put_fn = put_client or _success_put
     sleep = sleep_fn or _time.sleep
@@ -590,21 +628,15 @@ def _task_put(
             acked.extend(chunk)
         base = next_seq_by_shard[sid] + (pid << _SEQ_TASK_SHIFT)
         seqs = [base + i for i in range(len(acked))]
-        d = os.path.join(path, "data", f"shard_id={sid}")
-        os.makedirs(d, exist_ok=True)
-        import uuid as _uuid
-
-        fname = os.path.join(d, f"put-{_uuid.uuid4().hex}.parquet")
-        tbl = pa.table(
-            {
-                "sequence_number": pa.array(seqs, pa.int64()),
-                "partition_key": pa.array([r[0] for r in acked], pa.string()),
-                "data": pa.array([r[1] for r in acked], pa.binary()),
-                "ts": pa.array([naive_ts] * len(acked), pa.timestamp("us")),
-            }
+        files.append(
+            write_put_file(
+                os.path.join(path, "data", f"shard_id={sid}"),
+                seqs,
+                [r[0] for r in acked],
+                [r[1] for r in acked],
+                naive_ts,
+            )
         )
-        pq.write_table(tbl, fname)
-        files.append(fname)
         max_seqs[sid] = seqs[-1]
         n_rows += len(acked)
     return SimWriteCommit(files=files, max_seqs=max_seqs, n_rows=n_rows)

@@ -125,6 +125,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StructType
 
+from ..shared import _persist
+
 COARSE_BITS = 8     # depth of the always-present coarse cell (256 cells)
 GROUP_BITS = 4      # directory partition group (16 dirs)
 MAX_BITS = 12       # deepest split (16 leaves per coarse subtree)
@@ -497,7 +499,7 @@ def index_merger(
             _coarse("code").alias("c8"),
             (F.col("vec_id") % _N_ID_BUCKETS).alias("idb"),
         )
-        batch = batch.persist()
+        batch = _persist(batch)
         prior = None
         try:
             # bounded collect #1: the batch's distinct (idb, c8) pairs
@@ -510,7 +512,7 @@ def index_merger(
             if snap is not None:
                 # ONE manifest-pruned idmap read, cached for BOTH its
                 # consumers (old-cell lookup here, latest-wins merge below)
-                prior = snap.read_idmap(spark, batch_idbs).persist()
+                prior = _persist(snap.read_idmap(spark, batch_idbs))
                 # bounded collect #2: current cells of the batch's vec_ids
                 # (≤ 256 coarse-cell strings)
                 touched |= {
@@ -535,7 +537,7 @@ def index_merger(
                 # row; its old cell's partitions (∈ touched) are rewritten
                 # without it below
                 merged = merged.withColumn("c8", _coarse("code"))
-            merged = merged.persist()
+            merged = _persist(merged)
 
             # every (touched cell × bucket) partition must appear in the
             # write report — a partition drained of its last row is then

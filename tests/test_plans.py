@@ -207,3 +207,38 @@ def test_bloom_prefilter_runs_before_confirm_join(spark, sf_dir):
     # broadcast hash join (test-shingle set is the small side)
     assert "ArrowEvalPython" in plan
     assert "BroadcastHashJoin" in plan
+
+
+def _kids(node):
+    c = node.children()
+    return [c.apply(i) for i in range(c.size())]
+
+
+def _exchange_above_cache(node, seen=False):
+    """For each InMemoryTableScan reached from ``node`` without crossing a
+    broadcast, whether a shuffle Exchange lies between the two."""
+    name = node.nodeName()
+    if name == "InMemoryTableScan":
+        yield seen
+    elif name != "BroadcastExchange":
+        for c in _kids(node):
+            yield from _exchange_above_cache(c, seen or name == "Exchange")
+
+
+def test_pagerank_rounds_aggregate_without_exchange(spark, sf_dir):
+    # The shared edge list is repartitioned on dst before it is persisted,
+    # and AQE may coalesce that cache but must keep it hash-partitioned: no
+    # PageRank round may plan an Exchange between its contribution
+    # aggregate and the cached edges (dir_edges joined with out_deg).
+    df = registry.QUERIES["graph_pagerank_purchases"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the initial plan, exchanges placed
+    todo, rounds = [plan], []
+    while todo:
+        node = todo.pop()
+        todo.extend(_kids(node))
+        if node.nodeName() == "HashAggregate" and "sum(c_u" in node.simpleString(500):
+            rounds.append(list(_exchange_above_cache(node)))
+    assert len(rounds) == 6  # partial + final aggregate of each of 3 rounds
+    assert all(r and not any(r) for r in rounds), rounds

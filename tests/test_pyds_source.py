@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 from datetime import datetime, timedelta
 
+import pyarrow as pa
 import pytest
 
 from akka_streams_kinesis_spark.sources import pyds
@@ -183,3 +184,115 @@ def test_stream_latest_skips_history(spark, stream, tmp_path):
     got = _drain(spark, sdf, out, ckpt)
     assert got.count() == 1
     assert bytes(got.collect()[0]["data"]) == b"only-this"
+
+
+# -- footer-stat pruning of the stream reader ------------------------------
+
+
+@pytest.fixture()
+def long_stream(tmp_path):
+    """Many small puts, so each shard holds many files."""
+    s = SimStream.create(str(tmp_path / "long"), n_shards=2)
+    for j in range(12):
+        s.put_records(
+            [(f"k{i}", f"p{j}-{i}".encode()) for i in range(5)],
+            ts=T0 + timedelta(minutes=j),
+        )
+    return s
+
+
+def _rows(reader, parts):
+    return sorted(
+        tuple(r.values())
+        for p in parts
+        for b in reader.read(p)
+        for r in b.to_pylist()
+    )
+
+
+def test_pruned_partitions_read_the_same_rows(long_stream):
+    import random
+
+    reader = pyds.KinesisSimStreamReader({"path": long_stream.path})
+    end = reader.latestOffset()
+    dirs = pyds._shard_dirs(long_stream.path)
+    rng = random.Random(7)
+    for _ in range(20):
+        start, stop = {}, {}
+        for s, e in end.items():
+            lo, hi = sorted(rng.randint(0, e) for _ in range(2))
+            start[s], stop[s] = lo, hi
+        parts = reader.partitions(start, stop)
+        unpruned = [
+            pyds.ShardPartition(
+                shard_id=s, files=pyds._shard_files(dirs[s]), lo=start[s], hi=stop[s]
+            )
+            for s in stop
+            if stop[s] > start[s]
+        ]
+        assert _rows(reader, parts) == _rows(reader, unpruned)
+        for p in parts:  # exactly the files holding a record of [lo, hi)
+            assert p.files == [
+                f
+                for f in pyds._shard_files(dirs[p.shard_id])
+                if any(p.lo <= q < p.hi for q in _seqs(f))
+            ]
+
+
+def _seqs(path):
+    import pyarrow.parquet as pq
+
+    return pq.read_table(path, columns=["sequence_number"])[0].to_pylist()
+
+
+def test_latest_offset_reads_each_footer_once(long_stream, monkeypatch):
+    reads = []
+    real = pyds._seq_range
+    monkeypatch.setattr(pyds, "_seq_range", lambda f: reads.append(f) or real(f))
+    reader = pyds.KinesisSimStreamReader({"path": long_stream.path})
+    first = reader.latestOffset()
+    n_files = len(reads)
+    assert n_files == len(set(reads)) == 24
+    assert reader.latestOffset() == first
+    assert len(reads) == n_files  # nothing re-read
+    long_stream.put_records([("k1", b"new")], ts=T0 + timedelta(hours=1))
+    later = reader.latestOffset()
+    assert len(reads) == n_files + 1  # only the new file's footer
+    assert sum(later.values()) == sum(first.values()) + 1
+    # a file that vanished drops out of the cache
+    gone = reads[0]
+    os.remove(gone)
+    reader.latestOffset()
+    assert all(gone not in r for r in reader.ranges._by_shard.values())
+
+
+def test_fresh_reader_plans_the_same_partitions(long_stream):
+    a = pyds.KinesisSimStreamReader({"path": long_stream.path})
+    end = a.latestOffset()
+    start = {s: e // 2 for s, e in end.items()}
+    b = pyds.KinesisSimStreamReader({"path": long_stream.path})  # restart
+    assert b.partitions(start, end) == a.partitions(start, end)
+
+
+def test_put_file_without_stats_is_read(long_stream):
+    import pyarrow.parquet as pq
+
+    shard = pyds._shard_dirs(long_stream.path)["shardId-000000000000"]
+    top = pyds._max_seq(pyds._SeqRanges().shard(shard))
+    f = os.path.join(shard, "put-nostats.parquet")
+    tbl = pq.read_table(pyds._shard_files(shard)[0]).slice(0, 1)
+    tbl = tbl.set_column(0, "sequence_number", pa.array([top + 1], pa.int64()))
+    pq.write_table(tbl, f, write_statistics=False)
+    assert pq.read_metadata(f).row_group(0).column(0).statistics is None
+    assert pyds._seq_range(f) == (top + 1, top + 1)
+    empty = os.path.join(shard, "put-empty.parquet")
+    pq.write_table(tbl.slice(0, 0), empty, write_statistics=False)
+    assert pyds._seq_range(empty) is None
+
+    reader = pyds.KinesisSimStreamReader({"path": long_stream.path})
+    end = reader.latestOffset()
+    assert end["shardId-000000000000"] == top + 2
+    start = {**end, "shardId-000000000000": top + 1}
+    (part,) = reader.partitions(start, end)
+    assert part.files == [f]
+    assert [r["sequence_number"] for b in reader.read(part) for r in b.to_pylist()] == [top + 1]

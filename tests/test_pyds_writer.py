@@ -163,3 +163,24 @@ def test_writer_follows_reshard(tmp_path):
     assert set(m2.max_seqs) <= children  # nothing written to the closed parent
     # both children received records (hash range split spreads keys)
     assert len(m2.max_seqs) == 2
+
+
+@pytest.mark.parametrize("path_name", ["put_records", "_task_put"])
+def test_failed_put_leaves_no_parquet_file(tmp_path, monkeypatch, path_name):
+    # Readers glob *.parquet: a put that dies mid-write must not leave a
+    # half-written file under that name (or any temp file) behind.
+    import pyarrow.parquet as pq
+
+    def torn_write(table, where, **kw):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise OSError("disk full")
+
+    path = _mk_stream(tmp_path)
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(OSError, match="disk full"):
+        if path_name == "put_records":
+            SimStream(path).put_records([("k1", b"v1")], ts=_TS)
+        else:
+            pyds._task_put([_batch(3)], path, _TS)
+    assert [f for _, _, fs in os.walk(os.path.join(path, "data")) for f in fs] == []

@@ -131,3 +131,33 @@ def test_dead_session_entries_are_swept(spark):
     # the live session's entries survive the sweep
     assert any(k[1] == "t_sweep_live" for k in shared._SHARED)
     release_shared()
+
+
+def _tiny_shuffled(spark):
+    return (
+        spark.range(100)
+        .repartition(32, "id")
+        .groupBy((F.col("id") % 7).alias("k"))
+        .count()
+    )
+
+
+def test_shared_frame_cache_is_sized_by_aqe(spark):
+    # A few-KB frame must not be stored in spark.sql.shuffle.partitions
+    # partitions: every later scan of it would run that many near-empty
+    # tasks.
+    release_shared()
+    df = shared_frame(spark, "t_aqe_sized", "/k1", lambda: _tiny_shuffled(spark))
+    assert df.rdd.getNumPartitions() < int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+    release_shared()
+
+
+def test_persist_leaves_session_conf_unchanged(spark):
+    release_shared()
+    before = spark.conf.get(shared._AQE_CACHED_PLAN)
+    shared_frame(spark, "t_conf_restored", "/k1", lambda: _tiny_shuffled(spark))
+    transient_persist(_tiny_shuffled(spark)).count()
+    assert spark.conf.get(shared._AQE_CACHED_PLAN) == before
+    release_shared()
