@@ -17,5 +17,6 @@ semantics, everything partition-aware for 100 TB scale.
 
 __version__ = "0.1.0"
 
+from . import _zipimport  # noqa: F401  (first: every worker importing the package gets it)
 from .session import get_session  # noqa: F401
 from .io import table, TABLES  # noqa: F401

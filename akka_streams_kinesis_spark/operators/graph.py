@@ -1045,14 +1045,14 @@ def graph_label_propagation_communities(
     over the cached edge partitions, one lazy plan materialized by the
     single final action. Per-round state is |V| rows regardless of |E|
     — the property that lets LPA run where modularity solvers can't."""
-    dir_edges = _purchase_dir_edges(spark, sf_dir)  # shared, checkpointed
+    dir_edges = _purchase_dir_edges(spark, sf_dir)  # shared, persisted on dst
     labels = _purchase_nodes(spark, sf_dir).select(
         "node", F.col("node").alias("label")
     )
     for _ in range(_LPA_ROUNDS):
         # label state is |V| rows (dimension-scale) — broadcast it so the
-        # checkpointed edge list is never shuffled per round; the only
-        # per-round exchange left is the (dst, label) count aggregate
+        # persisted edge list is never shuffled per round; it is
+        # partitioned on dst, so the (dst, label) count plans no exchange
         counts = (
             dir_edges.join(
                 F.broadcast(labels.withColumnRenamed("node", "src")), "src"
@@ -1155,8 +1155,9 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_PR_ITERS} fixed rounds, damping 85/100, top-25 suppliers.
 
     Scale shape: identical to graph_pagerank_purchases — the shared
-    purchase edge list (shared.py-cached) is localCheckpointed once,
-    every round is one |E| hash join + hash agg; the ONLY difference is
+    purchase edge list is persisted once, hash-partitioned on dst and
+    AQE-sized by shared._persist, so every round is one |E| broadcast
+    join + hash agg with no exchange; the ONLY difference is
     the teleport term, a row-local CASE on a precomputed is_seed flag.
     The seed set is a predicate, never a driver-collected list, so
     personalization costs nothing extra at 100 TB.

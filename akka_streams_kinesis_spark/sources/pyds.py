@@ -45,6 +45,16 @@ batches, never through the driver. Put files are published by rename
 (``kinesis_sim.write_put_file``), so a listed file is whole and never
 changes. The reader and the relay path persist no frame, so the
 AQE-sized caches of ``shared._persist`` play no part here.
+
+A stream→stream relay micro-batch makes 6 Python worker calls: the write
+planner (Spark 4.1 calls ``streamWriter`` again every batch), the commit
+runner, and one read and one put per shard task (2 shards). Each call
+starts with pyspark's ``importlib.invalidate_caches()``. On CPython < 3.13
+that re-read ``pyspark.zip`` once per zip importer: 80-118 ms of CPU per
+call in a process holding 12-13 of them, and 1.38 s of Python worker CPU
+per 1 000-record batch on a 4-core host. Every worker that unpickles this
+module imports the package, whose ``_zipimport`` re-reads an archive only
+when its stat changed: ~0.1 ms per call, 0.26 s of worker CPU per batch.
 """
 
 from __future__ import annotations
