@@ -61,20 +61,6 @@ _DF_CAP_CTES = f"""
 """
 
 
-def _cap_shingle_df(shingles: DataFrame) -> DataFrame:
-    """Drop shingle digests with df > _MAX_SHINGLE_DF before a self-join.
-
-    One extra hash-agg + join, both keyed on h — co-partitioned with the
-    self-join's own shuffle, so no additional exchange of the big side."""
-    rare = (
-        shingles.groupBy("h")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= _MAX_SHINGLE_DF)
-        .select("h")
-    )
-    return shingles.join(rare, "h")
-
-
 # ---------------------------------------------------------------------------
 # Shared 3-gram co-occurrence chain (r12): dedup_ngram_jaccard,
 # dedup_shingle_containment and dedup_pair_similarity_histogram each built

@@ -19,10 +19,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def has_pushed_filter(df: DataFrame, column: str) -> bool:
     """True when a predicate on ``column`` reached the parquet scan.
 
@@ -74,12 +70,6 @@ def num_shuffles(df: DataFrame) -> int:
 def uses_take_ordered(df: DataFrame) -> bool:
     """True when ORDER BY+LIMIT compiled to TakeOrdered (no global sort)."""
     return "TakeOrderedAndProject" in physical_plan(df)
-
-
-def assert_scales(df: DataFrame, forbid_cartesian: bool = True) -> None:
-    """Cheap guardrail for registry queries: no cartesian products."""
-    if forbid_cartesian and join_strategies(df)["cartesian"]:
-        raise AssertionError(f"cartesian product in plan:\n{physical_plan(df)}")
 
 
 def _jplan_children(node):

@@ -33,6 +33,14 @@ shard_id means Spark plans one file-scan partition per shard — the exact
 analog of "one poll loop per shard" (KinesisSource.scala:211-223) — and
 shard-pruning filters never touch other shards' files.
 
+Each put file is named ``put-<first:020d>-<last:020d>-<uuid>.parquet``,
+where first and last are the smallest and largest ``sequence_number`` it
+holds (``write_put_file``). The name is the file's cursor range, as a
+Kinesis sequence number addresses a record without reading it: the pyds
+reader plans from names alone (``put_files``), and names sort by first
+sequence number. Every ``*.parquet`` in a shard dir must carry such a
+name; ``put_file_range`` rejects any other.
+
 At real scale this layout IS the standard pattern (a Kafka/Kinesis landing
 zone in object storage, partitioned by shard/partition-id); every operator
 downstream is ordinary Structured Streaming.
@@ -40,8 +48,10 @@ downstream is ordinary Structured Streaming.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -75,12 +85,16 @@ RECORD_SCHEMA = StructType(
 def write_put_file(shard_dir: str, seqs, pks, datas, naive_ts: datetime) -> str:
     """Publish one put file of ``(seqs[i], pks[i], datas[i])`` records
     arrived at ``naive_ts``. It is written under a dot-prefixed temp name,
-    which readers skip, and renamed to ``put-<uuid>.parquet`` once whole:
-    a reader never lists a half-written file, and a file it lists never
-    changes. A failed write leaves nothing behind."""
+    which readers skip, and renamed to its put-file name (module doc) once
+    whole: a reader never lists a half-written file, and a file it lists
+    never changes. A failed write leaves nothing behind. An empty put has
+    no sequence range to name, so it is refused."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    if len(seqs) == 0:
+        raise ValueError(f"empty put to {shard_dir}: a put file holds at least one record")
     tbl = pa.table(
         {
             "sequence_number": pa.array(seqs, pa.int64()),
@@ -90,7 +104,8 @@ def write_put_file(shard_dir: str, seqs, pks, datas, naive_ts: datetime) -> str:
         }
     )
     os.makedirs(shard_dir, exist_ok=True)
-    name = f"put-{uuid.uuid4().hex}.parquet"
+    mm = pc.min_max(tbl["sequence_number"]).as_py()
+    name = f"put-{mm['min']:020d}-{mm['max']:020d}-{uuid.uuid4().hex}.parquet"
     final, tmp = os.path.join(shard_dir, name), os.path.join(shard_dir, f".{name}.tmp")
     try:
         pq.write_table(tbl, tmp)
@@ -100,6 +115,29 @@ def write_put_file(shard_dir: str, seqs, pks, datas, naive_ts: datetime) -> str:
             os.remove(tmp)
         raise
     return final
+
+
+_PUT_NAME = re.compile(r"put-(\d{20})-(\d{20})-[0-9a-f]{32}\.parquet")
+
+
+def put_file_range(path: str) -> tuple[int, int]:
+    """(first, last) sequence number of one put file, read from its name."""
+    m = _PUT_NAME.fullmatch(os.path.basename(path))
+    if m is None:
+        raise ValueError(
+            f"{path} is not a put file: a shard dir holds only "
+            "put-<first:020d>-<last:020d>-<uuid>.parquet files"
+        )
+    return int(m[1]), int(m[2])
+
+
+def put_files(shard_dir: str) -> dict[str, tuple[int, int]]:
+    """Every put file of one shard dir → its (first, last) sequence range,
+    in ascending order of first. Lists the dir; opens no file."""
+    return {
+        f: put_file_range(f)
+        for f in sorted(glob.glob(os.path.join(shard_dir, "*.parquet")))
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -491,7 +529,7 @@ class SimStream:
             naive = _as_utc_naive(since)
             return df.filter(F.col("ts") >= F.lit(naive))
         if isinstance(iterator, Latest):
-            floors = self.sequence_floors(spark)
+            floors = self.sequence_floors()
             if not floors:
                 return df
             floor_df = spark.createDataFrame(
@@ -504,18 +542,16 @@ class SimStream:
             )
         raise TypeError(f"unknown iterator type {iterator!r}")
 
-    def sequence_floors(self, spark: SparkSession) -> dict[str, int]:
-        """Current max sequence number per shard — the checkpointable cursor
-        (S8/S9: ShardIterator's reissue token is exactly this)."""
-        if not os.path.isdir(self.data_dir) or not os.listdir(self.data_dir):
-            return {}
-        rows = (
-            self._scan(spark, streaming=False, max_files=None)
-            .groupBy("shard_id")
-            .agg(F.max("sequence_number").alias("m"))
-            .collect()
-        )
-        return {r["shard_id"]: r["m"] for r in rows}
+    def sequence_floors(self) -> dict[str, int]:
+        """Current max sequence number per shard that holds a record — the
+        checkpointable cursor (S8/S9: ShardIterator's reissue token is
+        exactly this), read from the put files' names."""
+        floors = {}
+        for shard_dir in glob.glob(os.path.join(self.data_dir, "shard_id=*")):
+            lasts = [last for _, last in put_files(shard_dir).values()]
+            if lasts:
+                floors[shard_dir.rsplit("shard_id=", 1)[1]] = max(lasts)
+        return floors
 
     def read_batch(
         self,

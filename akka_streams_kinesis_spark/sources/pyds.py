@@ -34,17 +34,19 @@ Options:
                      min(since, now) (`KinesisSource.scala:100-102`; the
                      reference injects java.time.Clock the same way)
 
-Scale notes: each reader keeps the (min, max) sequence number of every
-put file it has seen, read once from the parquet footer (``_SeqRanges``),
-so a stream trigger's ``latestOffset`` reads only the footers of new files
-and ``partitions()`` ships only the files whose range overlaps the batch's
-``[lo, hi)``. ``latest`` resolution reads no data; ``at_timestamp`` reads
-the sequence_number/ts columns of a shard's oldest files until none can
-hold an earlier match. All record bytes flow executor-side as Arrow
-batches, never through the driver. Put files are published by rename
-(``kinesis_sim.write_put_file``), so a listed file is whole and never
-changes. The reader and the relay path persist no frame, so the
-AQE-sized caches of ``shared._persist`` play no part here.
+Scale notes: a put file's name carries its (first, last) sequence range
+(``kinesis_sim`` "Data layout"), so ``latestOffset``, ``partitions()`` and
+``latest`` resolution list each shard dir and open no put file; a reader
+keeps no per-file state. ``partitions()`` ships only the files whose range
+overlaps the batch's ``[lo, hi)``. ``at_timestamp`` reads the
+sequence_number/ts columns of a shard's oldest files, once, when the
+reader starts, until none can hold an earlier match. A listing still costs
+O(files in the shard dir), and a stream trigger lists every shard twice
+(``latestOffset`` and ``partitions``). All record bytes flow executor-side
+as Arrow batches, never through the driver. Put files are published by
+rename (``kinesis_sim.write_put_file``), so a listed file is whole and never
+changes. The reader and the relay path persist no frame, so the AQE-sized
+caches of ``shared._persist`` play no part here.
 
 A stream→stream relay micro-batch makes 6 Python worker calls: the write
 planner (Spark 4.1 calls ``streamWriter`` again every batch), the commit
@@ -84,6 +86,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .kinesis_sim import hash_key_for_partition_key, put_files, write_put_file
+
 FORMAT_NAME = "kinesis_sim_py"
 
 SCHEMA = StructType(
@@ -115,55 +119,16 @@ def _shard_dirs(path: str) -> dict[str, str]:
 
 
 def _shard_files(shard_dir: str) -> list[str]:
-    return sorted(glob.glob(os.path.join(shard_dir, "*.parquet")))
+    return list(put_files(shard_dir))
 
 
-def _seq_range(path: str) -> tuple[int, int] | None:
-    """(min, max) sequence number of one put file, from its parquet footer
-    statistics; reads the column when a row group has none. None for a
-    file without rows."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    md = pq.read_metadata(path)
-    col = md.schema.names.index("sequence_number")
-    stats = [md.row_group(i).column(col).statistics for i in range(md.num_row_groups)]
-    if any(st is None or not st.has_min_max for st in stats):
-        mm = pc.min_max(pq.read_table(path, columns=["sequence_number"])[0]).as_py()
-        return None if mm["min"] is None else (mm["min"], mm["max"])
-    if not stats:
-        return None
-    return min(st.min for st in stats), max(st.max for st in stats)
+def _end(ranges: dict[str, tuple[int, int]]) -> int:
+    """Next sequence number of one shard, from its ``put_files`` ranges:
+    one past the largest last, 0 for a shard without files."""
+    return max((last for _, last in ranges.values()), default=-1) + 1
 
 
-class _SeqRanges:
-    """Per-reader footer cache: shard dir → {put file → _seq_range}.
-
-    A put file is published whole under its final name and never changes
-    (see ``kinesis_sim.write_put_file``), so each footer is read once per
-    reader; a listing keeps only the files that still exist."""
-
-    def __init__(self) -> None:
-        self._by_shard: dict[str, dict[str, tuple[int, int] | None]] = {}
-
-    def shard(self, shard_dir: str) -> dict[str, tuple[int, int] | None]:
-        seen = self._by_shard.get(shard_dir, {})
-        cur = {
-            f: seen[f] if f in seen else _seq_range(f)
-            for f in _shard_files(shard_dir)
-        }
-        self._by_shard[shard_dir] = cur
-        return cur
-
-
-def _max_seq(ranges: dict[str, tuple[int, int] | None]) -> int | None:
-    """Max sequence number over one shard's ``_SeqRanges.shard`` entry."""
-    return max((r[1] for r in ranges.values() if r is not None), default=None)
-
-
-def _first_seq_at_or_after(
-    ranges: dict[str, tuple[int, int] | None], since: datetime
-) -> int | None:
+def _first_seq_at_or_after(shard_dir: str, since: datetime) -> int | None:
     """Smallest sequence number whose ts >= since (arrival-time positioning:
     AT_TIMESTAMP reads from the first record that arrived at/after t).
     Files are read in ascending order of their smallest sequence number,
@@ -171,10 +136,8 @@ def _first_seq_at_or_after(
     import pyarrow.parquet as pq
 
     best: int | None = None
-    for f, r in sorted(
-        ((f, r) for f, r in ranges.items() if r is not None), key=lambda x: x[1]
-    ):
-        if best is not None and r[0] >= best:
+    for f, (first, _) in put_files(shard_dir).items():
+        if best is not None and first >= best:
             break
         t = pq.read_table(f, columns=["sequence_number", "ts"])
         for seq, ts in zip(
@@ -369,10 +332,10 @@ class KinesisSimBatchReader(DataSourceReader):
             dirs = {s: d for s, d in dirs.items() if s in self.wanted_shards}
         parts = []
         for shard_id, d in dirs.items():
-            p = ShardPartition(shard_id=shard_id, files=_shard_files(d))
+            ranges = put_files(d)
+            p = ShardPartition(shard_id=shard_id, files=list(ranges))
             if self.position == "latest":
-                m = _max_seq(_SeqRanges().shard(d))
-                p.lo = 0 if m is None else m + 1  # nothing newer yet
+                p.lo = _end(ranges)  # nothing newer yet
             elif self.position.startswith("at_timestamp:"):
                 since = _parse_iso(self.position.split(":", 1)[1])
                 now = self.now or datetime.utcnow()
@@ -395,33 +358,27 @@ class KinesisSimStreamReader(DataSourceStreamReader):
         self.path = options["path"]
         self.position = options.get("starting_position", "trim_horizon").lower()
         self.now = _parse_iso(options["now"]) if "now" in options else None
-        # footer cache: a trigger reads only the footers of new put files
-        self.ranges = _SeqRanges()
         # S17 seam: fault-injectable read client (fake-client tests)
         self.read_file = read_file
         self.sleep_fn = sleep_fn
 
-    def _end(self, shard_dir: str) -> int:
-        m = _max_seq(self.ranges.shard(shard_dir))
-        return (m if m is not None else -1) + 1
-
     def initialOffset(self) -> dict:
         dirs = _shard_dirs(self.path)
         if self.position == "latest":
-            return {s: self._end(d) for s, d in dirs.items()}
+            return {s: _end(put_files(d)) for s, d in dirs.items()}
         if self.position.startswith("at_timestamp:"):
             since = _parse_iso(self.position.split(":", 1)[1])
             now = self.now or datetime.utcnow()
             since = min(since, now)
             out = {}
             for s, d in dirs.items():
-                first = _first_seq_at_or_after(self.ranges.shard(d), since)
-                out[s] = self._end(d) if first is None else first
+                first = _first_seq_at_or_after(d, since)
+                out[s] = _end(put_files(d)) if first is None else first
             return out
         return {s: 0 for s in dirs}  # trim_horizon
 
     def latestOffset(self) -> dict:
-        return {s: self._end(d) for s, d in _shard_dirs(self.path).items()}
+        return {s: _end(put_files(d)) for s, d in _shard_dirs(self.path).items()}
 
     def partitions(self, start: dict, end: dict) -> list[ShardPartition]:
         parts = []
@@ -430,11 +387,10 @@ class KinesisSimStreamReader(DataSourceStreamReader):
             lo = int(start.get(shard_id, 0))  # unseen shard ⇒ from its start (S7)
             hi = int(hi)
             if hi > lo and shard_id in dirs:
-                ranges = self.ranges.shard(dirs[shard_id])
                 files = [
                     f
-                    for f, r in ranges.items()
-                    if r is not None and r[1] >= lo and r[0] < hi
+                    for f, (first, last) in put_files(dirs[shard_id]).items()
+                    if last >= lo and first < hi
                 ]
                 parts.append(
                     ShardPartition(shard_id=shard_id, files=files, lo=lo, hi=hi)
@@ -577,7 +533,6 @@ def _task_put(
     from pyspark import TaskContext
 
     from ..streaming.writer import AWS_MAX_BUFFER_SIZE, _flush_chunk
-    from .kinesis_sim import hash_key_for_partition_key, write_put_file
 
     put_fn = put_client or _success_put
     sleep = sleep_fn or _time.sleep

@@ -205,14 +205,6 @@ class Snapshot:
     def files(self, tbl: str) -> dict[str, str]:
         return self.manifest["tables"][tbl]
 
-    def _paths(self, tbl: str, keep=None) -> list[str]:
-        base = posixpath.join(self.root, tbl)
-        return [
-            posixpath.join(base, key, fname)
-            for key, fname in sorted(self.files(tbl).items())
-            if keep is None or keep(key)
-        ]
-
     def _read(
         self, spark: SparkSession, tbl: str, schema: StructType, keep=None
     ) -> DataFrame:

@@ -9,10 +9,13 @@ be committed for rounds where the driver gate samples a subset."""
 
 from __future__ import annotations
 
+import atexit
 import json
 import math
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -92,7 +95,16 @@ def main():
     print(f"entry(): {n} rows, schema={edf.schema.simpleString()[:120]} [{time.time()-t0:.1f}s]")
     assert n > 0
 
+    # DuckDB spills to its own temp dir, capped at half the disk that was
+    # free at start: an oracle that outgrows it fails alone and by name
+    # instead of filling the disk under other gates' state-store commits.
+    spill = tempfile.mkdtemp(prefix="driver_sim_duckdb_")
+    atexit.register(shutil.rmtree, spill, True)
+    cap_mib = shutil.disk_usage(spill).free // 2 // 2**20
     con = duckdb.connect()
+    con.execute(f"SET temp_directory = '{spill}'")
+    con.execute(f"SET max_temp_directory_size = '{cap_mib}MiB'")
+    print(f"duckdb spill: {spill}, capped at {cap_mib} MiB")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 

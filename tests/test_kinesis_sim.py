@@ -89,7 +89,7 @@ def test_latest_ignores_existing_records(spark, stream):
     df_latest = stream.read_batch(spark, Latest())
     assert df_latest.count() == 0
     # records arriving after the position resolve ARE seen
-    floors = stream.sequence_floors(spark)
+    floors = stream.sequence_floors()
     stream.put_records(make_records("after", 3))
     seen = stream.read_batch(spark, Latest())  # new resolve — only for this assert
     # a fresh Latest ignores those too; use the captured floors to emulate a
@@ -274,3 +274,48 @@ def test_naive_put_timestamp_treated_as_utc(tmp_path):
     files = _glob.glob(os.path.join(s.data_dir, "shard_id=*", "*.parquet"))
     stored = {v.as_py() for f in files for v in pq.read_table(f)["ts"]}
     assert stored == {naive}
+
+
+def test_write_put_file_refuses_empty_put(tmp_path):
+    from akka_streams_kinesis_spark.sources.kinesis_sim import write_put_file
+
+    shard = str(tmp_path / "shard_id=s")
+    with pytest.raises(ValueError, match="empty put"):
+        write_put_file(shard, [], [], [], datetime(2024, 1, 1))
+    assert not os.path.exists(shard)
+
+
+def _name_and_data_ranges(stream):
+    import glob as _glob
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from akka_streams_kinesis_spark.sources.kinesis_sim import put_file_range
+
+    out = []
+    for f in _glob.glob(os.path.join(stream.data_dir, "shard_id=*", "*.parquet")):
+        mm = pc.min_max(pq.read_table(f)["sequence_number"]).as_py()
+        out.append((put_file_range(f), (mm["min"], mm["max"])))
+    return out
+
+
+def test_put_file_names_carry_the_data_range(spark, tmp_path):
+    from akka_streams_kinesis_spark.sources import pyds
+
+    rows = [(f"user{i % 13}", f"rec-{i:04d}".encode()) for i in range(120)]
+    df = spark.createDataFrame(rows, "partition_key string, data binary")
+    driver = SimStream.create(str(tmp_path / "driver"), n_shards=2)
+    driver.put_records(rows[:60])
+    driver.put_records(rows[60:])
+    dist = SimStream.create(str(tmp_path / "dist"), n_shards=2)
+    dist.put_records_distributed(df.repartition(4))
+    sink = SimStream.create(str(tmp_path / "sink"), n_shards=3)
+    pyds.register(spark)
+    df.repartition(3).write.format(pyds.FORMAT_NAME).option("path", sink.path).mode(
+        "append"
+    ).save()
+    for s in (driver, dist, sink):
+        pairs = _name_and_data_ranges(s)
+        assert len(pairs) >= 2
+        assert all(name == data for name, data in pairs), pairs

@@ -11,9 +11,9 @@ follow while reading (:184-195).
 from __future__ import annotations
 
 import os
+import re
 from datetime import datetime, timedelta
 
-import pyarrow as pa
 import pytest
 
 from akka_streams_kinesis_spark.sources import pyds
@@ -186,7 +186,7 @@ def test_stream_latest_skips_history(spark, stream, tmp_path):
     assert bytes(got.collect()[0]["data"]) == b"only-this"
 
 
-# -- footer-stat pruning of the stream reader ------------------------------
+# -- planning from put-file names ------------------------------------------
 
 
 @pytest.fixture()
@@ -245,27 +245,6 @@ def _seqs(path):
     return pq.read_table(path, columns=["sequence_number"])[0].to_pylist()
 
 
-def test_latest_offset_reads_each_footer_once(long_stream, monkeypatch):
-    reads = []
-    real = pyds._seq_range
-    monkeypatch.setattr(pyds, "_seq_range", lambda f: reads.append(f) or real(f))
-    reader = pyds.KinesisSimStreamReader({"path": long_stream.path})
-    first = reader.latestOffset()
-    n_files = len(reads)
-    assert n_files == len(set(reads)) == 24
-    assert reader.latestOffset() == first
-    assert len(reads) == n_files  # nothing re-read
-    long_stream.put_records([("k1", b"new")], ts=T0 + timedelta(hours=1))
-    later = reader.latestOffset()
-    assert len(reads) == n_files + 1  # only the new file's footer
-    assert sum(later.values()) == sum(first.values()) + 1
-    # a file that vanished drops out of the cache
-    gone = reads[0]
-    os.remove(gone)
-    reader.latestOffset()
-    assert all(gone not in r for r in reader.ranges._by_shard.values())
-
-
 def test_fresh_reader_plans_the_same_partitions(long_stream):
     a = pyds.KinesisSimStreamReader({"path": long_stream.path})
     end = a.latestOffset()
@@ -274,25 +253,38 @@ def test_fresh_reader_plans_the_same_partitions(long_stream):
     assert b.partitions(start, end) == a.partitions(start, end)
 
 
-def test_put_file_without_stats_is_read(long_stream):
+def test_planning_opens_no_put_file(long_stream, monkeypatch):
     import pyarrow.parquet as pq
 
-    shard = pyds._shard_dirs(long_stream.path)["shardId-000000000000"]
-    top = pyds._max_seq(pyds._SeqRanges().shard(shard))
-    f = os.path.join(shard, "put-nostats.parquet")
-    tbl = pq.read_table(pyds._shard_files(shard)[0]).slice(0, 1)
-    tbl = tbl.set_column(0, "sequence_number", pa.array([top + 1], pa.int64()))
-    pq.write_table(tbl, f, write_statistics=False)
-    assert pq.read_metadata(f).row_group(0).column(0).statistics is None
-    assert pyds._seq_range(f) == (top + 1, top + 1)
-    empty = os.path.join(shard, "put-empty.parquet")
-    pq.write_table(tbl.slice(0, 0), empty, write_statistics=False)
-    assert pyds._seq_range(empty) is None
+    def refuse(*a, **k):
+        raise AssertionError(f"planning opened a put file: {a[:1]}")
 
     reader = pyds.KinesisSimStreamReader({"path": long_stream.path})
+    start = reader.initialOffset()
+    latest = pyds.KinesisSimBatchReader(
+        {"path": long_stream.path, "starting_position": "latest"}
+    )
+    for name in ("read_metadata", "read_table", "ParquetFile"):
+        monkeypatch.setattr(pq, name, refuse)
     end = reader.latestOffset()
-    assert end["shardId-000000000000"] == top + 2
-    start = {**end, "shardId-000000000000": top + 1}
-    (part,) = reader.partitions(start, end)
-    assert part.files == [f]
-    assert [r["sequence_number"] for b in reader.read(part) for r in b.to_pylist()] == [top + 1]
+    assert sum(end.values()) == 60
+    parts = reader.partitions(start, end)
+    assert sum(len(p.files) for p in parts) == 24
+    assert {p.shard_id: p.lo for p in latest.partitions()} == end
+
+
+def test_foreign_parquet_in_shard_dir_is_rejected(stream):
+    import pyarrow.parquet as pq
+
+    shard = pyds._shard_dirs(stream.path)["shardId-000000000000"]
+    foreign = os.path.join(shard, "part-0000.parquet")
+    pq.write_table(pq.read_table(pyds._shard_files(shard)[0]), foreign)
+    reader = pyds.KinesisSimStreamReader({"path": stream.path})
+    with pytest.raises(ValueError, match=re.escape(foreign)):
+        reader.latestOffset()
+    with pytest.raises(ValueError, match=re.escape(foreign)):
+        reader.partitions({}, {"shardId-000000000000": 1})
+    with pytest.raises(ValueError, match=re.escape(foreign)):
+        pyds.KinesisSimBatchReader({"path": stream.path}).partitions()
+    with pytest.raises(ValueError, match=re.escape(foreign)):
+        stream.sequence_floors()
