@@ -32,7 +32,7 @@ from ..functions import div_round4
 from ..io import derived_dir, table
 from ..registry import query
 from ..shared import _persist, scratch_dir, transient_persist
-from ..sources.kinesis_sim import AtTimestamp, SimStream, TrimHorizon
+from ..sources.kinesis_sim import AtTimestamp, SimStream, TrimHorizon, put_files
 from ..streaming.drain import drain
 from ..streaming.windows import (
     decode_json_payload,
@@ -74,11 +74,10 @@ def _materialize_events_stream(
     return SimStream(derived_dir(spark, sf_dir, f"stream_{flavor}", build))
 
 
-def _n_files(stream: SimStream) -> int:
-    """Data files in a local stream (driver-side walk, build-time only)."""
-    return sum(
-        f.endswith(".parquet") for _, _, files in os.walk(stream.data_dir) for f in files
-    )
+def _put_files(stream: SimStream) -> list[str]:
+    """Every put file of a local stream (driver-side listing, build-time
+    only)."""
+    return [f for d in stream.shard_dirs().values() for f in put_files(d)]
 
 
 # Arrival timestamps for the two-phase produce scenarios (arrival time is
@@ -389,7 +388,7 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     # Pinning the batch COUNT keeps commits × state linear. Batches ≥ one
     # slice stay drop-safe: watermark lags one batch, and cross-batch
     # lateness stays ≤ one slice width < the delay.
-    n_files = _n_files(stream)
+    n_files = len(_put_files(stream))
     per_trigger = max(4, -(-n_files // 12))
     records = stream.read_stream(
         spark, TrimHorizon(), max_files_per_trigger=per_trigger
@@ -1772,7 +1771,7 @@ def _session_timeout_drain(
     from ..streaming.stateful import sessions_by_timeout
 
     stream = _materialize_sliced_stream(spark, sf_dir, flavor="sliced12")
-    n_files = _n_files(stream)
+    n_files = len(_put_files(stream))
     records = stream.read_stream(
         spark, TrimHorizon(), max_files_per_trigger=max(4, -(-n_files // 12))
     )
@@ -1988,7 +1987,7 @@ def _ann_upserts_df(
     store."""
     from ..streaming.ann_index import sign_code
 
-    n_files = _n_files(stream)
+    n_files = len(_put_files(stream))
     records = stream.read_stream(
         spark, TrimHorizon(), max_files_per_trigger=max(1, -(-n_files // 2))
     )
@@ -3160,21 +3159,16 @@ def _first_put_file_count(stream: SimStream) -> int:
     at sf1 the first put spans >half the files — and chopping
     invariance of the INDEX is property-tested separately; time-travel
     semantics need the semantic boundary.) Build-time-only driver-side
-    walk of the local stream cache, same discipline as
+    listing of the local stream cache, same discipline as
     _ann_upserts_df's file count."""
     import pyarrow.parquet as pq
 
     want = _T1.replace(tzinfo=None)
     n = 0
-    for dirpath, _, files in os.walk(stream.data_dir):
-        for fname in files:
-            if not fname.endswith(".parquet"):
-                continue
-            ts = pq.read_table(
-                os.path.join(dirpath, fname), columns=["ts"]
-            )["ts"]
-            if len(ts) and ts[0].as_py() == want:
-                n += 1
+    for f in _put_files(stream):
+        ts = pq.read_table(f, columns=["ts"])["ts"]
+        if len(ts) and ts[0].as_py() == want:
+            n += 1
     return n
 
 

@@ -26,12 +26,33 @@ S17 handleResult error dispatch (KinesisSource.scala:290-302)      pyds._read_pa
 S18 EagerTerminateOutput (cancel ⇒ stop)                           query.stop()
 ================================================================  =========
 
-Data layout: ``<path>/shards.json`` holds the shard lineage DAG (the
-describe-stream result); ``<path>/data/shard_id=<id>/*.parquet`` holds
-records ``(sequence_number, partition_key, data, ts)``. Hive partitioning by
+Data layout: ``<path>/shards.json`` is the control plane (the
+describe-stream result plus the sequence counters). It holds
+``next_shard``, the number the next new shard id takes, and ``shards``,
+one entry per shard ever created:
+
+  ``shard_id``                    ``shardId-<n:012d>``
+  ``parent_shard_id``             the shard it was split or merged from
+  ``adjacent_parent_shard_id``    a merge's second parent (else null)
+  ``starting_hash_key``,          the inclusive md5 hash-key range it owns,
+  ``ending_hash_key``             as decimal strings
+  ``closed``                      true once split or merged away; only open
+                                  shards take puts
+  ``next_seq``                    the first sequence number the next put
+                                  to it may use
+
+``SimStream`` alone reads and writes it (``_meta``/``_write_meta``, by
+rename), routes a partition key to its shard (``shard_router``), reserves
+sequence numbers, and says where each shard's files are (``shard_dir``,
+``shard_dirs``) and where each shard ends (``next_sequence_numbers``).
+
+``<path>/data/shard_id=<id>/*.parquet`` holds records
+``(sequence_number, partition_key, data, ts)``. Hive partitioning by
 shard_id means Spark plans one file-scan partition per shard — the exact
 analog of "one poll loop per shard" (KinesisSource.scala:211-223) — and
-shard-pruning filters never touch other shards' files.
+shard-pruning filters never touch other shards' files. A shard gets its
+dir with its first put, so a shard in ``shards.json`` without a dir holds
+no record.
 
 Each put file is named ``put-<first:020d>-<last:020d>-<uuid>.parquet``,
 where first and last are the smallest and largest ``sequence_number`` it
@@ -56,6 +77,7 @@ import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 from hashlib import md5
+from typing import Callable, Iterable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -138,6 +160,12 @@ def put_files(shard_dir: str) -> dict[str, tuple[int, int]]:
         f: put_file_range(f)
         for f in sorted(glob.glob(os.path.join(shard_dir, "*.parquet")))
     }
+
+
+def next_sequence_number(files: dict[str, tuple[int, int]]) -> int:
+    """Where one shard ends, from its ``put_files``: one past the largest
+    last sequence number, 0 for a shard without files."""
+    return max((last for _, last in files.values()), default=-1) + 1
 
 
 # ---------------------------------------------------------------------------
@@ -228,7 +256,7 @@ def _as_utc_naive(ts: datetime) -> datetime:
     """Normalize a datetime to naive-UTC. Naive input is TREATED as UTC —
     calling astimezone() on a naive value would interpret it in the
     machine's local zone and silently shift arrival timestamps, while the
-    read side (_parse_iso, AtTimestamp) treats naive as UTC."""
+    read side (the pyds options, AtTimestamp) treats naive as UTC."""
     if ts.tzinfo is None:
         return ts
     return ts.astimezone(timezone.utc).replace(tzinfo=None)
@@ -238,6 +266,31 @@ def hash_key_for_partition_key(pk: str) -> int:
     """Kinesis-style placement: md5(partition_key) as a 128-bit int mapped
     into a shard's [starting_hash_key, ending_hash_key] range."""
     return int(md5(pk.encode("utf-8")).hexdigest(), 16)
+
+
+def shard_router(shards: list[dict]) -> Callable[[str], str]:
+    """partition key → id of the open shard whose hash range holds its hash
+    key. The open shards' ranges are parsed once, here, and the router
+    pickles with them to executors. A hash no open shard covers (say, a
+    hand-edited ``shards.json``) raises a ``RuntimeError`` naming the key
+    and the open ranges."""
+    ranges = [
+        (s["shard_id"], int(s["starting_hash_key"]), int(s["ending_hash_key"]))
+        for s in shards
+        if not s["closed"]
+    ]
+
+    def route(pk: str) -> str:
+        h = hash_key_for_partition_key(pk)
+        for sid, lo, hi in ranges:
+            if lo <= h <= hi:
+                return sid
+        raise RuntimeError(
+            f"no open shard covers hash key {h} for partition key {pk!r}; "
+            f"open ranges: {ranges}"
+        )
+
+    return route
 
 
 # ---------------------------------------------------------------------------
@@ -311,35 +364,80 @@ class SimStream:
     def open_shards(self) -> list[dict]:
         return [s for s in self._meta()["shards"] if not s["closed"]]
 
+    def advance_next_seq(self, max_seqs: Iterable[dict[str, int]]) -> None:
+        """Raise each shard's next_seq past the largest sequence number a
+        put job wrote to it (``max_seqs``: one shard → max map per task),
+        so the next job starts above it. One read and one write of
+        ``shards.json``."""
+        meta = self._meta()
+        by_id = {s["shard_id"]: s for s in meta["shards"]}
+        for m in max_seqs:
+            for sid, mx in m.items():
+                by_id[sid]["next_seq"] = max(int(by_id[sid]["next_seq"]), mx + 1)
+        self._write_meta(meta)
+
+    @staticmethod
+    def _reserve(meta: dict, counts: dict[str, int]) -> dict[str, int]:
+        """Reserve ``counts[shard_id]`` dense sequence numbers on each
+        shard of ``meta``: returns each shard's first and moves its next_seq
+        past the last. The caller writes ``meta`` back."""
+        bases = {}
+        for s in meta["shards"]:
+            if s["shard_id"] in counts:
+                bases[s["shard_id"]] = s["next_seq"]
+                s["next_seq"] += counts[s["shard_id"]]
+        return bases
+
+    # -- where each shard's records are ------------------------------------
+
+    def shard_dir(self, shard_id: str) -> str:
+        return os.path.join(self.data_dir, f"shard_id={shard_id}")
+
+    def shard_dirs(self) -> dict[str, str]:
+        """shard_id → its data dir, for every shard that has one, in shard
+        id order. One listing of ``data``."""
+        return {
+            d.rsplit("shard_id=", 1)[1]: d
+            for d in sorted(glob.glob(self.shard_dir("*")))
+        }
+
+    def next_sequence_numbers(self) -> dict[str, int]:
+        """shard_id → the sequence number after its last record, for every
+        shard dir (``next_sequence_number``): the stream's end, and the
+        checkpointable resume cursor (S8/S9). Read from the put files'
+        names; opens no file."""
+        return {
+            sid: next_sequence_number(put_files(d))
+            for sid, d in self.shard_dirs().items()
+        }
+
     # -- produce (test harness / FilePut sink target) ----------------------
 
     def put_records(self, records: list[tuple[str, bytes]], ts: datetime | None = None) -> list[dict]:
         """Append (partition_key, data) records: hash each key into an open
         shard's hash range, assign the shard's next sequence numbers, write
         one parquet file per touched shard. Returns per-record placement
-        (shard_id, sequence_number) like PutRecords result entries."""
+        (shard_id, sequence_number) like PutRecords result entries, in
+        input order."""
         meta = self._meta()
-        open_shards = [s for s in meta["shards"] if not s["closed"]]
-        ts = ts or datetime.now(timezone.utc)
-        placed: dict[str, list[tuple[int, str, bytes]]] = {}
-        results = []
-        for pk, data in records:
-            h = hash_key_for_partition_key(pk)
-            shard = next(
-                s
-                for s in open_shards
-                if int(s["starting_hash_key"]) <= h <= int(s["ending_hash_key"])
-            )
-            seq = shard["next_seq"]
-            shard["next_seq"] = seq + 1
-            placed.setdefault(shard["shard_id"], []).append((seq, pk, data))
-            results.append({"shard_id": shard["shard_id"], "sequence_number": seq})
-        for shard_id, rows in placed.items():
-            seqs, pks, datas = zip(*rows)
+        route = shard_router(meta["shards"])
+        naive_ts = _as_utc_naive(ts or datetime.now(timezone.utc))
+        placed: dict[str, list[int]] = {}
+        for i, (pk, _) in enumerate(records):
+            placed.setdefault(route(pk), []).append(i)
+        bases = self._reserve(meta, {sid: len(ix) for sid, ix in placed.items()})
+        results: list = [None] * len(records)
+        for sid, ix in placed.items():
+            seqs = range(bases[sid], bases[sid] + len(ix))
             write_put_file(
-                os.path.join(self.data_dir, f"shard_id={shard_id}"),
-                seqs, pks, datas, _as_utc_naive(ts),
+                self.shard_dir(sid),
+                seqs,
+                [records[i][0] for i in ix],
+                [records[i][1] for i in ix],
+                naive_ts,
             )
+            for i, seq in zip(ix, seqs):
+                results[i] = {"shard_id": sid, "sequence_number": seq}
         self._write_meta(meta)
         return results
 
@@ -354,8 +452,8 @@ class SimStream:
 
         Three phases, honoring the same per-shard monotonic sequence
         contract as put_records:
-        1. executors assign each record its shard via the identical
-           partition-key hash (Arrow-batched);
+        1. executors assign each record its shard via the same
+           ``shard_router`` (Arrow-batched);
         2. the driver reserves one contiguous sequence range per shard in
            the control-plane metadata (a per-shard count is the only thing
            collected);
@@ -368,66 +466,53 @@ class SimStream:
         from typing import Iterator
 
         meta = self._meta()
-        ranges = [
-            (s["shard_id"], int(s["starting_hash_key"]), int(s["ending_hash_key"]))
-            for s in meta["shards"]
-            if not s["closed"]
-        ]
-        ts = ts or datetime.now(timezone.utc)
-        naive_ts = _as_utc_naive(ts)
-        data_dir = self.data_dir
+        route = shard_router(meta["shards"])
+        naive_ts = _as_utc_naive(ts or datetime.now(timezone.utc))
+        shard_dir = self.shard_dir
 
         def _assign(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
             for b in batches:
-                shard_ids = []
-                for pk in b["partition_key"]:
-                    h = hash_key_for_partition_key(pk)
-                    shard_ids.append(
-                        next(sid for sid, lo, hi in ranges if lo <= h <= hi)
-                    )
                 yield pd.DataFrame(
                     {
                         "partition_key": b["partition_key"],
                         "data": b["data"],
-                        "shard_id": shard_ids,
+                        "shard_id": [route(pk) for pk in b["partition_key"]],
                     }
                 )
 
         assigned = _persist(df.select("partition_key", "data").mapInPandas(
             _assign, "partition_key string, data binary, shard_id string"
         ))
-        counts = {
-            r["shard_id"]: r["count"]
-            for r in assigned.groupBy("shard_id").count().collect()
-        }
-        bases: dict[str, int] = {}
-        for s in meta["shards"]:
-            if s["shard_id"] in counts:
-                bases[s["shard_id"]] = s["next_seq"]
-                s["next_seq"] += counts[s["shard_id"]]
+        try:
+            counts = {
+                r["shard_id"]: r["count"]
+                for r in assigned.groupBy("shard_id").count().collect()
+            }
+            bases = self._reserve(meta, counts)
 
-        w = Window.partitionBy("shard_id").orderBy("partition_key", "data")
-        seqd = assigned.withColumn("rn", F.row_number().over(w) - 1)
+            w = Window.partitionBy("shard_id").orderBy("partition_key", "data")
+            seqd = assigned.withColumn("rn", F.row_number().over(w) - 1)
 
-        def _write(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-            for b in batches:
-                for shard_id, g in b.groupby("shard_id"):
-                    write_put_file(
-                        os.path.join(data_dir, f"shard_id={shard_id}"),
-                        bases[shard_id] + g["rn"].to_numpy(),
-                        g["partition_key"],
-                        [bytes(x) for x in g["data"]],
-                        naive_ts,
-                    )
-                    yield pd.DataFrame({"n": [len(g)]})
+            def _write(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+                for b in batches:
+                    for sid, g in b.groupby("shard_id"):
+                        write_put_file(
+                            shard_dir(sid),
+                            bases[sid] + g["rn"].to_numpy(),
+                            g["partition_key"],
+                            [bytes(x) for x in g["data"]],
+                            naive_ts,
+                        )
+                        yield pd.DataFrame({"n": [len(g)]})
 
-        written = (
-            seqd.repartition("shard_id")
-            .mapInPandas(_write, "n long")
-            .agg(F.sum("n"))
-            .first()[0]
-        )
-        assigned.unpersist()
+            written = (
+                seqd.repartition("shard_id")
+                .mapInPandas(_write, "n long")
+                .agg(F.sum("n"))
+                .first()[0]
+            )
+        finally:
+            assigned.unpersist()
         total = sum(counts.values())
         if (written or 0) != total:
             raise RuntimeError(
@@ -437,13 +522,20 @@ class SimStream:
 
     # -- reshard (split/merge, KinesaliteTest.scala:70-81 scenarios) -------
 
+    @staticmethod
+    def _open_shard(meta: dict, shard_id: str) -> dict:
+        s = next((s for s in meta["shards"] if s["shard_id"] == shard_id), None)
+        if s is None:
+            raise ValueError(f"no shard {shard_id}")
+        if s["closed"]:
+            raise ValueError(f"shard {shard_id} already closed")
+        return s
+
     def split_shard(self, shard_id: str) -> tuple[str, str]:
         """Split at the midpoint of the hash range: parent closes, two
         children each inherit half (KinesaliteTest.scala:74-78)."""
         meta = self._meta()
-        parent = next(s for s in meta["shards"] if s["shard_id"] == shard_id)
-        if parent["closed"]:
-            raise ValueError(f"shard {shard_id} already closed")
+        parent = self._open_shard(meta, shard_id)
         lo, hi = int(parent["starting_hash_key"]), int(parent["ending_hash_key"])
         mid = (lo + hi) // 2
         parent["closed"] = True
@@ -467,11 +559,18 @@ class SimStream:
         return kids[0], kids[1]
 
     def merge_shards(self, a: str, b: str) -> str:
-        """Merge two adjacent shards: both close; the child carries
-        parent=a, adjacent_parent=b (KinesisSourceTest.scala:161-172)."""
+        """Merge two open, adjacent shards: both close; the child carries
+        parent=a, adjacent_parent=b and the union of their hash ranges
+        (KinesisSourceTest.scala:161-172). Like Kinesis's MergeShards, a
+        closed shard or a pair whose ranges do not touch is refused: either
+        would leave open ranges that overlap."""
         meta = self._meta()
-        sa = next(s for s in meta["shards"] if s["shard_id"] == a)
-        sb = next(s for s in meta["shards"] if s["shard_id"] == b)
+        sa, sb = self._open_shard(meta, a), self._open_shard(meta, b)
+        (lo, low_end), (high_start, hi) = sorted(
+            (int(s["starting_hash_key"]), int(s["ending_hash_key"])) for s in (sa, sb)
+        )
+        if low_end + 1 != high_start:
+            raise ValueError(f"shards {a} and {b} are not adjacent")
         sa["closed"] = True
         sb["closed"] = True
         kid_id = f"shardId-{meta['next_shard']:012d}"
@@ -481,12 +580,8 @@ class SimStream:
                 "shard_id": kid_id,
                 "parent_shard_id": a,
                 "adjacent_parent_shard_id": b,
-                "starting_hash_key": str(
-                    min(int(sa["starting_hash_key"]), int(sb["starting_hash_key"]))
-                ),
-                "ending_hash_key": str(
-                    max(int(sa["ending_hash_key"]), int(sb["ending_hash_key"]))
-                ),
+                "starting_hash_key": str(lo),
+                "ending_hash_key": str(hi),
                 "closed": False,
                 "next_seq": 0,
             }
@@ -505,9 +600,7 @@ class SimStream:
                 reader = reader.option("maxFilesPerTrigger", max_files)
         else:
             reader = spark.read.schema(schema)
-        return reader.option("basePath", self.data_dir).parquet(
-            os.path.join(self.data_dir, "shard_id=*")
-        )
+        return reader.option("basePath", self.data_dir).parquet(self.shard_dir("*"))
 
     def _start_filter(
         self,
@@ -516,11 +609,11 @@ class SimStream:
         iterator: IteratorType,
         now: datetime | None,
     ) -> DataFrame:
-        """Apply the start position. For Latest we snapshot the current
-        per-shard max sequence number (the reference's cursor, S8) and keep
-        only later records; shards created afterwards have no floor, so they
-        read from their beginning — exactly the Latest→TrimHorizon rewrite
-        on resharding (S7, KinesisSource.scala:160-163)."""
+        """Apply the start position. For Latest we snapshot each shard's
+        next sequence number (the reference's cursor, S8) and keep only
+        records at or past it; shards created afterwards have no cursor, so
+        they read from their beginning — exactly the Latest→TrimHorizon
+        rewrite on resharding (S7, KinesisSource.scala:160-163)."""
         if isinstance(iterator, TrimHorizon):
             return df
         if isinstance(iterator, AtTimestamp):
@@ -529,29 +622,18 @@ class SimStream:
             naive = _as_utc_naive(since)
             return df.filter(F.col("ts") >= F.lit(naive))
         if isinstance(iterator, Latest):
-            floors = self.sequence_floors()
-            if not floors:
+            ends = self.next_sequence_numbers()
+            if not ends:
                 return df
-            floor_df = spark.createDataFrame(
-                list(floors.items()), "shard_id string, _floor long"
+            end_df = spark.createDataFrame(
+                list(ends.items()), "shard_id string, _end long"
             )
             return (
-                df.join(F.broadcast(floor_df), "shard_id", "left")
-                .filter(F.col("_floor").isNull() | (F.col("sequence_number") > F.col("_floor")))
-                .drop("_floor")
+                df.join(F.broadcast(end_df), "shard_id", "left")
+                .filter(F.col("_end").isNull() | (F.col("sequence_number") >= F.col("_end")))
+                .drop("_end")
             )
         raise TypeError(f"unknown iterator type {iterator!r}")
-
-    def sequence_floors(self) -> dict[str, int]:
-        """Current max sequence number per shard that holds a record — the
-        checkpointable cursor (S8/S9: ShardIterator's reissue token is
-        exactly this), read from the put files' names."""
-        floors = {}
-        for shard_dir in glob.glob(os.path.join(self.data_dir, "shard_id=*")):
-            lasts = [last for _, last in put_files(shard_dir).values()]
-            if lasts:
-                floors[shard_dir.rsplit("shard_id=", 1)[1]] = max(lasts)
-        return floors
 
     def read_batch(
         self,

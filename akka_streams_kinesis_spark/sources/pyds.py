@@ -15,7 +15,10 @@ through a fault-injectable client with the reference's four-way
 handleResult error dispatch (S17, `KinesisSource.scala:290-302`): expired
 cursor → reissue from the sequence floor; throughput exceeded → 800 ms
 backoff + repoll; service error → bounded retry; client error → fail
-fast. See the S17 section below and tests/test_pyds_errors.py.
+fast. See the S17 section below and tests/test_pyds_errors.py. The
+control plane — ``shards.json``, key → shard routing, shard dirs and
+where each shard ends — is ``SimStream``'s; both readers and both writers
+call it.
 
 Usage::
 
@@ -61,11 +64,9 @@ when its stat changed: ~0.1 ms per call, 0.26 s of worker CPU per batch.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 from dataclasses import dataclass, field
-from datetime import datetime, timezone
+from datetime import datetime
 from typing import Iterable, Iterator, List
 
 from pyspark.sql.datasource import (
@@ -86,7 +87,14 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .kinesis_sim import hash_key_for_partition_key, put_files, write_put_file
+from .kinesis_sim import (
+    SimStream,
+    _as_utc_naive,
+    next_sequence_number,
+    put_files,
+    shard_router,
+    write_put_file,
+)
 
 FORMAT_NAME = "kinesis_sim_py"
 
@@ -104,28 +112,7 @@ _COLS = [f.name for f in SCHEMA.fields]
 
 
 def _parse_iso(s: str) -> datetime:
-    dt = datetime.fromisoformat(s)
-    if dt.tzinfo is not None:
-        dt = dt.astimezone(timezone.utc).replace(tzinfo=None)
-    return dt
-
-
-def _shard_dirs(path: str) -> dict[str, str]:
-    """shard_id → data directory, from the on-disk layout."""
-    out = {}
-    for d in sorted(glob.glob(os.path.join(path, "data", "shard_id=*"))):
-        out[os.path.basename(d).split("=", 1)[1]] = d
-    return out
-
-
-def _shard_files(shard_dir: str) -> list[str]:
-    return list(put_files(shard_dir))
-
-
-def _end(ranges: dict[str, tuple[int, int]]) -> int:
-    """Next sequence number of one shard, from its ``put_files`` ranges:
-    one past the largest last, 0 for a shard without files."""
-    return max((last for _, last in ranges.values()), default=-1) + 1
+    return _as_utc_naive(datetime.fromisoformat(s))
 
 
 def _first_seq_at_or_after(shard_dir: str, since: datetime) -> int | None:
@@ -257,7 +244,7 @@ def _read_partition(
             planned = set(part.files)
             pending = [
                 x
-                for x in _shard_files(os.path.dirname(f))
+                for x in put_files(os.path.dirname(f))
                 if x in planned and x not in drained
             ]
             continue
@@ -298,19 +285,36 @@ def _read_partition(
             yield from t.to_batches()
 
 
-class KinesisSimBatchReader(DataSourceReader):
+class _SimReader:
+    """What the batch and stream readers share: the stream, the start
+    position, the injectable clock and the S17 fault-injectable read
+    client (fake-client tests)."""
+
+    def __init__(self, options: dict, read_file=None, sleep_fn=None):
+        self.stream = SimStream(options["path"])
+        self.position = options.get("starting_position", "trim_horizon").lower()
+        self.now = _parse_iso(options["now"]) if "now" in options else None
+        self.read_file = read_file
+        self.sleep_fn = sleep_fn
+
+    def _since(self) -> datetime | None:
+        """The at_timestamp position clamped to min(since, now) — the S3
+        work-conserving clamp — or None for the other positions."""
+        if not self.position.startswith("at_timestamp:"):
+            return None
+        since = _parse_iso(self.position.split(":", 1)[1])
+        return min(since, self.now or datetime.utcnow())
+
+    def read(self, partition: ShardPartition) -> Iterator:
+        yield from _read_partition(partition, self.read_file, self.sleep_fn)
+
+
+class KinesisSimBatchReader(_SimReader, DataSourceReader):
     """Bounded positioned scan (the batch analog of S1), with shard pruning
     pushed to partition planning via ``pushFilters`` — the DataSource-level
     equivalent of the wrapper's Hive-partition pruning."""
 
-    def __init__(self, options: dict, read_file=None, sleep_fn=None):
-        self.path = options["path"]
-        self.position = options.get("starting_position", "trim_horizon").lower()
-        self.now = _parse_iso(options["now"]) if "now" in options else None
-        self.wanted_shards: set[str] | None = None
-        # S17 seam: fault-injectable read client (fake-client tests)
-        self.read_file = read_file
-        self.sleep_fn = sleep_fn
+    wanted_shards: set[str] | None = None
 
     def pushFilters(self, filters: List[Filter]) -> Iterable[Filter]:
         for f in filters:
@@ -327,62 +331,46 @@ class KinesisSimBatchReader(DataSourceReader):
                 yield f  # everything else stays in Spark's Filter node
 
     def partitions(self) -> list[ShardPartition]:
-        dirs = _shard_dirs(self.path)
+        dirs = self.stream.shard_dirs()
         if self.wanted_shards is not None:
             dirs = {s: d for s, d in dirs.items() if s in self.wanted_shards}
+        since = self._since()
         parts = []
         for shard_id, d in dirs.items():
-            ranges = put_files(d)
-            p = ShardPartition(shard_id=shard_id, files=list(ranges))
+            files = put_files(d)
+            p = ShardPartition(shard_id=shard_id, files=list(files), since=since)
             if self.position == "latest":
-                p.lo = _end(ranges)  # nothing newer yet
-            elif self.position.startswith("at_timestamp:"):
-                since = _parse_iso(self.position.split(":", 1)[1])
-                now = self.now or datetime.utcnow()
-                p.since = min(since, now)  # S3 work-conserving clamp
+                p.lo = next_sequence_number(files)  # nothing newer yet
             if p.files:
                 parts.append(p)
         return parts
 
-    def read(self, partition: ShardPartition) -> Iterator:
-        yield from _read_partition(partition, self.read_file, self.sleep_fn)
 
-
-class KinesisSimStreamReader(DataSourceStreamReader):
+class KinesisSimStreamReader(_SimReader, DataSourceStreamReader):
     """Unbounded scan: offset = {shard_id: next sequence number} — exactly
     the reference's resume-AFTER_SEQUENCE_NUMBER cursor (S8), checkpointed
     by Spark's offset WAL. Shards that appear after the query starts (a
     reshard's children) get floor 0: the Latest→TrimHorizon rewrite (S7)."""
 
-    def __init__(self, options: dict, read_file=None, sleep_fn=None):
-        self.path = options["path"]
-        self.position = options.get("starting_position", "trim_horizon").lower()
-        self.now = _parse_iso(options["now"]) if "now" in options else None
-        # S17 seam: fault-injectable read client (fake-client tests)
-        self.read_file = read_file
-        self.sleep_fn = sleep_fn
-
     def initialOffset(self) -> dict:
-        dirs = _shard_dirs(self.path)
         if self.position == "latest":
-            return {s: _end(put_files(d)) for s, d in dirs.items()}
-        if self.position.startswith("at_timestamp:"):
-            since = _parse_iso(self.position.split(":", 1)[1])
-            now = self.now or datetime.utcnow()
-            since = min(since, now)
-            out = {}
-            for s, d in dirs.items():
-                first = _first_seq_at_or_after(d, since)
-                out[s] = _end(put_files(d)) if first is None else first
-            return out
-        return {s: 0 for s in dirs}  # trim_horizon
+            return self.latestOffset()
+        since = self._since()
+        dirs = self.stream.shard_dirs()
+        if since is None:  # trim_horizon
+            return {s: 0 for s in dirs}
+        out = {}
+        for s, d in dirs.items():
+            first = _first_seq_at_or_after(d, since)
+            out[s] = next_sequence_number(put_files(d)) if first is None else first
+        return out
 
     def latestOffset(self) -> dict:
-        return {s: _end(put_files(d)) for s, d in _shard_dirs(self.path).items()}
+        return self.stream.next_sequence_numbers()
 
     def partitions(self, start: dict, end: dict) -> list[ShardPartition]:
         parts = []
-        dirs = _shard_dirs(self.path)
+        dirs = self.stream.shard_dirs()
         for shard_id, hi in end.items():
             lo = int(start.get(shard_id, 0))  # unseen shard ⇒ from its start (S7)
             hi = int(hi)
@@ -396,9 +384,6 @@ class KinesisSimStreamReader(DataSourceStreamReader):
                     ShardPartition(shard_id=shard_id, files=files, lo=lo, hi=hi)
                 )
         return parts
-
-    def read(self, partition: ShardPartition) -> Iterator:
-        yield from _read_partition(partition, self.read_file, self.sleep_fn)
 
     def commit(self, end: dict) -> None:
         pass  # progress lives in Spark's checkpoint WAL
@@ -468,13 +453,16 @@ def register(spark) -> None:
 # `df.writeStream.format(...)` is the streaming sink (one commit per
 # micro-batch).
 #
-# Sequence contract: tasks snapshot the control-plane next_seq and number
-# their records next_seq + (taskPartitionId << 28) + i; commit() advances
-# next_seq past the batch max. Within a job all tasks share one snapshot
-# (unique, ordered-within-task), and later jobs/batches always start
-# above earlier ones (monotone per shard — what the reader's resume
-# cursor requires). Like Kinesis itself, sequence numbers are opaque
-# increasing tokens, not dense.
+# Sequence contract: tasks snapshot each open shard's next_seq (the
+# control plane, ``kinesis_sim`` "Data layout") and number their records
+# next_seq + (taskPartitionId << 28) + i; commit() advances next_seq past
+# the batch max (``SimStream.advance_next_seq``). Within a job all tasks
+# share one snapshot (unique, ordered-within-task), and later jobs/batches
+# always start above earlier ones (monotone per shard — what the reader's
+# resume cursor requires). Like Kinesis itself, sequence numbers are
+# opaque increasing tokens, not dense: unlike ``SimStream.put_records``,
+# this at-least-once distributed sink reserves nothing before its tasks
+# run.
 #
 # Delivery semantics: PutRecords is not transactional — the sink is
 # at-least-once. abort() best-effort deletes files acked by completed
@@ -498,18 +486,6 @@ class SimWriteCommit(WriterCommitMessage):
     files: list        # paths written by this task
     max_seqs: dict     # shard_id -> max sequence number written
     n_rows: int
-
-
-def _stream_meta(path: str) -> dict:
-    with open(os.path.join(path, "shards.json")) as f:
-        return json.load(f)
-
-
-def _write_stream_meta(path: str, meta: dict) -> None:
-    tmp = os.path.join(path, "shards.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(tmp, os.path.join(path, "shards.json"))
 
 
 def _success_put(stream_name: str, batch: list) -> list:
@@ -537,12 +513,10 @@ def _task_put(
     put_fn = put_client or _success_put
     sleep = sleep_fn or _time.sleep
 
-    meta = _stream_meta(path)
-    ranges = [
-        (s["shard_id"], int(s["starting_hash_key"]), int(s["ending_hash_key"]), int(s["next_seq"]))
-        for s in meta["shards"]
-        if not s["closed"]
-    ]
+    stream = SimStream(path)
+    shards = stream.open_shards()
+    route = shard_router(shards)
+    next_seq = {s["shard_id"]: int(s["next_seq"]) for s in shards}
     pid = TaskContext.get().partitionId() if TaskContext.get() else 0
 
     per_shard: dict[str, list[tuple[str, bytes]]] = {}
@@ -550,27 +524,12 @@ def _task_put(
         pks = batch.column("partition_key").to_pylist()
         datas = batch.column("data").to_pylist()
         for pk, data in zip(pks, datas):
-            h = hash_key_for_partition_key(pk)
-            sid = next((s for s, lo, hi, _ in ranges if lo <= h <= hi), None)
-            if sid is None:
-                # e.g. hand-edited shards.json or a reshard that left a
-                # hash-range gap: fail with a diagnosable message instead
-                # of an opaque executor StopIteration
-                raise RuntimeError(
-                    f"no open shard covers hash key {h} for partition key "
-                    f"{pk!r}; open ranges: "
-                    f"{[(s, lo, hi) for s, lo, hi, _ in ranges]}"
-                )
-            per_shard.setdefault(sid, []).append((pk, bytes(data)))
+            per_shard.setdefault(route(pk), []).append((pk, bytes(data)))
 
-    naive_ts = arrival_ts
-    if naive_ts.tzinfo is not None:
-        naive_ts = naive_ts.astimezone(timezone.utc).replace(tzinfo=None)
-
+    naive_ts = _as_utc_naive(arrival_ts)
     files: list[str] = []
     max_seqs: dict[str, int] = {}
     n_rows = 0
-    next_seq_by_shard = {s: ns for s, _, _, ns in ranges}
     for sid, records in per_shard.items():
         acked: list[tuple[str, bytes]] = []
         for i in range(0, len(records), AWS_MAX_BUFFER_SIZE):
@@ -591,11 +550,11 @@ def _task_put(
                     f"{failed[0]['error_code']}"
                 )
             acked.extend(chunk)
-        base = next_seq_by_shard[sid] + (pid << _SEQ_TASK_SHIFT)
+        base = next_seq[sid] + (pid << _SEQ_TASK_SHIFT)
         seqs = [base + i for i in range(len(acked))]
         files.append(
             write_put_file(
-                os.path.join(path, "data", f"shard_id={sid}"),
+                stream.shard_dir(sid),
                 seqs,
                 [r[0] for r in acked],
                 [r[1] for r in acked],
@@ -605,20 +564,6 @@ def _task_put(
         max_seqs[sid] = seqs[-1]
         n_rows += len(acked)
     return SimWriteCommit(files=files, max_seqs=max_seqs, n_rows=n_rows)
-
-
-def _advance_meta(path: str, messages) -> None:
-    """Driver-side commit: bump each shard's next_seq past everything the
-    job wrote, so the next put job (or micro-batch) starts above it."""
-    meta = _stream_meta(path)
-    for m in messages:
-        if m is None:
-            continue
-        for sid, mx in m.max_seqs.items():
-            for s in meta["shards"]:
-                if s["shard_id"] == sid:
-                    s["next_seq"] = max(int(s["next_seq"]), mx + 1)
-    _write_stream_meta(path, meta)
 
 
 def _abort_cleanup(messages) -> None:
@@ -632,10 +577,10 @@ def _abort_cleanup(messages) -> None:
                 pass
 
 
-class KinesisSimBatchWriter(DataSourceArrowWriter):
-    """Bounded put job (`df.write.format("kinesis_sim_py").mode("append")`).
-    Arrow batches stream through the executor put loop; the driver commit
-    advances the per-shard sequence floor."""
+class _SimWriter:
+    """What the batch and stream writers share: options, the injectable
+    put client, the executor put, and the driver commit and abort (the
+    stream writer's also get the ``batchId``)."""
 
     def __init__(self, options: dict, put_client=None, sleep_fn=None):
         self.path = options["path"]
@@ -652,14 +597,24 @@ class KinesisSimBatchWriter(DataSourceArrowWriter):
             iterator, self.path, self.arrival_ts, self.put_client, self.sleep_fn
         )
 
-    def commit(self, messages) -> None:
-        _advance_meta(self.path, messages)
+    def commit(self, messages, batchId: int | None = None) -> None:
+        """Move each shard's next_seq past everything the job wrote, so
+        the next put job (or micro-batch) starts above it."""
+        SimStream(self.path).advance_next_seq(
+            m.max_seqs for m in messages if m is not None
+        )
 
-    def abort(self, messages) -> None:
+    def abort(self, messages, batchId: int | None = None) -> None:
         _abort_cleanup(messages)
 
 
-class KinesisSimStreamWriter(DataSourceStreamArrowWriter):
+class KinesisSimBatchWriter(_SimWriter, DataSourceArrowWriter):
+    """Bounded put job (`df.write.format("kinesis_sim_py").mode("append")`).
+    Arrow batches stream through the executor put loop; the driver commit
+    advances the per-shard sequence floor."""
+
+
+class KinesisSimStreamWriter(_SimWriter, DataSourceStreamArrowWriter):
     """Streaming sink (`df.writeStream.format("kinesis_sim_py")`): each
     micro-batch is one put job over Arrow RecordBatches (the same
     zero-row-object fast path as the batch writer); commit(batchId)
@@ -668,24 +623,3 @@ class KinesisSimStreamWriter(DataSourceStreamArrowWriter):
     resume cursor needs). At-least-once, like PutRecords: a batch
     retried after a crash between task success and commit re-puts its
     records."""
-
-    def __init__(self, options: dict, put_client=None, sleep_fn=None):
-        self.path = options["path"]
-        self.arrival_ts = (
-            _parse_iso(options["arrival_ts"])
-            if "arrival_ts" in options
-            else datetime.utcnow()
-        )
-        self.put_client = put_client
-        self.sleep_fn = sleep_fn
-
-    def write(self, iterator) -> SimWriteCommit:
-        return _task_put(
-            iterator, self.path, self.arrival_ts, self.put_client, self.sleep_fn
-        )
-
-    def commit(self, messages, batchId: int) -> None:
-        _advance_meta(self.path, messages)
-
-    def abort(self, messages, batchId: int) -> None:
-        _abort_cleanup(messages)

@@ -21,7 +21,14 @@ import time
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too, and they see the
+# session's environment, not this sys.path: from any cwd but the checkout
+# every Python UDF would fail with ModuleNotFoundError.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 import __spark_entry__ as se  # noqa: E402
 
 def _flag_value(flag: str) -> str:

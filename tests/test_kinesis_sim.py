@@ -89,18 +89,15 @@ def test_latest_ignores_existing_records(spark, stream):
     df_latest = stream.read_batch(spark, Latest())
     assert df_latest.count() == 0
     # records arriving after the position resolve ARE seen
-    floors = stream.sequence_floors()
+    ends = stream.next_sequence_numbers()
     stream.put_records(make_records("after", 3))
     seen = stream.read_batch(spark, Latest())  # new resolve — only for this assert
-    # a fresh Latest ignores those too; use the captured floors to emulate a
+    # a fresh Latest ignores those too; use the captured ends to emulate a
     # running query's cursor:
     df = stream.read_batch(spark, TrimHorizon())
-    floor_rows = []
-    for shard_id, m in floors.items():
-        floor_rows.append((shard_id, m))
     after = df.join(
-        spark.createDataFrame(floor_rows, "shard_id string, f long"), "shard_id", "left"
-    ).filter(F.col("f").isNull() | (F.col("sequence_number") > F.col("f")))
+        spark.createDataFrame(list(ends.items()), "shard_id string, f long"), "shard_id", "left"
+    ).filter(F.col("f").isNull() | (F.col("sequence_number") >= F.col("f")))
     assert after.count() == 3
 
 
@@ -131,6 +128,56 @@ def test_merge_shards_single_child(spark, stream):
     assert df.count() == 10
     by_shard = {r["shard_id"]: r["n"] for r in df.groupBy("shard_id").agg(F.count("*").alias("n")).collect()}
     assert by_shard.get(kid) == 4  # post-merge records in the child
+
+
+def test_merge_shards_requires_two_open_adjacent_shards(stream):
+    # Kinesis's MergeShards takes two open shards with adjacent hash ranges;
+    # anything else would leave open ranges that overlap
+    a, b = [s["shard_id"] for s in stream.open_shards()]
+    low_kid, high_kid = stream.split_shard(b)
+    with pytest.raises(ValueError, match="already closed"):
+        stream.merge_shards(a, b)
+    with pytest.raises(ValueError, match="not adjacent"):
+        stream.merge_shards(a, high_kid)
+    assert {s["shard_id"] for s in stream.open_shards()} == {a, low_kid, high_kid}
+    kid = stream.merge_shards(low_kid, a)
+    assert {s["shard_id"] for s in stream.open_shards()} == {kid, high_kid}
+
+
+@pytest.mark.parametrize("put", ["put_records", "put_records_distributed", "_task_put"])
+def test_hash_range_gap_names_the_key(spark, stream, put):
+    """Open ranges that leave a hash-key gap fail every put path with the
+    router's RuntimeError, which names the key, and write nothing."""
+    from hashlib import md5
+
+    import pyarrow as pa
+
+    from akka_streams_kinesis_spark.sources import pyds
+
+    meta = stream._meta()
+    upper = meta["shards"][1]
+    upper["starting_hash_key"] = upper["ending_hash_key"]  # gap: the rest of its range
+    stream._write_meta(meta)
+    key = next(
+        k for k in (f"key{i}" for i in range(100))
+        if int(upper["ending_hash_key"]) > int(md5(k.encode()).hexdigest(), 16)
+        >= int(meta["shards"][0]["ending_hash_key"]) + 1
+    )
+    with pytest.raises(Exception) as err:
+        if put == "put_records":
+            stream.put_records([("k0", b"a"), (key, b"b")])
+        elif put == "put_records_distributed":
+            stream.put_records_distributed(
+                spark.createDataFrame([(key, b"b")], "partition_key string, data binary")
+            )
+        else:
+            batch = pa.record_batch({"partition_key": [key], "data": [b"b"]})
+            pyds._task_put([batch], stream.path, datetime(2024, 1, 1))
+    msg = str(err.value)
+    # an executor's error reaches the driver as the worker's traceback text
+    assert isinstance(err.value, RuntimeError) or "RuntimeError: no open shard" in msg
+    assert "no open shard covers hash key" in msg and f"partition key {key!r}" in msg
+    assert os.listdir(stream.data_dir) == []
 
 
 def test_streaming_read_available_now(spark, stream, tmp_path):

@@ -17,7 +17,7 @@ from datetime import datetime, timedelta
 import pytest
 
 from akka_streams_kinesis_spark.sources import pyds
-from akka_streams_kinesis_spark.sources.kinesis_sim import SimStream
+from akka_streams_kinesis_spark.sources.kinesis_sim import SimStream, put_files
 
 T0 = datetime(2024, 1, 1, 0, 0, 0)
 
@@ -215,7 +215,7 @@ def test_pruned_partitions_read_the_same_rows(long_stream):
 
     reader = pyds.KinesisSimStreamReader({"path": long_stream.path})
     end = reader.latestOffset()
-    dirs = pyds._shard_dirs(long_stream.path)
+    dirs = long_stream.shard_dirs()
     rng = random.Random(7)
     for _ in range(20):
         start, stop = {}, {}
@@ -225,7 +225,7 @@ def test_pruned_partitions_read_the_same_rows(long_stream):
         parts = reader.partitions(start, stop)
         unpruned = [
             pyds.ShardPartition(
-                shard_id=s, files=pyds._shard_files(dirs[s]), lo=start[s], hi=stop[s]
+                shard_id=s, files=list(put_files(dirs[s])), lo=start[s], hi=stop[s]
             )
             for s in stop
             if stop[s] > start[s]
@@ -234,7 +234,7 @@ def test_pruned_partitions_read_the_same_rows(long_stream):
         for p in parts:  # exactly the files holding a record of [lo, hi)
             assert p.files == [
                 f
-                for f in pyds._shard_files(dirs[p.shard_id])
+                for f in put_files(dirs[p.shard_id])
                 if any(p.lo <= q < p.hi for q in _seqs(f))
             ]
 
@@ -276,9 +276,9 @@ def test_planning_opens_no_put_file(long_stream, monkeypatch):
 def test_foreign_parquet_in_shard_dir_is_rejected(stream):
     import pyarrow.parquet as pq
 
-    shard = pyds._shard_dirs(stream.path)["shardId-000000000000"]
+    shard = stream.shard_dirs()["shardId-000000000000"]
     foreign = os.path.join(shard, "part-0000.parquet")
-    pq.write_table(pq.read_table(pyds._shard_files(shard)[0]), foreign)
+    pq.write_table(pq.read_table(list(put_files(shard))[0]), foreign)
     reader = pyds.KinesisSimStreamReader({"path": stream.path})
     with pytest.raises(ValueError, match=re.escape(foreign)):
         reader.latestOffset()
@@ -287,4 +287,4 @@ def test_foreign_parquet_in_shard_dir_is_rejected(stream):
     with pytest.raises(ValueError, match=re.escape(foreign)):
         pyds.KinesisSimBatchReader({"path": stream.path}).partitions()
     with pytest.raises(ValueError, match=re.escape(foreign)):
-        stream.sequence_floors()
+        stream.next_sequence_numbers()

@@ -125,9 +125,9 @@ def test_abort_cleanup_removes_acked_files(tmp_path):
 def test_sequence_floor_advances_across_jobs(tmp_path):
     path = _mk_stream(tmp_path)
     m1 = pyds._task_put([_batch(100, "a")], path, _TS)
-    pyds._advance_meta(path, [m1])
+    SimStream(path).advance_next_seq([m1.max_seqs])
     m2 = pyds._task_put([_batch(100, "b")], path, _TS)
-    pyds._advance_meta(path, [m2])
+    SimStream(path).advance_next_seq([m2.max_seqs])
     # job 2's sequences all start above job 1's (the reader-resume contract)
     for sid, mx in m1.max_seqs.items():
         with open(os.path.join(path, "shards.json")) as f:
@@ -152,14 +152,14 @@ def test_writer_follows_reshard(tmp_path):
     writer-side counterpart of the reader's reshard-follow (S13)."""
     path = _mk_stream(tmp_path, n_shards=1)
     m1 = pyds._task_put([_batch(50, "a")], path, _TS)
-    pyds._advance_meta(path, [m1])
+    SimStream(path).advance_next_seq([m1.max_seqs])
     stream = SimStream(path)
     parent = stream.open_shards()[0]["shard_id"]
     stream.split_shard(parent)
     children = {s["shard_id"] for s in stream.open_shards()}
     assert parent not in children and len(children) == 2
     m2 = pyds._task_put([_batch(200, "b")], path, _TS)
-    pyds._advance_meta(path, [m2])
+    SimStream(path).advance_next_seq([m2.max_seqs])
     assert set(m2.max_seqs) <= children  # nothing written to the closed parent
     # both children received records (hash range split spreads keys)
     assert len(m2.max_seqs) == 2
