@@ -54,6 +54,7 @@ def load_all() -> None:
         subqueries,
         udfs,
         streaming_queries,
+        standing_index,
         curation,
         textquality,
         embedding_scale,

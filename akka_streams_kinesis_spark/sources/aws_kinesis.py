@@ -40,7 +40,10 @@ from __future__ import annotations
 import time
 from collections.abc import Callable, Iterator
 
+from ..streaming.writer import KINESIS_BACKOFF_SECONDS
 from .pyds import (
+    _MAX_REISSUE_RETRIES,
+    _MAX_THROTTLE_RETRIES,
     ClientError,
     ExpiredIteratorError,
     ServiceError,
@@ -51,7 +54,6 @@ from .kinesis_sim import AtTimestamp, IteratorType, Latest, TrimHorizon
 # AWS hard limits (public service quotas)
 MAX_RECORDS_PER_PUT = 500          # PutRecords batch ceiling
 MAX_RECORDS_PER_GET = 10_000       # GetRecords Limit ceiling
-_THROTTLE_BACKOFF_S = 0.8          # the reference's 800 ms constant
 
 
 # ---------------------------------------------------------------------------
@@ -251,12 +253,15 @@ def poll_shard(
     """Drain one shard from a start position — the S14/S15/S16 read loop
     against live AWS. Yields record dicts in sequence order.
 
-    Fault policy mirrors ``_read_partition`` (sources/pyds.py):
+    Fault policy mirrors ``_read_partition`` (sources/pyds.py), budgets
+    included:
     - ExpiredIteratorError → reissue from the last emitted sequence number
       (AFTER_SEQUENCE_NUMBER) and continue — no loss, no duplication.
     - ThroughputExceededError → sleep 800 ms, repoll the same iterator.
-    - ServiceError/ClientError propagate to the caller's retry budget
-      (the engine wraps executor-side reads in ``with_retries``).
+    - Either fault more than ``_MAX_REISSUE_RETRIES`` /
+      ``_MAX_THROTTLE_RETRIES`` times in a row → ``RuntimeError``; a
+      successful poll resets both counts.
+    - ServiceError/ClientError propagate to the caller unretried.
 
     Termination: a closed shard ends when NextShardIterator is None; an
     open shard ends after ``max_polls`` or (default) on the first empty
@@ -266,14 +271,20 @@ def poll_shard(
         stream_name, shard_id, iterator
     )
     last_seq: str | None = None
-    polls = 0
+    polls = throttle_tries = reissue_tries = 0
     while it is not None:
         if max_polls is not None and polls >= max_polls:
             return
         polls += 1
         try:
             records, it = shard_client.get_records(it, limit=limit)
-        except ExpiredIteratorError:
+        except ExpiredIteratorError as e:
+            reissue_tries += 1
+            if reissue_tries > _MAX_REISSUE_RETRIES:
+                raise RuntimeError(
+                    f"shard {shard_id}: iterator still expired after "
+                    f"{_MAX_REISSUE_RETRIES} consecutive reissues"
+                ) from e
             if last_seq is None:
                 # nothing emitted yet — restart from the original position
                 it = shard_client.get_shard_iterator(
@@ -284,9 +295,16 @@ def poll_shard(
                     stream_name, shard_id, last_seq
                 )
             continue
-        except ThroughputExceededError:
-            sleep_fn(_THROTTLE_BACKOFF_S)
+        except ThroughputExceededError as e:
+            throttle_tries += 1
+            if throttle_tries > _MAX_THROTTLE_RETRIES:
+                raise RuntimeError(
+                    f"shard {shard_id}: still throttled after "
+                    f"{_MAX_THROTTLE_RETRIES} consecutive repolls"
+                ) from e
+            sleep_fn(KINESIS_BACKOFF_SECONDS)
             continue
+        throttle_tries = reissue_tries = 0
         for r in records:
             last_seq = r["sequence_number"]
             yield r

@@ -179,7 +179,6 @@ class ClientError(Exception):
     """Caller-side 4xx — not retryable; fail fast."""
 
 
-_THROTTLE_BACKOFF_S = 0.8   # reference's 800 ms backoff constant
 _MAX_SERVICE_RETRIES = 7    # reference's withRetries budget (package.scala)
 _BACKOFF_CAP_S = 64.0       # 2^n capped at 64 s
 # The reference repolls throttle/expired unboundedly (a live service
@@ -255,7 +254,9 @@ def _read_partition(
                     f"shard {part.shard_id}: still throttled after "
                     f"{_MAX_THROTTLE_RETRIES} consecutive repolls on {f}"
                 ) from e
-            sleep(_THROTTLE_BACKOFF_S)   # repoll same position
+            from ..streaming.writer import KINESIS_BACKOFF_SECONDS
+
+            sleep(KINESIS_BACKOFF_SECONDS)   # repoll same position
             continue
         except ServiceError:
             service_tries += 1
@@ -508,7 +509,11 @@ def _task_put(
 
     from pyspark import TaskContext
 
-    from ..streaming.writer import AWS_MAX_BUFFER_SIZE, _flush_chunk
+    from ..streaming.writer import (
+        AWS_MAX_BUFFER_SIZE,
+        KINESIS_BACKOFF_SECONDS,
+        _flush_chunk,
+    )
 
     put_fn = put_client or _success_put
     sleep = sleep_fn or _time.sleep
@@ -538,8 +543,8 @@ def _task_put(
                 chunk,
                 put_fn,
                 stream_name=os.path.basename(path.rstrip("/")),
-                max_retries=7,
-                throttle_sleep=0.8,
+                max_retries=_MAX_SERVICE_RETRIES,
+                throttle_sleep=KINESIS_BACKOFF_SECONDS,
                 sleep_fn=sleep,
             )
             failed = [r for r in results if r["error_code"] is not None]

@@ -13,7 +13,7 @@ index from scratch each run; here the index is a STANDING table that a
 stream of new/changed vectors keeps current, with per-batch cost
 O(touched cells), never O(corpus), that is also the thing a query
 SEARCHES (`probe_cells` +
-`operators/streaming_queries.similarity_standing_index_topk`).
+`operators/standing_index.similarity_standing_index_topk`).
 
 Index layout (three parquet tables under ``root``):
 
@@ -48,41 +48,18 @@ Index layout (three parquet tables under ``root``):
   than the store deliberately: it is a metadata-sized table (≤ a few
   thousand rows at ANY corpus size — bounded by cell count, not corpus).
 
-Commit protocol (the round-11 VERDICT "Next round" ask #1): data files
-are VERSIONED — a batch at version N writes ``part-v{N}.parquet`` into
-each touched partition directory and NEVER mutates a committed file —
-and a single JSON manifest ``_manifest/v{N}.json`` mapping every live
-partition of all three tables to its current file is written, followed
-by the ``_manifest/LATEST`` pointer, as the batch's final, atomic step.
-Readers resolve LATEST → manifest → explicit file list, so:
-
-- a reader concurrent with an in-flight batch sees the pre-batch
-  snapshot (store, idmap and directory MUTUALLY CONSISTENT — one
-  manifest covers all three, which is strictly stronger than the
-  round-11 per-table write ordering);
-- a crash anywhere before the LATEST write leaves the committed
-  snapshot untouched; the replay re-derives the same version number
-  from LATEST and overwrites the orphaned files (content is a pure
-  function of snapshot + batch, so the rewrite is equivalent);
-- a replay AFTER the commit re-merges against the post-batch snapshot:
-  every latest-wins merge is a no-op and the new manifest version maps
-  to content-identical files.
-
-A partition drained of its last row is simply REMOVED from the manifest
-(no zero-row marker files, no rmtree — cleanup is metadata). Superseded
-files accumulate until :func:`vacuum` reclaims everything outside the
-newest ``retain`` manifests — the Delta/Iceberg VACUUM contract, kept
-OUT of the batch path on purpose.
-
-All filesystem access — manifest reads/writes, existence probes, the
-task-side parquet writer, vacuum — routes through
-``pyarrow.fs.FileSystem.from_uri`` (round-11 ADVICE: the old writer
-called ``os.makedirs`` on raw URIs and handed ParquetWriter paths it
-could not open). Bare paths and ``file:`` roots use LocalFileSystem
-with a same-directory temp+rename (atomic replace); object-store
-schemes write the final key directly (PUT-on-close is atomic there and
-renames are copies). Tests exercise the non-local branch against
-pyarrow's in-memory mock filesystem via :func:`register_fs_factory`.
+Commit protocol and filesystem layer: ``streaming/snapshot_store.py``
+owns both — versioned data files, the per-version manifest and its
+atomic commit point, explicit-file-list reads, VACUUM, and the
+``pyarrow.fs`` routing that makes any URI scheme behave the same. One
+manifest covers all three tables, so store, idmap and directory as of
+one commit are MUTUALLY CONSISTENT, and a reader concurrent with an
+in-flight batch sees the pre-batch snapshot. A crash before the commit
+leaves the committed snapshot untouched; the replay re-derives the same
+version and overwrites the orphaned files (content is a pure function
+of snapshot + batch, so the rewrite is equivalent). A replay AFTER the
+commit re-merges against the post-batch snapshot: every latest-wins
+merge is a no-op and the new version maps to content-identical files.
 
 Single-writer assumption: one ``foreachBatch`` drain (or one
 maintenance pass) commits at a time — the streaming runtime serializes
@@ -119,19 +96,18 @@ source's own rule that maintenance never blocks reads
 
 from __future__ import annotations
 
-import posixpath
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StructType
 
 from ..shared import _persist
+from . import snapshot_store
 
 COARSE_BITS = 8     # depth of the always-present coarse cell (256 cells)
 GROUP_BITS = 4      # directory partition group (16 dirs)
 MAX_BITS = 12       # deepest split (16 leaves per coarse subtree)
 CELL_CAP = 4        # split a cell when its subtree exceeds this count
-_N_ID_BUCKETS = 16
+N_ID_BUCKETS = 16
 
 # Intra-cell store buckets (per-index, fixed at creation, recorded in
 # the manifest). 2 exercises the two-level layout in every gate while
@@ -140,9 +116,7 @@ _N_ID_BUCKETS = 16
 N_STORE_BUCKETS = 2
 
 _KEY_COLS = ("vec_id", "seq", "code")
-_MANIFEST_DIR = "_manifest"
-_PKEY = "__pkey"
-_TOMB = "_tomb"
+TABLES = ("store", "idmap", "directory")
 
 # Reserved payload column: CDC deletes. A record with ``deleted = true``
 # is a DELETE MARKER (Debezium-style, carrying the before-image ``code``
@@ -156,29 +130,6 @@ _TOMB = "_tomb"
 # a compaction policy decision (see ``compact_markers``).
 DELETED_COL = "deleted"
 
-
-# ---------------------------------------------------------------------------
-# filesystem / manifest layer — shared with the dedup index, see
-# snapshot_store.py (factored out in round 12 so both standing indexes
-# commit through one implementation). The underscore aliases keep this
-# module's historical API (tests and streaming_queries import them).
-# ---------------------------------------------------------------------------
-
-from .snapshot_store import (  # noqa: E402
-    _FS_FACTORIES,
-    apply_updates as _apply_updates,
-    assert_virgin_root as _assert_virgin_root_generic,
-    commit_manifest as _commit_manifest,
-    current_version,
-    fs_read as _fs_read,
-    fs_write_atomic as _fs_write_atomic,
-    load_manifest as _load_manifest,
-    manifest_read as _manifest_read,
-    register_fs_factory,
-    resolve_fs as _resolve_fs,
-    versioned_write as _versioned_write,
-    write_partition_files as _write_partition_files,
-)
 
 class Snapshot:
     """A committed, immutable view of the index: the manifest of one
@@ -211,7 +162,9 @@ class Snapshot:
         """Explicit-file-list read with an EXPLICIT schema — see
         snapshot_store.manifest_read (deterministic under schema
         evolution, no partition-discovery job)."""
-        return _manifest_read(spark, self.root, self.manifest, tbl, schema, keep)
+        return snapshot_store.manifest_read(
+            spark, self.root, self.manifest, tbl, schema, keep
+        )
 
     def _store_schema(self) -> StructType:
         schema = StructType()
@@ -273,7 +226,7 @@ def load_snapshot(root: str, version: int | None = None) -> Snapshot | None:
     """The newest committed Snapshot (or a pinned older ``version``),
     None for a virgin root. Two tiny reads (LATEST + one JSON) — cheap
     enough to call per query."""
-    manifest = _load_manifest(root, version)
+    manifest = snapshot_store.load(root, version)
     return None if manifest is None else Snapshot(root, manifest)
 
 
@@ -285,17 +238,6 @@ def _require_snapshot(root: str) -> Snapshot:
             f"index root (or the first batch has not committed yet)"
         )
     return snap
-
-
-def _assert_virgin_root(root: str) -> None:
-    """Fail LOUDLY when pointed at a directory that already holds
-    FOREIGN data but no manifest (e.g. a table written by a plain Spark
-    writer, or a pre-round-12 index): silently treating it as empty
-    would shadow the existing rows forever (round-11 ADVICE: assert the
-    layout invariant on first contact instead of double-counting).
-    Orphaned ``part-v*``/``.tmp-*`` files from a crashed FIRST batch are
-    ours and allowed — the replay overwrites them."""
-    _assert_virgin_root_generic(root, ("store", "idmap", "directory"))
 
 
 # ---------------------------------------------------------------------------
@@ -450,46 +392,30 @@ def index_merger(
     — the crash-injection seam — runs after every data write and before
     the manifest commit: raising inside it is exactly a crash at the
     batch's last pre-commit instant."""
-    store = posixpath.join(root, "store")
-    idmap = posixpath.join(root, "idmap")
-    directory = posixpath.join(root, "directory")
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:
         snap = load_snapshot(root)
         if snap is None:
-            _assert_virgin_root(root)
-            version, buckets = 1, store_buckets
-            payload = _union_payload(
-                [f for f in batch_df.schema.fields if f.name not in _KEY_COLS],
-                [],
-            )
-            manifest = {
-                "version": version,
-                "store_buckets": buckets,
-                "tables": {"store": {}, "idmap": {}, "directory": {}},
-            }
+            snapshot_store.assert_virgin_root(root, TABLES)
+            buckets, prev_payload = store_buckets, []
         else:
-            version, buckets = snap.version + 1, snap.store_buckets
-            payload = _union_payload(
-                [f for f in batch_df.schema.fields if f.name not in _KEY_COLS],
-                snap.store_payload().fields,
-            )
-            manifest = {
-                "version": version,
-                "store_buckets": buckets,
-                "tables": {
-                    t: dict(snap.files(t))
-                    for t in ("store", "idmap", "directory")
-                },
-            }
-        manifest["store_payload"] = StructType(payload).jsonValue()
+            buckets, prev_payload = snap.store_buckets, snap.store_payload().fields
+        payload = _union_payload(
+            [f for f in batch_df.schema.fields if f.name not in _KEY_COLS],
+            prev_payload,
+        )
+        manifest = snapshot_store.begin(
+            None if snap is None else snap.manifest,
+            TABLES,
+            store_buckets=buckets,
+            store_payload=StructType(payload).jsonValue(),
+        )
         data_cols = list(_KEY_COLS) + [f.name for f in payload]
-        sfname = f"part-v{version:08d}.parquet"
 
         batch = _widen(_latest(batch_df), payload).select(
             *data_cols,
             _coarse("code").alias("c8"),
-            (F.col("vec_id") % _N_ID_BUCKETS).alias("idb"),
+            (F.col("vec_id") % N_ID_BUCKETS).alias("idb"),
         )
         batch = _persist(batch)
         prior = None
@@ -531,34 +457,18 @@ def index_merger(
                 merged = merged.withColumn("c8", _coarse("code"))
             merged = _persist(merged)
 
-            # every (touched cell × bucket) partition must appear in the
-            # write report — a partition drained of its last row is then
-            # REMOVED from the manifest. A `_tomb` row registers the
-            # partition without contributing data (cleanup is metadata;
-            # no driver filesystem calls, no zero-row files).
-            store_tomb = spark.createDataFrame(
-                [(c, b) for c in touched_cells for b in range(buckets)],
-                "c8 string, sb int",
-            ).select(
-                F.lit(None).cast("long").alias("vec_id"),
-                F.lit(None).cast("long").alias("seq"),
-                F.lit(None).cast("string").alias("code"),
-                *[F.lit(None).cast(f.dataType).alias(f.name) for f in payload],
-                "c8",
-                "sb",
-            )
-            store_report = _versioned_write(
+            # every (touched cell × bucket) partition is rewritten — one
+            # drained of its last row leaves the manifest (cleanup is
+            # metadata; no driver filesystem calls, no zero-row files)
+            snapshot_store.write_partitions(
+                spark, root, manifest, "store",
                 merged.withColumn(
                     "sb",
                     F.pmod(F.xxhash64("vec_id"), F.lit(buckets)).cast("int"),
-                )
-                .withColumn(_TOMB, F.lit(False))
-                .unionByName(store_tomb.withColumn(_TOMB, F.lit(True))),
-                store,
+                ),
                 ["c8", "sb"],
-                version,
+                [(c, b) for c in touched_cells for b in range(buckets)],
             )
-            _apply_updates(manifest, "store", store_report, sfname)
 
             # refresh the directory for the touched coarse subtrees only:
             # split decisions for a prefix involve only vectors sharing
@@ -596,23 +506,10 @@ def index_merger(
                     .select("cell", "depth", "n_vecs", "dg")
                 )
                 refreshed = refreshed.unionByName(untouched_rows)
-            dir_tomb = spark.createDataFrame(
-                [(g,) for g in touched_groups], "dg string"
-            ).select(
-                F.lit(None).cast("string").alias("cell"),
-                F.lit(None).cast("int").alias("depth"),
-                F.lit(None).cast("long").alias("n_vecs"),
-                "dg",
+            snapshot_store.write_partitions(
+                spark, root, manifest, "directory", refreshed, ["dg"],
+                [(g,) for g in touched_groups],
             )
-            dir_report = _versioned_write(
-                refreshed.withColumn(_TOMB, F.lit(False)).unionByName(
-                    dir_tomb.withColumn(_TOMB, F.lit(True))
-                ),
-                directory,
-                ["dg"],
-                version,
-            )
-            _apply_updates(manifest, "directory", dir_report, sfname)
 
             # idmap upsert: the sidecar gets its OWN latest-wins merge
             # against the touched id-buckets' existing contents —
@@ -631,31 +528,18 @@ def index_merger(
                     .filter(F.col("_rn") == 1)
                     .drop("_rn")
                 )
-            id_tomb = spark.createDataFrame(
-                [(b,) for b in batch_idbs], "idb long"
-            ).select(
-                F.lit(None).cast("long").alias("vec_id"),
-                F.lit(None).cast("long").alias("seq"),
-                F.lit(None).cast("string").alias("c8"),
-                "idb",
+            snapshot_store.write_partitions(
+                spark, root, manifest, "idmap", id_upserts, ["idb"],
+                [(b,) for b in batch_idbs],
             )
-            id_report = _versioned_write(
-                id_upserts.withColumn(_TOMB, F.lit(False)).unionByName(
-                    id_tomb.withColumn(_TOMB, F.lit(True))
-                ),
-                idmap,
-                ["idb"],
-                version,
-            )
-            _apply_updates(manifest, "idmap", id_report, sfname)
 
             # THE commit point: everything before this line is invisible
-            # to readers (LATEST still names the pre-batch version), so a
-            # crash — or a concurrent search — anywhere above sees the
-            # consistent pre-batch snapshot
+            # to readers (the committed pointer still names the pre-batch
+            # version), so a crash — or a concurrent search — anywhere
+            # above sees the consistent pre-batch snapshot
             if pre_commit_hook is not None:
-                pre_commit_hook(version)
-            _commit_manifest(root, manifest)
+                pre_commit_hook(manifest["version"])
+            snapshot_store.commit(root, manifest)
             merged.unpersist()
         finally:
             batch.unpersist()
@@ -699,129 +583,43 @@ def compact_markers(spark: SparkSession, root: str, horizon_seq: int) -> dict:
     )
     droppable = store_all.filter(drop_pred)
     stats = (
-        droppable.withColumn("idb", F.col("vec_id") % _N_ID_BUCKETS)
+        droppable.withColumn("idb", F.col("vec_id") % N_ID_BUCKETS)
         .groupBy("c8", "idb")
         .agg(F.count("*").alias("n"))
         .collect()
     )
     if not stats:
         return empty
-    version = snap.version + 1
-    fname = f"part-v{version:08d}.parquet"
-    manifest = {
-        "version": version,
-        "store_buckets": snap.store_buckets,
-        "store_payload": snap.manifest["store_payload"],
-        "tables": {
-            t: dict(snap.files(t)) for t in ("store", "idmap", "directory")
-        },
-    }
+    manifest = snapshot_store.begin(snap.manifest, TABLES)
     cells = sorted({r["c8"] for r in stats})
     idbs = sorted({r["idb"] for r in stats})
     n_dropped = sum(r["n"] for r in stats)
-    payload = snap.store_payload().fields
     data_cols = [c for c in store_all.columns if c not in ("c8", "sb")]
     kept = snap.read_store(spark, cells=cells, markers=True).filter(~drop_pred)
-    tomb = spark.createDataFrame(
-        [(c, b) for c in cells for b in range(snap.store_buckets)],
-        "c8 string, sb int",
-    ).select(
-        F.lit(None).cast("long").alias("vec_id"),
-        F.lit(None).cast("long").alias("seq"),
-        F.lit(None).cast("string").alias("code"),
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in payload],
-        "c8",
-        "sb",
-    )
-    store_report = _versioned_write(
-        kept.select(*data_cols, "c8", "sb")
-        .withColumn(_TOMB, F.lit(False))
-        .unionByName(tomb.withColumn(_TOMB, F.lit(True))),
-        posixpath.join(root, "store"),
+    snapshot_store.write_partitions(
+        spark, root, manifest, "store",
+        kept.select(*data_cols, "c8", "sb"),
         ["c8", "sb"],
-        version,
+        [(c, b) for c in cells for b in range(snap.store_buckets)],
     )
-    _apply_updates(manifest, "store", store_report, fname)
     # the dropped ids leave the idmap too — keeping them would make the
     # merge's old-cell lookup disagree with the compacted store
     idmap_kept = snap.read_idmap(spark, idbs).join(
         droppable.select("vec_id"), "vec_id", "left_anti"
     ).select("vec_id", "seq", "c8", "idb")
-    idb_tomb = spark.createDataFrame(
-        [(b,) for b in idbs], "idb long"
-    ).select(
-        F.lit(None).cast("long").alias("vec_id"),
-        F.lit(None).cast("long").alias("seq"),
-        F.lit(None).cast("string").alias("c8"),
-        "idb",
+    snapshot_store.write_partitions(
+        spark, root, manifest, "idmap", idmap_kept, ["idb"],
+        [(b,) for b in idbs],
     )
-    id_report = _versioned_write(
-        idmap_kept.withColumn(_TOMB, F.lit(False)).unionByName(
-            idb_tomb.withColumn(_TOMB, F.lit(True))
-        ),
-        posixpath.join(root, "idmap"),
-        ["idb"],
-        version,
-    )
-    _apply_updates(manifest, "idmap", id_report, fname)
-    _commit_manifest(root, manifest)
+    snapshot_store.commit(root, manifest)
     return {"n_markers_dropped": n_dropped, "n_cells_rewritten": len(cells)}
 
 
 def vacuum(root: str, retain: int = 2) -> dict:
-    """Delete data files not referenced by the newest ``retain``
-    manifests, manifests older than those, and orphaned task temp files
-    — the Delta/Iceberg VACUUM contract. NOT part of the batch path;
-    must not run concurrently with a reader pinned to a snapshot older
-    than the retained window (same caveat as Delta). All traversal and
-    deletion go through pyarrow.fs, so any URI scheme works. Returns
+    """VACUUM the index's three tables down to the newest ``retain``
+    versions — see ``snapshot_store.vacuum``. Returns
     {files_deleted, manifests_deleted, retained_versions}."""
-    from pyarrow import fs as pafs
-
-    if retain < 1:
-        raise ValueError("retain must be >= 1")
-    latest = current_version(root)
-    if latest is None:
-        return {"files_deleted": 0, "manifests_deleted": 0,
-                "retained_versions": []}
-    versions = list(range(max(1, latest - retain + 1), latest + 1))
-    keep: set[str] = set()
-    for v in versions:
-        snap = load_snapshot(root, v)
-        for tbl in ("store", "idmap", "directory"):
-            for key, fname in snap.files(tbl).items():
-                keep.add(posixpath.join(tbl, key, fname))
-    fs, base, _ = _resolve_fs(root)
-    files_deleted = 0
-    for tbl in ("store", "idmap", "directory"):
-        sel = pafs.FileSelector(
-            posixpath.join(base, tbl), recursive=True, allow_not_found=True
-        )
-        for info in fs.get_file_info(sel):
-            if info.type != pafs.FileType.File:
-                continue
-            rel = posixpath.relpath(info.path, base)
-            name = posixpath.basename(info.path)
-            if rel not in keep and (
-                name.startswith(".tmp-") or name.startswith("part-v")
-            ):
-                fs.delete_file(info.path)
-                files_deleted += 1
-    manifests_deleted = 0
-    mdir = posixpath.join(base, _MANIFEST_DIR)
-    sel = pafs.FileSelector(mdir, allow_not_found=True)
-    for info in fs.get_file_info(sel):
-        name = posixpath.basename(info.path)
-        if name.startswith("v") and name.endswith(".json"):
-            v = int(name[1:-5])
-            if v not in versions:
-                fs.delete_file(info.path)
-                manifests_deleted += 1
-    return {
-        "files_deleted": files_deleted,
-        "manifests_deleted": manifests_deleted,
-        "retained_versions": versions,
-    }
+    return snapshot_store.vacuum(root, TABLES, retain)
 
 
 # ---------------------------------------------------------------------------

@@ -1,16 +1,15 @@
-"""Manifest-committed snapshot storage — the generic layer under every
-standing index this engine maintains (`ann_index` for vectors,
-`dedup_index` for MinHash-LSH signatures).
+"""Manifest-committed snapshot storage — the commit layer and the one
+owner of the on-disk format of the standing ANN index
+(``streaming/ann_index.py``), which calls it by the public names below.
 
 One standing index = a set of parquet TABLES under a common ``root``,
 each partitioned by key columns, plus a ``_manifest`` directory of tiny
-JSON files. The contract (established for the ANN index in round 12 and
-factored out here so the dedup index shares it verbatim):
+JSON files. The contract:
 
 - Data files are VERSIONED: a batch at version N writes
-  ``part-v{N}.parquet`` into each touched partition directory and never
-  mutates a committed file.
-- A single JSON manifest ``_manifest/v{N}.json`` maps every live
+  ``part-v{N:08d}.parquet`` into each touched partition directory and
+  never mutates a committed file.
+- A single JSON manifest ``_manifest/v{N:08d}.json`` maps every live
   partition of every table to its current file; the ``LATEST`` pointer
   flip is the batch's one atomic commit point. Readers resolve
   LATEST → manifest → explicit file list, so a reader concurrent with
@@ -24,9 +23,10 @@ factored out here so the dedup index shares it verbatim):
   same-directory temp+rename, object-store schemes write final keys
   directly (PUT-on-close is atomic there; renames are copies).
 
-Single-writer, many-reader: one foreachBatch drain (or maintenance
-pass) commits at a time — the streaming runtime serializes
-micro-batches — while readers never block it.
+A commit is ``begin`` (the next manifest) → ``write_partitions`` per
+touched table → ``commit``. Single-writer, many-reader: one foreachBatch
+drain (or maintenance pass) commits at a time — the streaming runtime
+serializes micro-batches — while readers never block it.
 
 Reference parity: none (SURVEY §2.D north-star infrastructure); the
 read-while-write contract mirrors the reference source's rule that
@@ -38,14 +38,25 @@ from __future__ import annotations
 
 import json
 import posixpath
+import re
+import uuid
 
-import pyspark.sql.functions as F  # noqa: F401  (re-export convenience)
+import pyspark.sql.functions as F
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 MANIFEST_DIR = "_manifest"
 PKEY = "__pkey"
 TOMB = "_tomb"
+
+# every file the writer leaves in a table directory: a committed data
+# file or the temp of an unfinished publish
+_OURS = re.compile(r"part-v\d{8}\.parquet|\.tmp-[0-9a-f]+")
+
+
+def _manifest_file(base: str, version: int) -> str:
+    return posixpath.join(base, MANIFEST_DIR, f"v{version:08d}.json")
 
 
 # ---------------------------------------------------------------------------
@@ -69,8 +80,6 @@ def resolve_fs(root: str):
     """(filesystem, path-within-filesystem, is_local) for a root that is
     a bare path, a ``file:`` URI, or an object-store URI. ``s3a``/``s3n``
     (Hadoop spellings) map to pyarrow's ``s3``."""
-    from pyarrow import fs as pafs
-
     if "://" in root:
         scheme, rest = root.split("://", 1)
         if scheme in _FS_FACTORIES:
@@ -88,8 +97,6 @@ def fs_write_atomic(fs, local: bool, path: str, data: bytes) -> None:
     """Atomically publish ``data`` at ``path``: same-directory temp +
     rename on a local filesystem (rename replaces), direct PUT elsewhere
     (object-store writes are atomic on close and renames are copies)."""
-    import uuid
-
     parent = posixpath.dirname(path)
     fs.create_dir(parent, recursive=True)
     if local:
@@ -103,12 +110,21 @@ def fs_write_atomic(fs, local: bool, path: str, data: bytes) -> None:
 
 
 def fs_read(fs, path: str) -> bytes | None:
-    from pyarrow import fs as pafs
-
     if fs.get_file_info(path).type == pafs.FileType.NotFound:
         return None
     with fs.open_input_stream(path) as f:
         return f.read()
+
+
+def _table_files(fs, base: str, tables: tuple[str, ...]):
+    """FileInfo of every file under the given tables' directories."""
+    for tbl in tables:
+        sel = pafs.FileSelector(
+            posixpath.join(base, tbl), recursive=True, allow_not_found=True
+        )
+        for info in fs.get_file_info(sel):
+            if info.type == pafs.FileType.File:
+                yield info
 
 
 # ---------------------------------------------------------------------------
@@ -123,7 +139,22 @@ def current_version(root: str) -> int | None:
     return None if raw is None else int(raw.decode())
 
 
-def commit_manifest(root: str, manifest: dict) -> None:
+def begin(prev: dict | None, tables: tuple[str, ...], **meta) -> dict:
+    """The manifest a new commit starts from: version 1 with empty
+    ``tables`` on a virgin root (``prev`` None), else ``prev``'s next
+    version with every table's file map copied. ``meta`` keys are laid
+    over ``prev``'s."""
+    if prev is None:
+        return {"version": 1, "tables": {t: {} for t in tables}, **meta}
+    return {
+        **prev,
+        **meta,
+        "version": prev["version"] + 1,
+        "tables": {t: dict(prev["tables"][t]) for t in tables},
+    }
+
+
+def commit(root: str, manifest: dict) -> None:
     """Publish ``manifest`` as version ``manifest['version']`` — the
     batch's single atomic commit point: the version file lands first,
     the LATEST pointer flip is what makes it visible. A crash between
@@ -132,12 +163,13 @@ def commit_manifest(root: str, manifest: dict) -> None:
     fs, base, local = resolve_fs(root)
     v = manifest["version"]
     data = json.dumps(manifest, sort_keys=True).encode()
-    mdir = posixpath.join(base, MANIFEST_DIR)
-    fs_write_atomic(fs, local, posixpath.join(mdir, f"v{v:08d}.json"), data)
-    fs_write_atomic(fs, local, posixpath.join(mdir, "LATEST"), str(v).encode())
+    fs_write_atomic(fs, local, _manifest_file(base, v), data)
+    fs_write_atomic(
+        fs, local, posixpath.join(base, MANIFEST_DIR, "LATEST"), str(v).encode()
+    )
 
 
-def load_manifest(root: str, version: int | None = None) -> dict | None:
+def load(root: str, version: int | None = None) -> dict | None:
     """The newest committed manifest dict (or a pinned older
     ``version``), None for a virgin root. Two tiny reads (LATEST + one
     JSON) — cheap enough to call per query. RAISES if a pinned version
@@ -148,9 +180,7 @@ def load_manifest(root: str, version: int | None = None) -> dict | None:
         version = current_version(root)
         if version is None:
             return None
-    raw = fs_read(
-        fs, posixpath.join(base, MANIFEST_DIR, f"v{version:08d}.json")
-    )
+    raw = fs_read(fs, _manifest_file(base, version))
     if raw is None:
         raise RuntimeError(
             f"index manifest v{version} missing under {root!r}"
@@ -164,22 +194,13 @@ def assert_virgin_root(root: str, tables: tuple[str, ...]) -> None:
     writer): silently treating it as empty would shadow the existing
     rows forever. Orphaned ``part-v*``/``.tmp-*`` files from a crashed
     FIRST batch are ours and allowed — the replay overwrites them."""
-    import re as _re
-
-    from pyarrow import fs as pafs
-
     fs, base, _ = resolve_fs(root)
-    ours = _re.compile(r"(part-v\d{8}\.parquet|\.tmp-[0-9a-f]+)$")
-    for tbl in tables:
-        sel = pafs.FileSelector(
-            posixpath.join(base, tbl), recursive=True, allow_not_found=True
-        )
-        for info in fs.get_file_info(sel):
-            if info.type == pafs.FileType.File and not ours.search(info.path):
-                raise RuntimeError(
-                    f"{root!r} contains unversioned file {info.path!r} but "
-                    f"no manifest — refusing to shadow foreign data"
-                )
+    for info in _table_files(fs, base, tables):
+        if not _OURS.fullmatch(posixpath.basename(info.path)):
+            raise RuntimeError(
+                f"{root!r} contains unversioned file {info.path!r} but "
+                f"no manifest — refusing to shadow foreign data"
+            )
 
 
 def manifest_read(
@@ -210,6 +231,51 @@ def manifest_read(
     return spark.read.schema(schema).option("basePath", base).parquet(*paths)
 
 
+def vacuum(root: str, tables: tuple[str, ...], retain: int) -> dict:
+    """Delete data files of ``tables`` not referenced by the newest
+    ``retain`` manifests, manifests older than those, and orphaned task
+    temp files — the Delta/Iceberg VACUUM contract. NOT part of the
+    batch path; must not run concurrently with a reader pinned to a
+    snapshot older than the retained window (same caveat as Delta).
+    Returns {files_deleted, manifests_deleted, retained_versions}."""
+    if retain < 1:
+        raise ValueError("retain must be >= 1")
+    latest = current_version(root)
+    if latest is None:
+        return {"files_deleted": 0, "manifests_deleted": 0,
+                "retained_versions": []}
+    versions = list(range(max(1, latest - retain + 1), latest + 1))
+    manifests = [load(root, v) for v in versions]
+    keep = {
+        posixpath.join(tbl, key, fname)
+        for m in manifests
+        for tbl in tables
+        for key, fname in m["tables"][tbl].items()
+    }
+    fs, base, _ = resolve_fs(root)
+    files_deleted = 0
+    for info in _table_files(fs, base, tables):
+        rel = posixpath.relpath(info.path, base)
+        if rel not in keep and _OURS.fullmatch(posixpath.basename(info.path)):
+            fs.delete_file(info.path)
+            files_deleted += 1
+    manifests_deleted = 0
+    sel = pafs.FileSelector(
+        posixpath.join(base, MANIFEST_DIR), allow_not_found=True
+    )
+    for info in fs.get_file_info(sel):
+        name = posixpath.basename(info.path)
+        if name.startswith("v") and name.endswith(".json"):
+            if int(name[1:-5]) not in versions:
+                fs.delete_file(info.path)
+                manifests_deleted += 1
+    return {
+        "files_deleted": files_deleted,
+        "manifests_deleted": manifests_deleted,
+        "retained_versions": versions,
+    }
+
+
 # ---------------------------------------------------------------------------
 # versioned per-partition writer (task-side, pyarrow.fs)
 # ---------------------------------------------------------------------------
@@ -218,7 +284,7 @@ def manifest_read(
 def write_partition_files(
     batches, root: str, fname: str, drop_cols: tuple[str, ...]
 ):
-    """Task body of :func:`versioned_write` (module-level so the
+    """Task body of :func:`write_partitions` (module-level so the
     object-store branch is unit-testable in-process against a mock
     filesystem): stream Arrow batches into one ``fname`` parquet file
     per distinct ``__pkey`` (the relative partition directory), then
@@ -227,8 +293,6 @@ def write_partition_files(
     WITHOUT contributing data (and without creating a file if nothing
     live lands there): that is how a drained partition gets REMOVED
     from the manifest. Yields one (part, n_rows) report batch."""
-    import uuid as _uuid
-
     import pyarrow as _pa
     import pyarrow.compute as _pc
     import pyarrow.parquet as _pq
@@ -247,7 +311,7 @@ def write_partition_files(
                 part_dir = f"{base}/{key}"
                 final = f"{part_dir}/{fname}"
                 tmp = (
-                    f"{part_dir}/.tmp-{_uuid.uuid4().hex}" if local else final
+                    f"{part_dir}/.tmp-{uuid.uuid4().hex}" if local else final
                 )
                 state[key] = [None, tmp, final, 0, part_dir, live.schema]
             if live.num_rows:
@@ -272,14 +336,22 @@ def write_partition_files(
         )
 
 
-def versioned_write(
-    df: DataFrame, table_root: str, part_cols: list[str], version: int
-) -> dict[str, int]:
-    """Write ``df`` (carrying a ``_tomb`` registration flag) as ONE
-    ``part-v{version}.parquet`` file per partition value of
-    ``part_cols`` under ``table_root``, via executor-side pyarrow — and
-    return {relative partition dir: live row count} for the manifest
-    update (bounded: one row per touched partition).
+def write_partitions(
+    spark: SparkSession,
+    root: str,
+    manifest: dict,
+    tbl: str,
+    live: DataFrame,
+    part_cols: list[str],
+    touched: list[tuple],
+) -> None:
+    """Rewrite the ``touched`` partitions (tuples of ``part_cols``
+    values) of table ``tbl`` from ``live`` — ONE data file per
+    partition at ``manifest['version']``, via executor-side pyarrow —
+    and point ``manifest`` at the new files. A touched partition that
+    ``live`` leaves empty is REMOVED from the manifest: every touched
+    partition is registered by a tombstone row (all-null data, ``_tomb``
+    set) that reaches the writer without contributing data.
 
     Why not ``partitionOverwriteMode=dynamic``: its job commit renames
     one staged directory per touched partition, sequentially, on the
@@ -291,29 +363,37 @@ def versioned_write(
     listing) is the committed file index — so a crashed task's partial
     file is invisible and a retry simply rewrites it.
     """
-    fname = f"part-v{version:08d}.parquet"
+    fname = f"part-v{manifest['version']:08d}.parquet"
+    tomb = spark.createDataFrame(
+        touched,
+        StructType([StructField(c, live.schema[c].dataType) for c in part_cols]),
+    ).select(
+        *[
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in live.schema.fields
+            if f.name not in part_cols
+        ],
+        *part_cols,
+    )
     pkey = F.concat_ws(
         "/", *[F.concat(F.lit(f"{c}="), F.col(c).cast("string")) for c in part_cols]
     )
     drop = tuple([PKEY, TOMB, *part_cols])
-    prepared = df.withColumn(PKEY, pkey)
+    table_root = posixpath.join(root, tbl)
     reports = (
-        prepared.repartition(F.col(PKEY))
+        live.withColumn(TOMB, F.lit(False))
+        .unionByName(tomb.withColumn(TOMB, F.lit(True)))
+        .withColumn(PKEY, pkey)
+        .repartition(F.col(PKEY))
         .mapInArrow(
             lambda it: write_partition_files(it, table_root, fname, drop),
             "part string, n_rows long",
         )
         .collect()
     )
-    return {r["part"]: r["n_rows"] for r in reports}
-
-
-def apply_updates(
-    manifest: dict, tbl: str, report: dict[str, int], fname: str
-) -> None:
     entries = manifest["tables"][tbl]
-    for key, n in report.items():
-        if n > 0:
-            entries[key] = fname
+    for r in reports:
+        if r["n_rows"] > 0:
+            entries[r["part"]] = fname
         else:
-            entries.pop(key, None)
+            entries.pop(r["part"], None)

@@ -534,7 +534,7 @@ def main() -> None:
     # standing ANN index: built once, untimed — index CONSTRUCTION is the
     # stream section's job to measure (stream_ann_index_upsert); the
     # headline entry (similarity_standing_index_topk) measures SEARCH
-    from akka_streams_kinesis_spark.operators.streaming_queries import (
+    from akka_streams_kinesis_spark.operators.standing_index import (
         _ensure_standing_index,
         _ensure_tt_index,
     )

@@ -24,6 +24,8 @@ from akka_streams_kinesis_spark.sources.kinesis_sim import (
     TrimHorizon,
 )
 from akka_streams_kinesis_spark.sources.pyds import (
+    _MAX_REISSUE_RETRIES,
+    _MAX_THROTTLE_RETRIES,
     ClientError,
     ExpiredIteratorError,
     ServiceError,
@@ -323,6 +325,53 @@ def test_poll_shard_throttle_backs_off_800ms_and_repolls():
     )
     assert [r["sequence_number"] for r in got] == ["1"]
     assert sleeps == [0.8]
+
+
+class FaultyShardClient:
+    """Raises ``fault`` on the first ``n_faults`` polls, then serves one
+    record from a closed shard."""
+
+    def __init__(self, fault: type, n_faults: int):
+        self.fault, self.n_faults = fault, n_faults
+
+    def get_shard_iterator(self, stream_name, shard_id, iterator):
+        return "it"
+
+    def reissue_iterator(self, stream_name, shard_id, last_seq):
+        return "it"
+
+    def get_records(self, it, limit):
+        if self.n_faults:
+            self.n_faults -= 1
+            raise self.fault("fault")
+        return [{"sequence_number": "1"}], None
+
+
+@pytest.mark.parametrize(
+    "fault,budget",
+    [
+        (ThroughputExceededError, _MAX_THROTTLE_RETRIES),
+        (ExpiredIteratorError, _MAX_REISSUE_RETRIES),
+    ],
+)
+def test_poll_shard_fault_budget_is_bounded(fault, budget):
+    """The read loop's throttle and reissue budgets match pyds's: one
+    consecutive fault past the budget raises, even though the next poll
+    would have succeeded; exactly the budget still drains."""
+    with pytest.raises(RuntimeError, match="consecutive"):
+        list(
+            poll_shard(
+                FaultyShardClient(fault, budget + 1), "s", "s0", Latest(),
+                sleep_fn=lambda s: None,
+            )
+        )
+    got = list(
+        poll_shard(
+            FaultyShardClient(fault, budget), "s", "s0", Latest(),
+            sleep_fn=lambda s: None,
+        )
+    )
+    assert [r["sequence_number"] for r in got] == ["1"]
 
 
 def test_poll_shard_client_error_fails_fast():

@@ -33,8 +33,8 @@ from akka_streams_kinesis_spark.sources.pyds import (
     ThroughputExceededError,
     _default_read_file,
     _MAX_SERVICE_RETRIES,
-    _THROTTLE_BACKOFF_S,
 )
+from akka_streams_kinesis_spark.streaming.writer import KINESIS_BACKOFF_SECONDS
 
 
 @pytest.fixture()
@@ -136,7 +136,7 @@ def test_throughput_exceeded_backs_off_and_repolls(stream):
     )
     rows = _drain(reader)
     assert len(rows) == 40
-    assert sleeps.count(_THROTTLE_BACKOFF_S) == 2   # 800 ms per throttle
+    assert sleeps.count(KINESIS_BACKOFF_SECONDS) == 2   # 800 ms per throttle
 
 
 def test_service_error_bounded_retries_then_succeeds(stream):

@@ -19,24 +19,20 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
+from akka_streams_kinesis_spark.streaming import snapshot_store
 from akka_streams_kinesis_spark.streaming.ann_index import (
     DELETED_COL,
     MAX_BITS,
-    _commit_manifest,
-    _fs_write_atomic,
-    _resolve_fs,
-    _write_partition_files,
     assign_cells,
     compact_markers,
-    current_version,
     index_merger,
     load_snapshot,
     read_directory,
     read_idmap,
     read_store,
-    register_fs_factory,
     vacuum,
 )
+from akka_streams_kinesis_spark.streaming.snapshot_store import current_version
 
 
 def _upserts(spark, rows, schema="vec_id long, seq long, code string"):
@@ -73,7 +69,7 @@ class TestSnapshotIsolation:
         fresh vec_id — guaranteed to enter query 0's top-k (cosine 1.0)
         — so 'pre-batch answer' and 'post-batch answer' differ
         provably."""
-        from akka_streams_kinesis_spark.operators.streaming_queries import (
+        from akka_streams_kinesis_spark.operators.standing_index import (
             _ensure_standing_index,
             _standing_search,
         )
@@ -144,7 +140,7 @@ class TestSnapshotIsolation:
 
 
 class TestObjectStoreBranch:
-    """The non-local `_resolve_fs` branch, exercised against pyarrow's
+    """The non-local `resolve_fs` branch, exercised against pyarrow's
     in-memory mock filesystem (no network): parquet writes via the
     filesystem handle, manifest commit via direct PUT, vacuum traversal
     — and NO local junk directories like 's3a:/…' (the round-11 ADVICE
@@ -155,18 +151,16 @@ class TestObjectStoreBranch:
         from pyarrow.fs import _MockFileSystem
 
         fs = _MockFileSystem()
-        register_fs_factory("mock", lambda: fs)
+        snapshot_store.register_fs_factory("mock", lambda: fs)
         yield fs
-        from akka_streams_kinesis_spark.streaming import ann_index
-
-        ann_index._FS_FACTORIES.pop("mock", None)
+        snapshot_store._FS_FACTORIES.pop("mock", None)
 
     def test_resolve_fs_dispatch(self, mockfs, tmp_path):
-        fs, base, local = _resolve_fs("mock://idx")
+        fs, base, local = snapshot_store.resolve_fs("mock://idx")
         assert fs is mockfs and base == "idx" and not local
-        fs2, base2, local2 = _resolve_fs("file:" + str(tmp_path))
+        fs2, base2, local2 = snapshot_store.resolve_fs("file:" + str(tmp_path))
         assert local2 and base2 == str(tmp_path)
-        fs3, base3, local3 = _resolve_fs(str(tmp_path))
+        fs3, base3, local3 = snapshot_store.resolve_fs(str(tmp_path))
         assert local3 and base3 == str(tmp_path)
 
     def test_partition_writer_on_mock_fs(self, mockfs):
@@ -186,7 +180,7 @@ class TestObjectStoreBranch:
             }
         )
         reports = list(
-            _write_partition_files(
+            snapshot_store.write_partition_files(
                 [batch], "mock://idx/store", "part-v00000001.parquet",
                 ("__pkey", "_tomb"),
             )
@@ -226,28 +220,28 @@ class TestObjectStoreBranch:
             "store_payload": {"type": "struct", "fields": []},
             "tables": {"store": {}, "idmap": {}, "directory": {}},
         }
-        _commit_manifest("mock://idx", manifest)
+        snapshot_store.commit("mock://idx", manifest)
         assert current_version("mock://idx") == 1
         snap = load_snapshot("mock://idx")
         assert snap.version == 1 and snap.store_buckets == 2
         manifest["version"] = 2
-        _commit_manifest("mock://idx", manifest)
+        snapshot_store.commit("mock://idx", manifest)
         assert current_version("mock://idx") == 2
         # pinned older version still loadable
         assert load_snapshot("mock://idx", 1).version == 1
 
     def test_atomic_write_and_vacuum_on_mock_fs(self, mockfs):
-        _fs_write_atomic(mockfs, False, "idx/x/data", b"payload")
+        snapshot_store.fs_write_atomic(mockfs, False, "idx/x/data", b"payload")
         with mockfs.open_input_stream("idx/x/data") as f:
             assert f.read() == b"payload"
         # a two-version index whose v1 store file gets superseded
         for v, files in ((1, {"c8=b01/sb=0": "part-v00000001.parquet"}),
                          (2, {"c8=b01/sb=0": "part-v00000002.parquet"})):
             for fname in files.values():
-                _fs_write_atomic(
+                snapshot_store.fs_write_atomic(
                     mockfs, False, f"idx2/store/c8=b01/sb=0/{fname}", b"x"
                 )
-            _commit_manifest(
+            snapshot_store.commit(
                 "mock://idx2",
                 {
                     "version": v,
@@ -485,7 +479,7 @@ class TestServeDuringDrain:
     replays any committed version after the fact."""
 
     def test_drain_commits_two_seq_aligned_versions(self, spark, sf_dir):
-        from akka_streams_kinesis_spark.operators.streaming_queries import (
+        from akka_streams_kinesis_spark.operators.standing_index import (
             _ensure_tt_index,
         )
 
@@ -502,7 +496,7 @@ class TestServeDuringDrain:
     def test_first_put_file_count_is_a_proper_prefix(self, spark, sf_dir):
         import os as _os
 
-        from akka_streams_kinesis_spark.operators.streaming_queries import (
+        from akka_streams_kinesis_spark.operators.standing_index import (
             _ann_upsert_stream,
             _first_put_file_count,
         )
@@ -518,7 +512,7 @@ class TestServeDuringDrain:
         assert 0 < n0 < total
 
     def test_anchorless_search_schema(self, spark, sf_dir):
-        from akka_streams_kinesis_spark.operators.streaming_queries import (
+        from akka_streams_kinesis_spark.operators.standing_index import (
             _TT_SEARCH_COLS,
             _ensure_standing_index,
             _standing_search,
@@ -535,7 +529,7 @@ class TestServeDuringDrain:
         between v1 and v2 — the two versions' rankings must not be
         identical, and unflipped queries' CANDIDATE CELLS (their own c8)
         stay put."""
-        from akka_streams_kinesis_spark.operators.streaming_queries import (
+        from akka_streams_kinesis_spark.operators.standing_index import (
             similarity_standing_index_time_travel,
         )
 
@@ -558,9 +552,9 @@ class TestServeDuringDrain:
         row (on a COPY of the cached build) and the query must refuse."""
         import pyarrow.parquet as _pq
 
-        from akka_streams_kinesis_spark.operators import streaming_queries as sq
+        from akka_streams_kinesis_spark.operators import standing_index as si
 
-        src_root, _src_served = sq._ensure_tt_index(spark, sf_dir)
+        src_root, _src_served = si._ensure_tt_index(spark, sf_dir)
         base = str(tmp_path / "tt_tampered")
         shutil.copytree(os.path.dirname(src_root), base)
         served = os.path.join(base, "served")
@@ -585,16 +579,16 @@ class TestServeDuringDrain:
                 if crc.endswith(".crc"):
                     os.remove(os.path.join(d, crc))
 
-        real = sq.derived_dir
+        real = si.derived_dir
 
         def _redirect(spark_, sf, name, build):
             if name == "annidx_timetravel":
                 return base
             return real(spark_, sf, name, build)
 
-        monkeypatch.setattr(sq, "derived_dir", _redirect)
+        monkeypatch.setattr(si, "derived_dir", _redirect)
         with pytest.raises(RuntimeError, match="diverges"):
-            sq.similarity_standing_index_time_travel(spark, sf_dir).collect()
+            si.similarity_standing_index_time_travel(spark, sf_dir).collect()
 
     def test_serving_record_is_replay_idempotent(
         self, spark, sf_dir, tmp_path
@@ -603,7 +597,7 @@ class TestServeDuringDrain:
         serve and the merge commit replays the batch — the replayed
         serve reads the SAME committed snapshot (the merge hadn't
         committed) and must overwrite, not duplicate, its record."""
-        from akka_streams_kinesis_spark.operators.streaming_queries import (
+        from akka_streams_kinesis_spark.operators.standing_index import (
             _ensure_tt_index,
             _read_served,
             _serve_and_record,
@@ -630,7 +624,7 @@ class TestServeDuringDrain:
         a reader pinning the vacuumed version must get the explicit
         missing-manifest raise (never a partial read), while the
         retained latest stays fully readable."""
-        from akka_streams_kinesis_spark.operators.streaming_queries import (
+        from akka_streams_kinesis_spark.operators.standing_index import (
             _ensure_tt_index,
         )
 

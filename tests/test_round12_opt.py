@@ -125,7 +125,7 @@ def test_scratch_copy_hardlink_isolation(tmp_path):
     swap the SCRATCH directory entry, never the shared source inode."""
     import os
 
-    from akka_streams_kinesis_spark.operators.streaming_queries import (
+    from akka_streams_kinesis_spark.operators.standing_index import (
         _scratch_copy,
     )
 

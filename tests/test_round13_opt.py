@@ -268,7 +268,7 @@ def test_standing_exact_anchor_matches_fold_ranking(spark, sf_dir):
     from pyspark.sql import Window
 
     from akka_streams_kinesis_spark.operators.similarity import cosine_sim
-    from akka_streams_kinesis_spark.operators.streaming_queries import (
+    from akka_streams_kinesis_spark.operators.standing_index import (
         _SI_K,
         _SI_NQ,
         _ensure_standing_index,
@@ -308,7 +308,7 @@ def test_standing_exact_anchor_matches_fold_ranking(spark, sf_dir):
 def test_time_travel_fused_matches_per_version_searches(spark, sf_dir):
     """The r13 fused two-version time-travel plan must reproduce the old
     two-independent-searches formulation row for row (both versions)."""
-    from akka_streams_kinesis_spark.operators.streaming_queries import (
+    from akka_streams_kinesis_spark.operators.standing_index import (
         _TT_SEARCH_COLS,
         _ensure_tt_index,
         _standing_search,
