@@ -168,7 +168,7 @@ def _ann_upserts_df(
     stream (plus a non-null ``deleted`` flag when ``cdc``), chopped by
     ``files_per_trigger`` — by default into ~2 micro-batches (the natural
     seq-0-corpus / seq-1-updates arrival split). Finer chopping plus
-    at-least-once redelivery is property-tested in tests/test_round11.py
+    at-least-once redelivery is property-tested in tests/test_ann_index.py
     — every chopping must yield the same index (latest-wins is associative /
     commutative / idempotent); the gated drain itself uses the coarse
     chop because per-batch cost is dominated by the store's

@@ -237,22 +237,27 @@ def vacuum(root: str, tables: tuple[str, ...], retain: int) -> dict:
     temp files — the Delta/Iceberg VACUUM contract. NOT part of the
     batch path; must not run concurrently with a reader pinned to a
     snapshot older than the retained window (same caveat as Delta).
-    Returns {files_deleted, manifests_deleted, retained_versions}."""
+    Returns {files_deleted, manifests_deleted, retained_versions}; a
+    version in the window whose manifest an earlier, narrower vacuum
+    already deleted is skipped and not reported as retained."""
     if retain < 1:
         raise ValueError("retain must be >= 1")
     latest = current_version(root)
     if latest is None:
         return {"files_deleted": 0, "manifests_deleted": 0,
                 "retained_versions": []}
-    versions = list(range(max(1, latest - retain + 1), latest + 1))
-    manifests = [load(root, v) for v in versions]
+    fs, base, _ = resolve_fs(root)
+    manifests = {}
+    for v in range(max(1, latest - retain + 1), latest + 1):
+        raw = fs_read(fs, _manifest_file(base, v))
+        if raw is not None:
+            manifests[v] = json.loads(raw.decode())
     keep = {
         posixpath.join(tbl, key, fname)
-        for m in manifests
+        for m in manifests.values()
         for tbl in tables
         for key, fname in m["tables"][tbl].items()
     }
-    fs, base, _ = resolve_fs(root)
     files_deleted = 0
     for info in _table_files(fs, base, tables):
         rel = posixpath.relpath(info.path, base)
@@ -266,13 +271,13 @@ def vacuum(root: str, tables: tuple[str, ...], retain: int) -> dict:
     for info in fs.get_file_info(sel):
         name = posixpath.basename(info.path)
         if name.startswith("v") and name.endswith(".json"):
-            if int(name[1:-5]) not in versions:
+            if int(name[1:-5]) not in manifests:
                 fs.delete_file(info.path)
                 manifests_deleted += 1
     return {
         "files_deleted": files_deleted,
         "manifests_deleted": manifests_deleted,
-        "retained_versions": versions,
+        "retained_versions": list(manifests),
     }
 
 

@@ -1,10 +1,20 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+"""Benchmark harness: every registry query at $SPARK_GRAFT_SF_DIR (default
+sf0.1) on local[$SPARK_GRAFT_CPUS], in two sections taken from the
+registry. HEADLINE (every name without the ``stream_`` prefix) is timed
+as a latency, STREAM_SECTION (the ``stream_`` drains) as rows/s. Prints
+two JSON lines, the full summary (also written to BENCH_SUMMARY.json)
+and then a short schema-stable one:
+{"metric": "headline_query_total_seconds", "value": total_sec, "unit": "sec", ...}
 
 Execution is forced with the noop sink (full plan runs JVM-side, no
 driver collect cost), matching how a production job would be bounded by
 compute + shuffle rather than result transfer.
+
+``warm_up`` and ``time_queries`` are the one way to time a registry
+query; scripts/interleaved_ab.py and scripts/scaling_canary.py call them
+too. Importing this module starts no SparkSession.
+
+Usage: python bench.py [--only q1,q2,...]
 """
 
 from __future__ import annotations
@@ -20,296 +30,15 @@ from akka_streams_kinesis_spark import get_session, registry
 
 registry.load_all()
 
-# Headline set: the shuffle-heavy / join-heavy / Python-boundary-crossing
-# representatives of each operator family.
-HEADLINE = [
-    "tpch_q1_pricing_summary",
-    "tpch_q3_top_orders",
-    "tpch_q5_region_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q18_large_volume_customers",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q12_ship_speed_priority",
-    "tpch_q15_top_supplier",
-    "tpch_q16_part_supplier_counts",
-    "tpch_q20_excess_share_suppliers",
-    "window_range_frame_trailing_spend",
-    "agg_rollup_region_nation",
-    "agg_distinct_users_per_type",
-    "window_topk_orders_per_customer",
-    "window_running_totals",
-    "events_hourly_rollup",
-    "events_sessionize",
-    "behavior_funnel_view_click_purchase",
-    "behavior_weekly_retention",
-    "asof_join_last_login",
-    "asof_forward_time_to_purchase",
-    "join_range_price_bands",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_minhash_similarity",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "similarity_cosine_topk",
-    "similarity_ann_ivf",
-    "text_top_tokens",
-    "text_fingerprint",
-    "text_tfidf_top_terms",
-    "text_repetition_filter",
-    "text_unigram_surprisal",
-    "pipeline_quality_dedup_filter",
-    "multimodal_binary_features",
-    "multimodal_frame_sample",
-    "embedding_near_dup_pairs",
-    "pivot_user_event_matrix",
-    "events_sliding_windows",
-    "udf_pandas_scalar_shannon",
-    "dedup_cluster_components",
-    "text_repeated_shingles",
-    "curation_dataset_card",
-    "pack_sequences_bins",
-    "curation_decontaminate_train",
-    "similarity_hyperplane_lsh",
-    "events_ewma_value",
-    "agg_heavy_hitters_topk",
-    "text_bpe_pair_counts",
-    "events_transition_matrix",
-    "dedup_semantic_kmeans",
-    "embedding_pca_project",
-    "similarity_ann_pq",
-    "similarity_ann_ivf_pq",
-    "layout_bucketed_join",
-    "layout_partition_pruning",
-    "layout_compact_small_files",
-    "source_pyds_ingest_rollup",
-    "source_reshard_replay_rollup",
-    "source_at_timestamp_tail",
-    "egress_writer_passthrough",
-    "egress_writer_dlq_split",
-    "egress_writer_throttle_requeue",
-    "text_chunk_windows",
-    "curation_token_budget_sample",
-    "events_scd2_user_state",
-    "events_robust_outliers_mad",
-    "multimodal_phash_buckets",
-    "agg_hll_sketch_union",
-    "agg_salted_two_phase",
-    "sample_fixed_per_group",
-    "curation_domain_mixture_weights",
-    "text_quality_linear_classifier",
-    "layout_zorder_cluster",
-    "dedup_incremental_digest",
-    "maintenance_merge_upsert",
-    "quality_expectations_report",
-    "join_fuzzy_entity_resolution",
-    "maintenance_snapshot_diff",
-    "behavior_attribution_last_touch",
-    "curation_importance_weights",
-    "curation_decontaminate_bloom",
-    "agg_count_min_sketch",
-    "join_salted_skew_join",
-    "curation_dedup_keep_best",
-    "text_duplicate_spans",
-    "multimodal_clip_pair_filter",
-    "curation_decontaminate_fuzzy",
-    "egress_pyds_batch_write",
-    "similarity_knn_graph_blocked",
-    "text_bigram_lm_kneser_ney",
-    "scan_formats_roundtrip",
-    "maintenance_table_stats",
-    "maintenance_retention_vacuum",
-    "agg_histogram_quantiles",
-    "embedding_matryoshka_truncation_qa",
-    "pipeline_pretraining_prep",
-    "asof_feature_snapshot",
-    "asof_join_tolerance",
-    "text_langid_confusion",
-    "join_scd2_point_in_time",
-    "curation_ngram_novelty",
-    "sample_weighted_reservoir",
-    "events_inter_arrival_stats",
-    "subquery_lateral_recent_orders",
-    "window_rows_frame_moving_avg",
-    "scalar_bitwise_functions",
-    "events_burst_detection",
-    "similarity_paired_retrieval_eval",
-    "similarity_hard_negative_mining",
-    "behavior_dau_wau_stickiness",
-    "agg_argmin_argmax_by",
-    "behavior_longest_streak",
-    "curation_tokenizer_fertility",
-    "behavior_spend_pareto",
-    "dedup_method_venn",
-    "layout_manifest_zonemap",
-    "events_velocity_features",
-    "text_zipf_fit",
-    "similarity_centroid_drift",
-    "events_session_conversion_by_depth",
-    "curation_quality_threshold_sweep",
-    "maintenance_table_checksum",
-    "asof_join_nearest",
-    "split_leakage_safe_clusters",
-    "agg_hll_intersection_estimate",
-    "events_session_concurrency",
-    "maintenance_partition_skew_report",
-    "window_cumulative_distinct_users",
-    "sample_class_balance_downsample",
-    "behavior_rfm_segments",
-    "events_change_point_cusum",
-    "embedding_dimension_variance_report",
-    "text_ngram_entropy_filter",
-    "text_vocab_growth_heaps",
-    "curation_dedup_rate_by_source",
-    "agg_mode_per_group",
-    # Round 5: HEADLINE covers EVERY batch query in the registry — the
-    # former "cheap singles" exclusions (scalar/join/window/tpch/text
-    # families) are timed too, so coverage needs no judgment calls. The
-    # only non-HEADLINE queries are STREAM_SECTION below.
-    "agg_approx_distinct_users",
-    "agg_approx_percentiles_sketch",
-    "agg_collect_sorted_lists",
-    "agg_corr_covar_price_qty",
-    "agg_cube_status_priority",
-    "agg_exact_percentiles",
-    "agg_grouping_sets",
-    "agg_median_countif_bool",
-    "agg_stats_variance",
-    "curation_quality_prune",
-    "dedup_normalized",
-    "dedup_shingle_containment",
-    "dedup_simhash_buckets",
-    "embedding_quantize_int8",
-    "events_gap_fill_resample",
-    "events_zscore_outliers",
-    "join_anti_inactive_customers",
-    "join_band_lookup_nested_loop",
-    "join_full_outer_nation_wealth",
-    "join_left_outer_order_counts",
-    "join_right_outer_sampled_customers",
-    "join_semi_big_spenders",
-    "multimodal_audio_features",
-    "multimodal_resize_thumbnails",
-    "sample_reproducible",
-    "sample_stratified_by_language",
-    "scalar_array_functions",
-    "scalar_date_functions",
-    "scalar_json_extraction",
-    "scalar_map_json_keys",
-    "scalar_math_case_tiers",
-    "scalar_null_handling",
-    "scalar_string_functions",
-    "setops_segment_overlap",
-    "similarity_label_centroids",
-    "sort_limit_top_orders",
-    "split_train_valid_test",
-    "subquery_in_recent_buyers",
-    "subquery_scalar_above_avg",
-    "text_language_id",
-    "text_pii_scrub",
-    "text_quality_scores",
-    "text_stopword_ratio",
-    "text_token_counts_bpe",
-    "tpch_q10_returned_items",
-    "tpch_q13_order_distribution",
-    "tpch_q14_promo_effect",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q22_dormant_customers",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "udaf_pandas_weighted_mean",
-    "udtf_sentence_split",
-    "unpivot_nation_balances",
-    "window_first_last_nth",
-    "window_percent_rank_cume",
-    # round-5 additions
-    "events_time_weighted_avg",
-    "events_seasonality_profile",
-    "behavior_cohort_ltv_triangle",
-    "behavior_growth_accounting",
-    "curation_quantile_normalize_scores",
-    "text_boilerplate_by_source",
-    "window_rank_dense_ntile",
-    "join_bloom_prefilter_reduction",
-    "events_funnel_time_bounded",
-    "window_session_funnel_paths",
-    "behavior_segment_migration_matrix",
-    "layout_sorted_write_clustering",
-    "quality_psi_drift_report",
-    "curation_soft_dedup_weighting",
-    # round-6 additions
-    "graph_pagerank_purchases",
-    "graph_triangle_count_cosupply",
-    "agg_regression_value_trend",
-    "events_mann_kendall_trend",
-    "curation_gopher_quality_rules",
-    "dedup_minhash_band_tuning",
-    "maintenance_manifest_orphans",
-    "dedup_pair_similarity_histogram",
-    "pipeline_incremental_corpus_refresh",
-    "graph_jaccard_link_prediction",
-    "graph_degree_distribution",
-    "similarity_diversified_topk",
-    "similarity_multiprobe_recall_sweep",
-    "similarity_standing_index_topk",
-    "maintenance_ann_marker_compaction",
-    "maintenance_compaction_planner",
-    "dedup_cluster_size_histogram",
-    "quality_classifier_agreement_kappa",
-    "similarity_ivf_cell_balance_report",
-    "multimodal_phash_hamming_pairs",
-    "maintenance_schema_evolution_audit",
-    "pack_sequences_waste_sweep",
-    "text_bpe_train_merges",
-    "events_frequent_sequences",
-    "events_pattern_match_sequence",
-    "graph_core_peel_quantile",
-    "agg_weighted_median",
-    "curation_source_overlap_matrix",
-    "maintenance_incremental_view_refresh",
-    "behavior_ab_test_lift",
-    "events_sliding_distinct_users",
-    "scalar_decimal_money_arithmetic",
-    "source_shard_occupancy_report",
-    # round 7
-    "curation_temperature_sampling",
-    "maintenance_delete_vectors_mor",
-    "graph_label_propagation_communities",
-    "dedup_split_leakage_audit",
-    "behavior_next_event_prediction",
-    "similarity_knn_label_eval",
-    "layout_partition_spec_evolution",
-    "layout_dynamic_partition_pruning",
-    "agg_frequent_itemset_pairs",
-    "source_checkpoint_restart_rollup",
-    "scalar_variant_json_shredding",
-    # round 8
-    "scalar_decimal_money_dbg_n",
-    "scalar_decimal_money_dbg_total_cents",
-    "scalar_decimal_money_dbg_total_money",
-    "graph_personalized_pagerank",
-    "similarity_binary_quantization",
-    "agg_bitmap_exact_distinct_rollup",
-    "similarity_mips_norm_augment",
-    "text_chunk_dedup_rate",
-    "agg_bitmap_exact_intersection",
-    # Round 9
-    "graph_triangle_census_selfcheck",
-    "text_bm25_ranked_retrieval",
-    "retrieval_hybrid_rrf",
-    "retrieval_eval_system_comparison",
-    "events_holt_linear_forecast",
-    "join_interval_overlap_surge",
-    "quality_calibration_reliability",
-    # round 12
-    "similarity_standing_index_recall_sweep",
-    "maintenance_ann_vacuum_retention",
-    "similarity_standing_index_time_travel",
-]
+# The two bench sections partition the registry by name prefix, in
+# registry order. A stream_ query drains a micro-batch stream through a
+# fresh checkpoint (availableNow trigger), so a wall-clock latency next
+# to batch queries would measure trigger + checkpoint overhead, not plan
+# quality: the stream section reports THROUGHPUT (rows/s over the drained
+# events input), one entry per query in "stream_rates".
+# tests/test_bench_coverage.py pins the partition.
+STREAM_SECTION = [n for n in registry.QUERIES if n.startswith("stream_")]
+HEADLINE = [n for n in registry.QUERIES if not n.startswith("stream_")]
 
 # Drift sentinel (VERDICT r09 ask #1): ~12 stable queries whose code has
 # been untouched since round ≤5, spanning families (tpch scan+agg,
@@ -427,53 +156,120 @@ DRIFT_BASELINE_SF = 0.1
 # headroom for value digits growing — trim "slowest" before exceeding.
 SHORT_LINE_BUDGET = 1950
 
-# Streaming-runtime queries: every registry name with the stream_ prefix.
-# Each drains a micro-batch stream through a fresh checkpoint
-# (availableNow trigger), so a wall-clock latency next to batch queries
-# would measure trigger + checkpoint overhead, not plan quality. They are
-# benched in the stream section below as THROUGHPUT (rows/s over the
-# drained events input), one entry per query in "stream_rates".
-# HEADLINE ∪ STREAM_SECTION must equal the registry exactly, with the
-# prefix as the membership predicate — pinned by
-# tests/test_bench_coverage.py.
-STREAM_SECTION = [
-    "stream_ingest_hourly_rollup",
-    "stream_dedup_counts",
-    "stream_dedup_within_watermark",
-    "stream_incremental_dedup_store",
-    "stream_rollup_table_maintenance",
-    "stream_session_windows",
-    "stream_stateful_running_totals",
-    "stream_stream_interval_join",
-    "stream_merge_upsert_table",
-    "stream_distinct_users_hll",
-    "stream_egress_pyds_relay",
-    "stream_heavy_hitters_mg",
-    "stream_static_dim_enrichment",
-    "stream_windowed_topk",
-    "stream_observed_ingest_metrics",
-    "stream_exactly_once_sink",
-    "stream_backfill_union_live",
-    "stream_pattern_match_cep",
-    "stream_two_sinks_atomic",
-    "stream_multi_source_union",
-    "stream_stream_left_outer_join",
-    "stream_session_timeout_eviction",
-    # round 10
-    "stream_ann_index_upsert",
-    # round 11
-    "stream_ann_index_cdc_deletes",
-    # round 12
-    "stream_ann_search_during_upsert",
-]
+
+def _noop(df) -> None:
+    """Run ``df``'s whole plan JVM-side into the noop sink."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Untimed warm-up: JVM codegen, parquet readers, shuffle machinery
+    and the Python/Arrow worker pool, so that timings reflect steady
+    state, which is what matters for a long-running cluster job."""
+    from akka_streams_kinesis_spark.io import table
+
+    for name in ("lineitem", "orders", "events", "documents", "embeddings"):
+        table(spark, sf_dir, name).limit(1).count()
+    for name in ("tpch_q1_pricing_summary", "tpch_q3_top_orders"):
+        _noop(registry.QUERIES[name](spark, sf_dir))
+
+
+def time_queries(spark, queries, sf_dir: str, names, rounds: int = 1):
+    """Time ``queries[name](spark, sf_dir)`` into the noop sink for each
+    round and each of ``names``, in order. Each run sets the Spark job
+    group to the name, so every job of a timed run traces to its query.
+    A run's wall clock covers building the frame and running it; the
+    seconds that ``shared_frame`` builds took inside it (a family's
+    first consumer pays the build) are recorded beside it.
+
+    Per-query fault isolation: one raising query must never zero a whole
+    timing artifact (round 3 lost all 132 timings to a single ANSI
+    overflow). Its message lands in ``errors[name]`` and the other names
+    still run in every round.
+
+    Returns (walls, builds, errors): name → wall seconds per successful
+    run, name → shared-build seconds per successful run, and name → the
+    first 300 characters of its last error."""
+    from akka_streams_kinesis_spark import shared
+
+    sc = spark.sparkContext
+    walls: dict[str, list[float]] = {n: [] for n in names}
+    builds: dict[str, list[float]] = {n: [] for n in names}
+    errors: dict[str, str] = {}
+    for _ in range(rounds):
+        for name in names:
+            sc.setJobGroup(name, name)
+            b0 = shared.build_seconds_total()
+            t0 = time.perf_counter()
+            try:
+                _noop(queries[name](spark, sf_dir))
+            except Exception as e:
+                errors[name] = str(e)[:300]
+                print(f"# {name}: ERROR {errors[name][:200]}", file=sys.stderr)
+                continue
+            walls[name].append(time.perf_counter() - t0)
+            builds[name].append(shared.build_seconds_total() - b0)
+            print(f"# {name}: {walls[name][-1]:.2f}s", file=sys.stderr)
+    return walls, builds, errors
+
+
+def short_line(full: dict) -> str:
+    """The short schema-stable JSON line printed LAST, small enough that
+    no tail buffer can truncate it mid-object; per-query detail lives in
+    BENCH_SUMMARY.json. The drift sentinel rides in it too, because a
+    tail capture truncates the long line and the sentinel is the part
+    needed intact to attribute a total-seconds move. A tail capture of
+    the last 2000 bytes of stdout cannot hold a 276-entry queries map,
+    so per-query signal for the HEAVY names rides here as "slowest"
+    (top-15 by seconds) plus "families" (per-family subtotals);
+    "slowest" is trimmed before the line may outgrow SHORT_LINE_BUDGET."""
+    timings = full["queries"]
+    sent = full["drift_sentinel"]
+    slowest = {
+        n: round(timings[n], 2)
+        for n in sorted(timings, key=lambda n: -timings[n])[:15]
+    }
+    families: dict[str, float] = {}
+    for n, s in timings.items():
+        fam = n.split("_", 1)[0]
+        families[fam] = families.get(fam, 0.0) + s
+    short = {
+        "metric": full["metric"],
+        "value": full["value"],
+        "unit": full["unit"],
+        "n_queries": len(timings),
+        "n_errors": len(full["errors"]),
+        "shared_builds_total": full["shared_builds_total"],
+        "drift_sentinel_total": sent["current"]["total"],
+        "drift_baseline": sent["baseline"],
+        "drift_factor": sent["drift_factor"],
+        "drift_factor_median": sent["drift_factor_median"],
+        "drift_median_baseline": sent["median_baseline"],
+        # per-name sentinel values ride the SHORT line: the r11 tail
+        # capture truncated the long line's "current" section, leaving
+        # no per-name r11 history
+        "sentinel_current": {
+            n: s for n, s in sent["current"].items() if n != "total"
+        },
+        "slowest": slowest,
+        "families": {k: round(v, 1) for k, v in sorted(families.items())},
+        "stream_ingest_rows_per_sec": full["stream_ingest_rows_per_sec"],
+        "sf": full["sf"],
+        "queries_file": "BENCH_SUMMARY.json",
+    }
+    line = json.dumps(short)
+    while len(line.encode()) > SHORT_LINE_BUDGET and len(slowest) > 5:
+        slowest.pop(next(reversed(slowest)))
+        line = json.dumps(short)
+    return line
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # --only q1,q2: pre-commit smoke for newly added HEADLINE queries —
-    # runs just those at sf0.1 (no warmups, no stream drain, no summary
-    # file) so a query can never again ship unbenched. rc=1 on any error.
+    # --only q1,q2: pre-commit smoke for newly added queries — runs just
+    # those (no warmups, no stream drain, no summary file) so a query can
+    # never again ship unbenched. rc=1 on any error.
     only: list[str] | None = None
     if "--only" in sys.argv:
         if sys.argv.index("--only") + 1 >= len(sys.argv):
@@ -488,29 +284,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     if only is not None:
-        errs = 0
-        for name in only:
-            t0 = time.perf_counter()
-            try:
-                registry.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                print(f"# {name}: {time.perf_counter() - t0:.2f}s", file=sys.stderr)
-            except Exception as e:
-                errs += 1
-                print(f"# {name}: ERROR {str(e)[:200]}", file=sys.stderr)
+        _, _, errors = time_queries(spark, registry.QUERIES, sf_dir, only)
         spark.stop()
-        sys.exit(1 if errs else 0)
+        sys.exit(1 if errors else 0)
 
-    # Warm-up (not timed): JVM codegen, parquet readers, shuffle machinery,
-    # and the Python/Arrow worker pool — so timings reflect steady state,
-    # which is what matters for a long-running cluster job.
-    from akka_streams_kinesis_spark.io import table
-
-    for name in ("lineitem", "orders", "events", "documents", "embeddings"):
-        table(spark, sf_dir, name).limit(1).count()
-    for warm in ("tpch_q1_pricing_summary", "tpch_q3_top_orders", "multimodal_binary_features"):
-        registry.QUERIES[warm](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)
+    # bench's own untimed pre-builds start here: the binary-column path
+    _noop(registry.QUERIES["multimodal_binary_features"](spark, sf_dir))
     # materialize the layout tables untimed: bucketing/partitioning are
     # one-time ingest costs amortized over every query that reuses the
     # layout — the timed run measures querying the laid-out data
@@ -545,46 +325,30 @@ def main() -> None:
     # drain; the headline entry measures the two pinned searches
     _ensure_tt_index(spark, sf_dir)
     _warm_stream = _materialize_events_stream(spark, sf_dir, copies=1, flavor="once")
-    (
+    _noop(
         spark.read.format(_pyds.FORMAT_NAME)
         .option("path", _warm_stream.path)
         .load()
         .limit(1)
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
     )
 
-    # Per-query fault isolation: one throwing query must never zero the
-    # whole round's timing artifact (round 3 lost all 132 timings to a
-    # single ANSI overflow). Failures are recorded under "errors" and the
-    # summary line is always emitted; rc is 1 iff any query failed.
-    # shared_frame builds are timed inside shared.py and SUBTRACTED from
-    # the first consumer's wall clock (VERDICT r09 ask #2): the family's
-    # one-time build cost is reported once under "shared_builds" instead
-    # of misreading as a flagship regression on whichever query runs
-    # first. "value" still includes the builds (sum(queries) +
-    # shared_builds_total) so totals stay comparable round-over-round.
+    # Failures are recorded under "errors" and the summary line is
+    # always emitted; rc is 1 iff any query failed.
+    # shared_frame builds are SUBTRACTED from the first consumer's wall
+    # clock (VERDICT r09 ask #2): the family's one-time build cost is
+    # reported once under "shared_builds" instead of misreading as a
+    # flagship regression on whichever query runs first. "value" still
+    # includes the builds (sum(queries) + shared_builds_total) so totals
+    # stay comparable round-over-round.
     from akka_streams_kinesis_spark import shared
+    from akka_streams_kinesis_spark.io import table
 
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in HEADLINE:
-        fn = registry.QUERIES[name]
-        b0 = shared.build_seconds_total()
-        t0 = time.perf_counter()
-        try:
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-        except Exception as e:
-            errors[name] = str(e)[:300]
-            print(f"# {name}: ERROR {errors[name][:120]}", file=sys.stderr)
-            continue
-        wall = time.perf_counter() - t0
-        build_delta = shared.build_seconds_total() - b0
-        timings[name] = round(max(0.0, wall - build_delta), 3)
-        note = f" (+{build_delta:.2f}s shared builds)" if build_delta > 0.005 else ""
-        print(f"# {name}: {timings[name]:.2f}s{note}", file=sys.stderr)
+    walls, builds, errors = time_queries(spark, registry.QUERIES, sf_dir, HEADLINE)
+    timings = {
+        n: round(max(0.0, walls[n][0] - builds[n][0]), 3)
+        for n in HEADLINE
+        if n not in errors
+    }
     shared_builds = shared.build_times()
     shared_builds_total = shared.build_seconds_total()
 
@@ -592,56 +356,36 @@ def main() -> None:
     # frame (minhash bands/pairs/CC labels, purchase edges) and every
     # registered intra-query persist is released here, before the stream
     # drains, instead of each operator guessing when its last consumer ran
-    from akka_streams_kinesis_spark.shared import release_shared
-
-    release_shared()
+    shared.release_shared()
 
     # Streaming throughput: every STREAM_SECTION query drains its stream
     # end-to-end (availableNow trigger, fresh checkpoint per call) and is
     # reported as rows/s over the drained events input — a rate, not a
     # query latency, because drain time is trigger- and
     # checkpoint-bound, not plan-bound. The ingest pipeline keeps its
-    # historical warm+timed double-drain so stream_ingest_rows_per_sec
-    # stays comparable round-over-round; the others pay their own stream
-    # materialization on the first call of the run (one-time cost,
-    # amortized in production) and are timed on that same call — each
-    # call re-reads every file through a fresh checkpoint anyway.
-    from akka_streams_kinesis_spark.operators.streaming_queries import (
-        stream_ingest_hourly,
-    )
-
+    # historical warm+timed double drain (two rounds, the second one
+    # timed) so stream_ingest_rows_per_sec stays comparable
+    # round-over-round; the others pay their own stream materialization
+    # on the first call of the run (one-time cost, amortized in
+    # production) and are timed on that same call — each call re-reads
+    # every file through a fresh checkpoint anyway.
+    ingest = "stream_ingest_hourly_rollup"
     n_events = table(spark, sf_dir, "events").count()
-    stream_rates: dict[str, float] = {}
-    try:
-        stream_ingest_hourly(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        t0 = time.perf_counter()
-        stream_ingest_hourly(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        drain_s = time.perf_counter() - t0
-        stream_rate = round(n_events / drain_s, 1)
-        stream_rates["stream_ingest_hourly_rollup"] = stream_rate
-        print(f"# stream ingest drain: {drain_s:.2f}s ({stream_rate} rows/s)", file=sys.stderr)
-    except Exception as e:
-        errors["stream_ingest_hourly"] = str(e)[:300]
-        stream_rate = None
-        print(f"# stream ingest drain: ERROR {str(e)[:120]}", file=sys.stderr)
-    for name in STREAM_SECTION:
-        if name == "stream_ingest_hourly_rollup":
-            continue  # timed above with the warm+timed double drain
-        t0 = time.perf_counter()
-        try:
-            registry.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as e:
-            errors[name] = str(e)[:300]
-            print(f"# {name}: ERROR {str(e)[:120]}", file=sys.stderr)
-            continue
-        drain_s = time.perf_counter() - t0
-        stream_rates[name] = round(n_events / drain_s, 1)
-        print(
-            f"# {name}: {drain_s:.2f}s ({stream_rates[name]} rows/s)",
-            file=sys.stderr,
-        )
+    drains, _, stream_errors = time_queries(
+        spark, registry.QUERIES, sf_dir, [ingest], rounds=2
+    )
+    others, _, other_errors = time_queries(
+        spark, registry.QUERIES, sf_dir, [n for n in STREAM_SECTION if n != ingest]
+    )
+    drains.update(others)
+    stream_errors.update(other_errors)
+    errors.update(stream_errors)
+    stream_rates = {
+        n: round(n_events / drains[n][-1], 1)
+        for n in STREAM_SECTION
+        if n not in stream_errors
+    }
+    stream_rate = stream_rates.get(ingest)
 
     # "value" = per-query totals + one-time shared builds: identical work
     # accounting to rounds ≤9 (where builds hid inside first consumers),
@@ -717,53 +461,7 @@ def main() -> None:
         json.dump(full, f, indent=1)
         f.write("\n")
     print(json.dumps(full))
-    # Short schema-stable line LAST: small enough that no tail buffer can
-    # truncate it mid-object; per-query detail lives in BENCH_SUMMARY.json.
-    # drift_sentinel rides in this short line too: the driver's tail
-    # capture truncates the long line, and the sentinel is precisely the
-    # part a judge needs intact to attribute a total-seconds move.
-    # round-12 VERDICT ask #1: the driver's tail capture keeps only the
-    # last 2000 bytes of stdout, so a 276-entry queries map can never
-    # reach it — per-query signal for the HEAVY names now rides the short
-    # line as "slowest" (top-15 by seconds) plus "families" (per-family
-    # subtotals), additions only; the byte guard below trims slowest
-    # before ever letting the line outgrow the tail budget.
-    slowest = {
-        n: round(timings[n], 2)
-        for n in sorted(timings, key=lambda n: -timings[n])[:15]
-    }
-    families: dict[str, float] = {}
-    for n, s in timings.items():
-        fam = n.split("_", 1)[0]
-        families[fam] = families.get(fam, 0.0) + s
-    families = {k: round(v, 1) for k, v in sorted(families.items())}
-    short = {
-        "metric": "headline_query_total_seconds",
-        "value": total,
-        "unit": "sec",
-        "n_queries": len(timings),
-        "n_errors": len(errors),
-        "shared_builds_total": shared_builds_total,
-        "drift_sentinel_total": sentinel_total,
-        "drift_baseline": DRIFT_BASELINE,
-        "drift_factor": drift_factor,
-        "drift_factor_median": drift_factor_median,
-        "drift_median_baseline": DRIFT_MEDIAN_BASELINE,
-        # per-name sentinel values ride the SHORT line from round
-        # 12 on: the r11 driver tail truncated the long line's
-        # "current" section, leaving no per-name r11 history
-        "sentinel_current": sentinel_now,
-        "slowest": slowest,
-        "families": families,
-        "stream_ingest_rows_per_sec": stream_rate,
-        "sf": float(sf),
-        "queries_file": "BENCH_SUMMARY.json",
-    }
-    line = json.dumps(short)
-    while len(line.encode()) > SHORT_LINE_BUDGET and len(slowest) > 5:
-        slowest.pop(next(reversed(slowest)))
-        line = json.dumps(short)
-    print(line)
+    print(short_line(full))
     spark.stop()
     sys.exit(1 if errors else 0)
 

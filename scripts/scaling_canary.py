@@ -21,12 +21,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from akka_streams_kinesis_spark import get_session, registry  # noqa: E402
+from bench import time_queries, warm_up  # noqa: E402
 from canary_names import SF1_CANARY  # noqa: E402
 
 RATIO_FLAG = 15.0
@@ -34,8 +34,6 @@ FLOOR_SEC = 0.5
 SF01_DIR = "/root/testdata/sf0.1"
 SF1_DIR = os.path.join(ROOT, ".scale", "sf1")
 OUT = os.path.join(ROOT, "BENCH_SCALING.json")
-
-registry.load_all()
 
 
 def _flag_value(flag: str) -> str:
@@ -47,31 +45,19 @@ def _flag_value(flag: str) -> str:
 
 
 def time_all(sf_dir: str, names: list[str]) -> dict[str, float | None]:
-    """One fresh engine session per scale factor: cross-scale JVM state
-    (codegen caches, shuffle files, GC pressure) must not leak from the
-    sf0.1 pass into the sf1 pass."""
+    """Wall seconds per name (None on error, shared-frame builds
+    included). One fresh engine session per scale factor: cross-scale
+    JVM state (codegen caches, shuffle files, GC pressure) must not leak
+    from the sf0.1 pass into the sf1 pass. The cache is cleared after
+    each query, so that no query reads another's cached frames."""
     spark = get_session(f"scaling-canary-{os.path.basename(sf_dir)}")
     spark.sparkContext.setLogLevel("ERROR")
-    from akka_streams_kinesis_spark.io import table
-
-    # untimed warmup: parquet readers, codegen, Arrow worker pool
-    for t in ("lineitem", "events", "documents", "embeddings"):
-        table(spark, sf_dir, t).limit(1).count()
-    registry.QUERIES["tpch_q1_pricing_summary"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark, sf_dir)
+    print(f"# timing at {sf_dir}", file=sys.stderr)
     out: dict[str, float | None] = {}
     for name in names:
-        t0 = time.perf_counter()
-        try:
-            registry.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            out[name] = round(time.perf_counter() - t0, 3)
-            print(f"# {os.path.basename(sf_dir)} {name}: {out[name]:.2f}s", file=sys.stderr)
-        except Exception as e:
-            out[name] = None
-            print(f"# {os.path.basename(sf_dir)} {name}: ERROR {str(e)[:160]}", file=sys.stderr)
+        walls, _, _ = time_queries(spark, registry.QUERIES, sf_dir, [name])
+        out[name] = round(walls[name][0], 3) if walls[name] else None
         spark.catalog.clearCache()
     spark.stop()
     return out

@@ -187,51 +187,3 @@ class TestStatePartitionsOverride:
     def test_garbage_raises(self, monkeypatch):
         with pytest.raises(ValueError):
             self._resolve(monkeypatch, "lots")
-
-
-class TestAnnIndexAssignment:
-    """Canonical hot-cell-split assignment (streaming/ann_index.py):
-    pure-function checks the streaming gate builds on."""
-
-    def test_split_semantics(self, spark):
-        from akka_streams_kinesis_spark.streaming.ann_index import (
-            CELL_CAP,
-            assign_cells,
-        )
-
-        # cold prefix: CELL_CAP vectors share an 8-bit prefix → stay at
-        # depth 8. hot prefix: CELL_CAP+2 vectors, differing at bit 9 →
-        # split to depth 9 (one subcell ≤ CAP each side)
-        cold = [("0" * 8 + "1010",)] * CELL_CAP
-        hot = [("1" * 8 + "0110",)] * (CELL_CAP // 2 + 1) + [
-            ("1" * 8 + "1001",)
-        ] * (CELL_CAP // 2 + 1)
-        df = spark.createDataFrame(cold + hot, "code string")
-        got = {
-            (r["cell"], r["depth"])
-            for r in assign_cells(df).select("cell", "depth").collect()
-        }
-        assert ("0" * 8, 8) in got
-        assert ("1" * 8 + "0", 9) in got
-        assert ("1" * 8 + "1", 9) in got
-        assert not any(c.startswith("0" * 8) and d > 8 for c, d in got)
-
-    def test_sign_code_flip_is_exact(self, spark):
-        import pyspark.sql.functions as F
-
-        from akka_streams_kinesis_spark.streaming.ann_index import (
-            MAX_BITS,
-            sign_code,
-        )
-
-        df = spark.createDataFrame(
-            [(1, [0.5, -0.25, 0.0] + [1.0] * (MAX_BITS - 3))],
-            "vec_id long, embedding array<double>",
-        )
-        plain = df.select(sign_code("embedding").alias("c")).first()["c"]
-        flipped = df.select(
-            sign_code("embedding", flip=F.lit(True)).alias("c")
-        ).first()["c"]
-        assert plain == "101" + "1" * (MAX_BITS - 3)
-        # flip inverts every nonzero sign; exact zero codes 1 both ways
-        assert flipped == "011" + "0" * (MAX_BITS - 3)

@@ -117,42 +117,3 @@ def test_norm_docs_shared_matches_inline_derivation(spark, sf_dir):
     toks = doc_tokens_shared(spark, sf_dir)
     assert from_w.exceptAll(toks).count() == 0
     assert toks.exceptAll(from_w).count() == 0
-
-
-def test_scratch_copy_hardlink_isolation(tmp_path):
-    """The maintenance scratch copy hardlinks the cached index; the
-    writer protocol (tmp + rename) and vacuum (unlink) must only ever
-    swap the SCRATCH directory entry, never the shared source inode."""
-    import os
-
-    from akka_streams_kinesis_spark.operators.standing_index import (
-        _scratch_copy,
-    )
-
-    src = tmp_path / "src" / "store" / "c8=b0"
-    src.mkdir(parents=True)
-    f = src / "part-00000.parquet"
-    f.write_bytes(b"ORIGINAL")
-    _scratch_copy(str(tmp_path / "src"), str(tmp_path / "work"))
-    wf = tmp_path / "work" / "store" / "c8=b0" / "part-00000.parquet"
-    assert wf.read_bytes() == b"ORIGINAL"
-    # publish protocol: write sibling tmp, rename over the final name
-    tmpf = wf.parent / ".tmp-rewrite"
-    tmpf.write_bytes(b"REWRITTEN")
-    os.replace(tmpf, wf)
-    assert f.read_bytes() == b"ORIGINAL"
-    assert wf.read_bytes() == b"REWRITTEN"
-    # vacuum protocol: unlink a scratch file
-    os.unlink(wf)
-    assert f.read_bytes() == b"ORIGINAL"
-
-
-def test_marker_compaction_deterministic_run_over_run(spark, sf_dir):
-    """Compaction works on a hardlinked scratch of the cached drained
-    snapshot: a second invocation must re-copy from an UNTOUCHED source
-    and reproduce the identical report (any in-place mutation of the
-    shared inodes by run #1 would surface here)."""
-    q = registry.QUERIES["maintenance_ann_marker_compaction"]
-    first = [tuple(r) for r in q(spark, sf_dir).collect()]
-    second = [tuple(r) for r in q(spark, sf_dir).collect()]
-    assert first == second

@@ -149,38 +149,26 @@ def test_bench_short_line_fits_tail_budget():
         f"similarity_standing_index_family_member_{i:03d}": 1234.567
         for i in range(301)
     }
-    slowest = {
-        n: round(timings[n], 2)
-        for n in sorted(timings, key=lambda n: -timings[n])[:15]
-    }
-    families: dict[str, float] = {}
-    for n, s in timings.items():
-        fam = n.split("_", 1)[0]
-        families[fam] = round(families.get(fam, 0.0) + s, 1)
     sentinel = {n: 9999.999 for n in bench.DRIFT_SENTINEL}
-    short = {
+    full = {
         "metric": "headline_query_total_seconds",
         "value": 99999.999,
         "unit": "sec",
-        "n_queries": len(timings),
-        "n_errors": 0,
+        "queries": timings,
+        "errors": {},
         "shared_builds_total": 9999.999,
-        "drift_sentinel_total": 9999.999,
-        "drift_baseline": bench.DRIFT_BASELINE,
-        "drift_factor": 99.999,
-        "drift_factor_median": 99.999,
-        "drift_median_baseline": bench.DRIFT_MEDIAN_BASELINE,
-        "sentinel_current": sentinel,
-        "slowest": slowest,
-        "families": families,
+        "drift_sentinel": {
+            "current": {**sentinel, "total": 9999.999},
+            "baseline": bench.DRIFT_BASELINE,
+            "drift_factor": 99.999,
+            "drift_factor_median": 99.999,
+            "median_baseline": bench.DRIFT_MEDIAN_BASELINE,
+        },
         "stream_ingest_rows_per_sec": 999999.9,
         "sf": 0.1,
-        "queries_file": "BENCH_SUMMARY.json",
     }
-    line = json.dumps(short)
-    while len(line.encode()) > bench.SHORT_LINE_BUDGET and len(slowest) > 5:
-        slowest.pop(next(reversed(slowest)))
-        line = json.dumps(short)
+    line = bench.short_line(full)
+    slowest = json.loads(line)["slowest"]
     assert len(line.encode()) <= bench.SHORT_LINE_BUDGET, len(line.encode())
     # the real families map (34 one-word prefixes at r12) plus 5+ slowest
     # names must survive the trim — the driver needs at least the heavy
@@ -258,87 +246,6 @@ def test_peel_degenerate_empty_edges_yield_null_thresholds(spark):
 
     empty = spark.createDataFrame([], "custkey long, suppkey long")
     assert _degree_thresholds(_peel_degrees(empty)) == {}
-
-
-def test_standing_exact_anchor_matches_fold_ranking(spark, sf_dir):
-    """The r13 GEMM exact anchor must return exactly the pairs of the
-    old BroadcastNestedLoopJoin + JVM-fold + full-window formulation
-    (same ROUND(sim,6) DESC, vec_id order) — the hit_exact semantics of
-    both standing-index consumers hang off this set."""
-    from pyspark.sql import Window
-
-    from akka_streams_kinesis_spark.operators.similarity import cosine_sim
-    from akka_streams_kinesis_spark.operators.standing_index import (
-        _SI_K,
-        _SI_NQ,
-        _ensure_standing_index,
-        _si_exact_anchor,
-    )
-    from akka_streams_kinesis_spark.streaming.ann_index import (
-        load_snapshot,
-        read_store,
-    )
-
-    root = _ensure_standing_index(spark, sf_dir)
-    snap = load_snapshot(root)
-    full = read_store(spark, root, snapshot=snap).select("vec_id", "embedding")
-    q_emb = full.filter(F.col("vec_id") < _SI_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id")
-    )
-    ref = (
-        full.join(F.broadcast(q_emb), F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_sim("q_emb", "embedding"), 6).alias("sim"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _SI_K)
-        .select("query_id", "vec_id")
-    )
-    got = _si_exact_anchor(spark, root, snap, q_emb)
-    want_rows = sorted(map(tuple, ref.collect()))
-    got_rows = sorted(map(tuple, got.collect()))
-    assert got_rows == want_rows
-
-
-def test_time_travel_fused_matches_per_version_searches(spark, sf_dir):
-    """The r13 fused two-version time-travel plan must reproduce the old
-    two-independent-searches formulation row for row (both versions)."""
-    from akka_streams_kinesis_spark.operators.standing_index import (
-        _TT_SEARCH_COLS,
-        _ensure_tt_index,
-        _standing_search,
-        similarity_standing_index_time_travel,
-    )
-    from akka_streams_kinesis_spark.streaming.ann_index import load_snapshot
-
-    root, _served = _ensure_tt_index(spark, sf_dir)
-    want = []
-    for v, label in ((1, "pre_update"), (2, "post_update")):
-        snap = load_snapshot(root, v)
-        want.extend(
-            map(
-                tuple,
-                _standing_search(spark, root, snapshot=snap, anchor=False)
-                .select(
-                    F.lit(v).cast("long").alias("version"),
-                    F.lit(label).alias("state"),
-                    *_TT_SEARCH_COLS,
-                )
-                .collect(),
-            )
-        )
-    got = list(
-        map(
-            tuple,
-            similarity_standing_index_time_travel(spark, sf_dir).collect(),
-        )
-    )
-    assert sorted(got) == sorted(want)
 
 
 def test_word_shingles4_shared_matches_inline_derivations(spark, sf_dir):
