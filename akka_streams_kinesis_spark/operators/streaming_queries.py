@@ -1843,7 +1843,7 @@ def stream_session_timeout_eviction(spark: SparkSession, sf_dir: str) -> DataFra
     revisits active keys once via their re-armed timeout — the canonical
     timer wheel a production stateful operator runs on. The O() claim is
     a TESTED invariant, not a docstring (round-9 VERDICT ask #3):
-    tests/test_round10.py drains this exact pipeline with per-batch
+    tests/test_streaming_analytics.py drains this exact pipeline with per-batch
     progress capture and asserts stateOperators.numRowsTotal at every
     micro-batch ≤ |users with an event at ts ≥ watermark − gap| — the
     eviction proof's own bound (kept sessions have last ≥ wm − gap;

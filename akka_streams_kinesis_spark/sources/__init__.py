@@ -6,9 +6,4 @@ from .kinesis_sim import (  # noqa: F401
     Latest,
     SimStream,
     TrimHorizon,
-    find_child_shards,
-    find_newest_possible_shards,
-    find_oldest_possible_shards,
-    iterator_for_reshard,
-    shard_iterator_requests,
 )

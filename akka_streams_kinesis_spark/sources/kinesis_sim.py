@@ -10,14 +10,14 @@ reference operator (SURVEY §2.A)                                   here
 ================================================================  =========
 S1  KinesisSource.apply                                            SimStream.read_stream / read_batch
 S2  IteratorType ADT (AtTimestamp/TrimHorizon/Latest)              IteratorType classes
-S3  shardIteratorRequests (+ min(since, now) clamp)                shard_iterator_requests
-S4  findOldestPossibleShards (DAG roots)                           find_oldest_possible_shards (left-anti join)
-S5  findNewestPossibleShards (DAG leaves)                          find_newest_possible_shards (left-anti join)
-S6  findChildShards (ignores adjacent parent)                      find_child_shards (equi-filter)
-S7  iteratorForReshard (Latest→TrimHorizon on children)            iterator_for_reshard + per-shard floor map
+S3  shardIteratorRequests (+ min(since, now) clamp)                SimStream.start_position: (floors, since)
+S4  findOldestPossibleShards (DAG roots)                           no floor ⇒ a shard reads from 0
+S5  findNewestPossibleShards (DAG leaves)                          Latest floors = next_sequence_numbers()
+S6  findChildShards (ignores adjacent parent)                      each shard, child or not, has its own dir
+S7  iteratorForReshard (Latest→TrimHorizon on children)            a child has no Latest floor ⇒ reads from 0
 S8  nextIterator (resume AFTER_SEQUENCE_NUMBER)                    after-sequence floors / streaming checkpoint
 S9  ShardId/ShardIterator value classes                            shard_id column + floors dict
-S11 preStart bootstrap (describe → pick shards)                    describe() + resolve_start_shards
+S11 preStart bootstrap (describe → pick shards)                    shards.json + start_position at read start
 S12 one read loop per shard                                        one input partition per shard dir
 S13 handleReshard (follow children)                                re-plan: children have no floor ⇒ read from start
 S15 emitThenGetRecords (demand-driven emit)                        micro-batch rate cap (maxFilesPerTrigger)
@@ -44,7 +44,8 @@ one entry per shard ever created:
 ``SimStream`` alone reads and writes it (``_meta``/``_write_meta``, by
 rename), routes a partition key to its shard (``shard_router``), reserves
 sequence numbers, and says where each shard's files are (``shard_dir``,
-``shard_dirs``) and where each shard ends (``next_sequence_numbers``).
+``shard_dirs``), where each shard ends (``next_sequence_numbers``) and
+where a read at a start position begins (``start_position``).
 
 ``<path>/data/shard_id=<id>/*.parquet`` holds records
 ``(sequence_number, partition_key, data, ts)``. Hive partitioning by
@@ -193,65 +194,6 @@ class AtTimestamp(IteratorType):
     since: datetime
 
 
-# ---------------------------------------------------------------------------
-# Shard-DAG planning (S3-S7) — pure DataFrame logic, tier-1 testable
-# ---------------------------------------------------------------------------
-
-def find_oldest_possible_shards(shards: DataFrame) -> DataFrame:
-    """DAG roots: shards whose parent is absent from the shard set (expired
-    or never existed) — the reference treats those as earliest read points
-    (KinesisSource.scala:115-125). Left-anti join on parent_shard_id."""
-    ids = shards.select(F.col("shard_id").alias("_pid"))
-    return shards.join(
-        ids, shards["parent_shard_id"] == ids["_pid"], "left_anti"
-    ).select("shard_id")
-
-
-def find_newest_possible_shards(shards: DataFrame) -> DataFrame:
-    """DAG leaves: shards that are nobody's parent or adjacent parent —
-    where `Latest` begins reading (KinesisSource.scala:131-141)."""
-    parents = (
-        shards.select(F.col("parent_shard_id").alias("_ref"))
-        .unionByName(shards.select(F.col("adjacent_parent_shard_id").alias("_ref")))
-        .filter(F.col("_ref").isNotNull())
-        .distinct()
-    )
-    return shards.join(
-        parents, shards["shard_id"] == parents["_ref"], "left_anti"
-    ).select("shard_id")
-
-
-def find_child_shards(shards: DataFrame, parent: str) -> DataFrame:
-    """Children of a closed shard. Deliberately ignores the adjacent parent
-    so a merge yields its single child once (KinesisSource.scala:147-154)."""
-    return shards.filter(F.col("parent_shard_id") == F.lit(parent)).select("shard_id")
-
-
-def iterator_for_reshard(iterator: IteratorType) -> IteratorType:
-    """After a reshard, `Latest` must become `TrimHorizon` on child shards or
-    records written between close and reopen would be skipped
-    (KinesisSource.scala:160-163)."""
-    if isinstance(iterator, Latest):
-        return TrimHorizon()
-    return iterator
-
-
-def shard_iterator_requests(
-    iterator: IteratorType,
-    shard_ids: list[str],
-    now: datetime | None = None,
-) -> list[tuple[str, IteratorType]]:
-    """One positioned read request per shard; AtTimestamp is clamped to
-    min(since, now) so a future timestamp still reads (work-conserving
-    clamp, KinesisSource.scala:100-102). ``now`` is injected like the
-    reference's Clock (KinesisSource.scala:77) for deterministic tests."""
-    if isinstance(iterator, AtTimestamp):
-        now = now or datetime.now(timezone.utc)
-        clamped = AtTimestamp(min(iterator.since, now))
-        return [(s, clamped) for s in shard_ids]
-    return [(s, iterator) for s in shard_ids]
-
-
 def _as_utc_naive(ts: datetime) -> datetime:
     """Normalize a datetime to naive-UTC. Naive input is TREATED as UTC —
     calling astimezone() on a naive value would interpret it in the
@@ -260,6 +202,11 @@ def _as_utc_naive(ts: datetime) -> datetime:
     if ts.tzinfo is None:
         return ts
     return ts.astimezone(timezone.utc).replace(tzinfo=None)
+
+
+def utc_now() -> datetime:
+    """The stream's clock: now as naive UTC, the form ``ts`` is stored in."""
+    return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
 def hash_key_for_partition_key(pk: str) -> int:
@@ -341,26 +288,6 @@ class SimStream:
             json.dump(meta, f, indent=1)
         os.replace(tmp, os.path.join(self.path, "shards.json"))
 
-    def describe(self, spark: SparkSession) -> DataFrame:
-        """The describe-stream result as a DataFrame (shard lineage DAG)."""
-        meta = self._meta()
-        schema = (
-            "shard_id string, parent_shard_id string, adjacent_parent_shard_id string, "
-            "starting_hash_key string, ending_hash_key string, closed boolean"
-        )
-        rows = [
-            (
-                s["shard_id"],
-                s["parent_shard_id"],
-                s["adjacent_parent_shard_id"],
-                s["starting_hash_key"],
-                s["ending_hash_key"],
-                s["closed"],
-            )
-            for s in meta["shards"]
-        ]
-        return spark.createDataFrame(rows, schema)
-
     def open_shards(self) -> list[dict]:
         return [s for s in self._meta()["shards"] if not s["closed"]]
 
@@ -411,6 +338,32 @@ class SimStream:
             for sid, d in self.shard_dirs().items()
         }
 
+    def start_position(
+        self, iterator: IteratorType, now: datetime | None = None
+    ) -> tuple[dict[str, int], datetime | None]:
+        """Where a read at ``iterator`` starts, for every reader of the
+        stream: ``(floors, since)``. A read keeps a shard's records with
+        ``sequence_number >= floors.get(shard_id, 0)`` and, when ``since``
+        is set, ``ts >= since``.
+
+        - TrimHorizon: no floor and no ``since``.
+        - Latest: each shard's next sequence number now (S8's cursor). A
+          shard without a dir now, such as a later reshard's child, has no
+          floor and reads from 0: the Latest→TrimHorizon rewrite (S7,
+          KinesisSource.scala:160-163), with no walk of the lineage (S4-S6).
+        - AtTimestamp: ``since = min(since, now)`` in naive UTC, so a future
+          timestamp still reads (the S3 clamp, KinesisSource.scala:100-102).
+          ``now`` is injected like the reference's Clock (:77).
+
+        Lists the shard dirs for Latest only; opens no file."""
+        if isinstance(iterator, TrimHorizon):
+            return {}, None
+        if isinstance(iterator, Latest):
+            return self.next_sequence_numbers(), None
+        if isinstance(iterator, AtTimestamp):
+            return {}, min(_as_utc_naive(iterator.since), _as_utc_naive(now or utc_now()))
+        raise TypeError(f"unknown iterator type {iterator!r}")
+
     # -- produce (test harness / FilePut sink target) ----------------------
 
     def put_records(self, records: list[tuple[str, bytes]], ts: datetime | None = None) -> list[dict]:
@@ -421,7 +374,7 @@ class SimStream:
         input order."""
         meta = self._meta()
         route = shard_router(meta["shards"])
-        naive_ts = _as_utc_naive(ts or datetime.now(timezone.utc))
+        naive_ts = _as_utc_naive(ts or utc_now())
         placed: dict[str, list[int]] = {}
         for i, (pk, _) in enumerate(records):
             placed.setdefault(route(pk), []).append(i)
@@ -467,7 +420,7 @@ class SimStream:
 
         meta = self._meta()
         route = shard_router(meta["shards"])
-        naive_ts = _as_utc_naive(ts or datetime.now(timezone.utc))
+        naive_ts = _as_utc_naive(ts or utc_now())
         shard_dir = self.shard_dir
 
         def _assign(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
@@ -591,7 +544,18 @@ class SimStream:
 
     # -- consume (S1): batch + streaming scans -----------------------------
 
-    def _scan(self, spark: SparkSession, streaming: bool, max_files: int | None) -> DataFrame:
+    def _scan(
+        self,
+        spark: SparkSession,
+        iterator: IteratorType | None,
+        now: datetime | None,
+        streaming: bool,
+        max_files: int | None = None,
+    ) -> DataFrame:
+        """The file-source scan of every shard dir from ``start_position``:
+        each shard's floor is one predicate on ``shard_id``, ``since`` one
+        on ``ts``. TrimHorizon adds no node to the plan."""
+        floors, since = self.start_position(iterator or TrimHorizon(), now)
         # fresh StructType: .add() would mutate the module-level schema
         schema = StructType(list(RECORD_SCHEMA.fields) + [StructField("shard_id", StringType())])
         if streaming:
@@ -600,40 +564,14 @@ class SimStream:
                 reader = reader.option("maxFilesPerTrigger", max_files)
         else:
             reader = spark.read.schema(schema)
-        return reader.option("basePath", self.data_dir).parquet(self.shard_dir("*"))
-
-    def _start_filter(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        iterator: IteratorType,
-        now: datetime | None,
-    ) -> DataFrame:
-        """Apply the start position. For Latest we snapshot each shard's
-        next sequence number (the reference's cursor, S8) and keep only
-        records at or past it; shards created afterwards have no cursor, so
-        they read from their beginning — exactly the Latest→TrimHorizon
-        rewrite on resharding (S7, KinesisSource.scala:160-163)."""
-        if isinstance(iterator, TrimHorizon):
-            return df
-        if isinstance(iterator, AtTimestamp):
-            now = now or datetime.now(timezone.utc)
-            since = min(iterator.since, now)
-            naive = _as_utc_naive(since)
-            return df.filter(F.col("ts") >= F.lit(naive))
-        if isinstance(iterator, Latest):
-            ends = self.next_sequence_numbers()
-            if not ends:
-                return df
-            end_df = spark.createDataFrame(
-                list(ends.items()), "shard_id string, _end long"
-            )
-            return (
-                df.join(F.broadcast(end_df), "shard_id", "left")
-                .filter(F.col("_end").isNull() | (F.col("sequence_number") >= F.col("_end")))
-                .drop("_end")
-            )
-        raise TypeError(f"unknown iterator type {iterator!r}")
+        df = reader.option("basePath", self.data_dir).parquet(self.shard_dir("*"))
+        if floors:
+            pairs = [c for sid, lo in floors.items() for c in (F.lit(sid), F.lit(lo).cast("long"))]
+            floor = F.create_map(*pairs)[F.col("shard_id")]
+            df = df.filter(F.col("sequence_number") >= F.coalesce(floor, F.lit(0)))
+        if since is not None:
+            df = df.filter(F.col("ts") >= F.lit(since))
+        return df
 
     def read_batch(
         self,
@@ -643,9 +581,7 @@ class SimStream:
     ) -> DataFrame:
         """Bounded scan of the stream at a start position (the batch analog
         of S1's unbounded source)."""
-        iterator = iterator or TrimHorizon()
-        df = self._scan(spark, streaming=False, max_files=None)
-        return self._start_filter(spark, df, iterator, now)
+        return self._scan(spark, iterator, now, streaming=False)
 
     def read_stream(
         self,
@@ -661,5 +597,4 @@ class SimStream:
         the reshard-follow path (S13) without bespoke code; the rate cap
         (maxFilesPerTrigger) plays the role of demand-driven backpressure
         (S15). Offsets live in the checkpoint WAL (S8's reissue token)."""
-        df = self._scan(spark, streaming=True, max_files=max_files_per_trigger)
-        return self._start_filter(spark, df, iterator or TrimHorizon(), now)
+        return self._scan(spark, iterator, now, streaming=True, max_files=max_files_per_trigger)

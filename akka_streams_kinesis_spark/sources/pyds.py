@@ -32,20 +32,27 @@ Usage::
 
 Options:
   path               stream directory (shards.json + data/shard_id=*/)
-  starting_position  trim_horizon (default) | latest | at_timestamp:<ISO>
+  starting_position  trim_horizon (default) | latest | at_timestamp:<ISO>;
+                     at_timestamp keeps the records whose arrival ``ts`` is
+                     at or after min(since, now)
   now                <ISO> clock injection for the AtTimestamp clamp
                      min(since, now) (`KinesisSource.scala:100-102`; the
                      reference injects java.time.Clock the same way)
+
+The position means what it means for ``SimStream.read_stream``/
+``read_batch``: ``SimStream.start_position`` turns it into per-shard
+sequence floors plus an optional ``since`` once, when a reader is made.
+The stream reader's first offset is the floors; every partition of both
+readers carries ``since``.
 
 Scale notes: a put file's name carries its (first, last) sequence range
 (``kinesis_sim`` "Data layout"), so ``latestOffset``, ``partitions()`` and
 ``latest`` resolution list each shard dir and open no put file; a reader
 keeps no per-file state. ``partitions()`` ships only the files whose range
-overlaps the batch's ``[lo, hi)``. ``at_timestamp`` reads the
-sequence_number/ts columns of a shard's oldest files, once, when the
-reader starts, until none can hold an earlier match. A listing still costs
-O(files in the shard dir), and a stream trigger lists every shard twice
-(``latestOffset`` and ``partitions``). All record bytes flow executor-side
+overlaps the batch's ``[lo, hi)``; a batch read's ``hi`` is each shard's
+end, from the same listing. A listing still costs O(files in the shard
+dir), and a stream trigger lists every shard twice (``latestOffset`` and
+``partitions``). All record bytes flow executor-side
 as Arrow batches, never through the driver. Put files are published by
 rename (``kinesis_sim.write_put_file``), so a listed file is whole and never
 changes. The reader and the relay path persist no frame, so the AQE-sized
@@ -88,11 +95,16 @@ from pyspark.sql.types import (
 )
 
 from .kinesis_sim import (
+    AtTimestamp,
+    IteratorType,
+    Latest,
     SimStream,
+    TrimHorizon,
     _as_utc_naive,
     next_sequence_number,
     put_files,
     shard_router,
+    utc_now,
     write_put_file,
 )
 
@@ -115,31 +127,28 @@ def _parse_iso(s: str) -> datetime:
     return _as_utc_naive(datetime.fromisoformat(s))
 
 
-def _first_seq_at_or_after(shard_dir: str, since: datetime) -> int | None:
-    """Smallest sequence number whose ts >= since (arrival-time positioning:
-    AT_TIMESTAMP reads from the first record that arrived at/after t).
-    Files are read in ascending order of their smallest sequence number,
-    stopping at the first that cannot hold a smaller answer."""
-    import pyarrow.parquet as pq
-
-    best: int | None = None
-    for f, (first, _) in put_files(shard_dir).items():
-        if best is not None and first >= best:
-            break
-        t = pq.read_table(f, columns=["sequence_number", "ts"])
-        for seq, ts in zip(
-            t["sequence_number"].to_pylist(), t["ts"].to_pylist()
-        ):
-            if ts is not None and ts >= since and (best is None or seq < best):
-                best = seq
-    return best
+def _parse_position(option: str) -> IteratorType:
+    """The ``starting_position`` option as the IteratorType ADT (S2)."""
+    kind, _, since = option.partition(":")
+    kind = kind.lower()
+    if kind == "trim_horizon" and not since:
+        return TrimHorizon()
+    if kind == "latest" and not since:
+        return Latest()
+    if kind == "at_timestamp" and since:
+        return AtTimestamp(_parse_iso(since))
+    raise ValueError(
+        "starting_position is trim_horizon, latest or at_timestamp:<ISO>; "
+        f"got {option!r}"
+    )
 
 
 @dataclass
 class ShardPartition(InputPartition):
     """One scan unit per shard — the analog of the reference's per-shard
     poll loop (S12). ``lo``/``hi`` bound sequence numbers [lo, hi);
-    ``since`` is an optional event-time floor applied executor-side."""
+    ``since`` is the optional arrival-time floor of an at_timestamp read,
+    applied executor-side."""
 
     shard_id: str
     files: List[str] = field(default_factory=list)
@@ -288,26 +297,41 @@ def _read_partition(
 
 class _SimReader:
     """What the batch and stream readers share: the stream, the start
-    position, the injectable clock and the S17 fault-injectable read
-    client (fake-client tests)."""
+    position resolved by ``SimStream.start_position`` when the reader is
+    made, the ``[start, end)`` range planner, and the S17 fault-injectable
+    read client (fake-client tests)."""
 
     def __init__(self, options: dict, read_file=None, sleep_fn=None):
         self.stream = SimStream(options["path"])
-        self.position = options.get("starting_position", "trim_horizon").lower()
-        self.now = _parse_iso(options["now"]) if "now" in options else None
+        now = _parse_iso(options["now"]) if "now" in options else None
+        self.floors, self.since = self.stream.start_position(
+            _parse_position(options.get("starting_position", "trim_horizon")), now
+        )
         self.read_file = read_file
         self.sleep_fn = sleep_fn
 
-    def _since(self) -> datetime | None:
-        """The at_timestamp position clamped to min(since, now) — the S3
-        work-conserving clamp — or None for the other positions."""
-        if not self.position.startswith("at_timestamp:"):
-            return None
-        since = _parse_iso(self.position.split(":", 1)[1])
-        return min(since, self.now or datetime.utcnow())
+    def _plan(self, start: dict, end: dict, listing) -> list[ShardPartition]:
+        """One partition per shard with records in ``[start, end)``,
+        shipping only the files of ``listing(shard_id)`` whose range
+        overlaps it. A shard missing from ``start`` reads from 0 (S7)."""
+        parts = []
+        for shard_id, hi in end.items():
+            lo, hi = int(start.get(shard_id, 0)), int(hi)
+            if hi > lo:
+                files = [
+                    f
+                    for f, (first, last) in listing(shard_id).items()
+                    if last >= lo and first < hi
+                ]
+                parts.append(
+                    ShardPartition(shard_id=shard_id, files=files, lo=lo, hi=hi, since=self.since)
+                )
+        return parts
 
-    def read(self, partition: ShardPartition) -> Iterator:
-        yield from _read_partition(partition, self.read_file, self.sleep_fn)
+    def read(self, partition: ShardPartition | None) -> Iterator:
+        # Spark runs a batch that plans no partition as one read of None
+        if partition is not None:
+            yield from _read_partition(partition, self.read_file, self.sleep_fn)
 
 
 class KinesisSimBatchReader(_SimReader, DataSourceReader):
@@ -332,19 +356,14 @@ class KinesisSimBatchReader(_SimReader, DataSourceReader):
                 yield f  # everything else stays in Spark's Filter node
 
     def partitions(self) -> list[ShardPartition]:
+        """From the start floors to each shard's end, listing each shard
+        dir once."""
         dirs = self.stream.shard_dirs()
         if self.wanted_shards is not None:
             dirs = {s: d for s, d in dirs.items() if s in self.wanted_shards}
-        since = self._since()
-        parts = []
-        for shard_id, d in dirs.items():
-            files = put_files(d)
-            p = ShardPartition(shard_id=shard_id, files=list(files), since=since)
-            if self.position == "latest":
-                p.lo = next_sequence_number(files)  # nothing newer yet
-            if p.files:
-                parts.append(p)
-        return parts
+        listed = {s: put_files(d) for s, d in dirs.items()}
+        end = {s: next_sequence_number(files) for s, files in listed.items()}
+        return self._plan(self.floors, end, listed.__getitem__)
 
 
 class KinesisSimStreamReader(_SimReader, DataSourceStreamReader):
@@ -354,37 +373,18 @@ class KinesisSimStreamReader(_SimReader, DataSourceStreamReader):
     reshard's children) get floor 0: the Latest→TrimHorizon rewrite (S7)."""
 
     def initialOffset(self) -> dict:
-        if self.position == "latest":
-            return self.latestOffset()
-        since = self._since()
-        dirs = self.stream.shard_dirs()
-        if since is None:  # trim_horizon
-            return {s: 0 for s in dirs}
-        out = {}
-        for s, d in dirs.items():
-            first = _first_seq_at_or_after(d, since)
-            out[s] = next_sequence_number(put_files(d)) if first is None else first
-        return out
+        return self.floors
 
     def latestOffset(self) -> dict:
         return self.stream.next_sequence_numbers()
 
     def partitions(self, start: dict, end: dict) -> list[ShardPartition]:
-        parts = []
         dirs = self.stream.shard_dirs()
-        for shard_id, hi in end.items():
-            lo = int(start.get(shard_id, 0))  # unseen shard ⇒ from its start (S7)
-            hi = int(hi)
-            if hi > lo and shard_id in dirs:
-                files = [
-                    f
-                    for f, (first, last) in put_files(dirs[shard_id]).items()
-                    if last >= lo and first < hi
-                ]
-                parts.append(
-                    ShardPartition(shard_id=shard_id, files=files, lo=lo, hi=hi)
-                )
-        return parts
+        return self._plan(
+            start,
+            {s: hi for s, hi in end.items() if s in dirs},
+            lambda s: put_files(dirs[s]),
+        )
 
     def commit(self, end: dict) -> None:
         pass  # progress lives in Spark's checkpoint WAL
@@ -590,9 +590,7 @@ class _SimWriter:
     def __init__(self, options: dict, put_client=None, sleep_fn=None):
         self.path = options["path"]
         self.arrival_ts = (
-            _parse_iso(options["arrival_ts"])
-            if "arrival_ts" in options
-            else datetime.utcnow()
+            _parse_iso(options["arrival_ts"]) if "arrival_ts" in options else utc_now()
         )
         self.put_client = put_client
         self.sleep_fn = sleep_fn

@@ -38,3 +38,36 @@ def test_failed_drain_cleans_up(spark, tmp_path, monkeypatch, sink):
     assert made and not os.path.exists(made[0])
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     assert spark.streams.active == []
+
+
+class TestStatePartitionsOverride:
+    """SPARK_GRAFT_STATE_PARTITIONS beats the per-drain default (round-9
+    ADVICE: the 16-cap silently excluded stateful operators from the
+    shuffle-256 canary's 256-partition coverage)."""
+
+    def _resolve(self, monkeypatch, env, default=16):
+        from akka_streams_kinesis_spark.streaming.drain import (
+            _state_partitions_override,
+        )
+
+        if env is None:
+            monkeypatch.delenv("SPARK_GRAFT_STATE_PARTITIONS", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", env)
+        return _state_partitions_override(default)
+
+    def test_unset_keeps_caller_default(self, monkeypatch):
+        assert self._resolve(monkeypatch, None) == 16
+        assert self._resolve(monkeypatch, None, default=None) is None
+
+    def test_integer_forces_count(self, monkeypatch):
+        assert self._resolve(monkeypatch, "256") == 256
+
+    def test_session_inherits(self, monkeypatch):
+        assert self._resolve(monkeypatch, "session") is None
+        assert self._resolve(monkeypatch, "none") is None
+        assert self._resolve(monkeypatch, "SESSION") is None
+
+    def test_garbage_raises(self, monkeypatch):
+        with pytest.raises(ValueError):
+            self._resolve(monkeypatch, "lots")

@@ -17,9 +17,8 @@ from akka_streams_kinesis_spark.sources import (
     Latest,
     SimStream,
     TrimHorizon,
-    find_newest_possible_shards,
-    find_oldest_possible_shards,
 )
+from akka_streams_kinesis_spark.sources.kinesis_sim import MAX_HASH
 from akka_streams_kinesis_spark.streaming import kinesis_write_flow
 from akka_streams_kinesis_spark.testing import SimStreamPut, no_sleep
 
@@ -35,14 +34,14 @@ def stream(tmp_path):
     return SimStream.create(str(tmp_path / "stream"), n_shards=2)
 
 
-def test_create_and_describe(spark, stream):
-    df = stream.describe(spark)
-    rows = df.collect()
-    assert len(rows) == 2
-    assert all(not r["closed"] for r in rows)
+def test_create_and_describe(stream):
+    shards = stream._meta()["shards"]  # the describe-stream result
+    assert len(shards) == 2
+    assert all(not s["closed"] for s in shards)
     # hash ranges tile the keyspace
-    los = sorted(int(r["starting_hash_key"]) for r in rows)
-    assert los[0] == 0
+    ranges = sorted((int(s["starting_hash_key"]), int(s["ending_hash_key"])) for s in shards)
+    assert ranges[0][0] == 0 and ranges[-1][1] == MAX_HASH
+    assert all(lo_end + 1 == hi_start for (_, lo_end), (hi_start, _) in zip(ranges, ranges[1:]))
 
 
 def test_put_places_by_partition_key_hash(spark, stream):
@@ -74,14 +73,57 @@ def test_at_timestamp_positioning_and_clamp(spark, stream):
     mid = AtTimestamp(T0 + timedelta(hours=1))
     got = stream.read_batch(spark, mid).collect()
     assert {bytes(r["data"]).decode()[:3] for r in got} == {"new"}
-    # future timestamp clamps to now ⇒ reads nothing... unless clock says otherwise:
+    # a future timestamp clamps to min(since, now) = now = T0+3h; every
+    # record arrived before that, so nothing reads
     future = AtTimestamp(T0 + timedelta(days=400))
     got2 = stream.read_batch(spark, future, now=T0 + timedelta(hours=3))
-    assert got2.count() == 0  # clamped to "now", which is after all records? no —
-    # clamp = min(future, now) = now = T0+3h, all records are older ⇒ filtered out
+    assert got2.count() == 0
     # records AT or after the position are included:
     got3 = stream.read_batch(spark, AtTimestamp(T0 + timedelta(hours=2)))
     assert got3.count() == 5
+
+
+def test_at_timestamp_naive_since_reads_without_a_clock(spark, stream):
+    # a naive position is UTC, like a naive put ts; comparing it with the
+    # aware default clock must not raise
+    stream.put_records(make_records("old", 3), ts=T0 - timedelta(days=1))
+    stream.put_records(make_records("new", 4), ts=T0)
+    got = stream.read_batch(spark, AtTimestamp(datetime(2024, 1, 1)))
+    assert {bytes(r["data"]).decode()[:3] for r in got.collect()} == {"new"}
+
+
+# -- the start-position resolver (S3 clamp, S5/S7 floors) -------------------
+
+FIXED_NOW = datetime(2024, 6, 1, 12, 0, 0, tzinfo=timezone.utc)
+
+
+def test_start_position_clamps_future_timestamp_to_now(stream):
+    future = AtTimestamp(datetime(2030, 1, 1, tzinfo=timezone.utc))
+    assert stream.start_position(future, now=FIXED_NOW) == ({}, datetime(2024, 6, 1, 12))
+    # naive is UTC on either side of the clamp
+    assert stream.start_position(AtTimestamp(datetime(2030, 1, 1)), now=FIXED_NOW) == (
+        {},
+        datetime(2024, 6, 1, 12),
+    )
+
+
+def test_start_position_keeps_past_timestamp(stream):
+    past = AtTimestamp(datetime(2020, 1, 1, tzinfo=timezone.utc))
+    assert stream.start_position(past, now=FIXED_NOW) == ({}, datetime(2020, 1, 1))
+    naive_now = datetime(2024, 6, 1, 12)
+    assert stream.start_position(past, now=naive_now) == ({}, datetime(2020, 1, 1))
+
+
+def test_start_position_latest_floors_only_existing_shards(stream):
+    assert stream.start_position(TrimHorizon()) == ({}, None)
+    assert stream.start_position(Latest()) == ({}, None)  # no shard has a record
+    stream.put_records(make_records("k", 5) + make_records("j", 5))
+    floors, since = stream.start_position(Latest())
+    assert floors == stream.next_sequence_numbers() and since is None
+    # a reshard's children are not in the floors: they read from 0 (S7)
+    kids = stream.split_shard(stream.open_shards()[0]["shard_id"])
+    assert not set(kids) & set(stream.start_position(Latest())[0])
+    assert stream.start_position(TrimHorizon()) == ({}, None)
 
 
 def test_latest_ignores_existing_records(spark, stream):
@@ -106,11 +148,10 @@ def test_split_shard_lineage_and_no_loss(spark, stream):
     stream.put_records(make_records("pre", 10))
     open_before = [s["shard_id"] for s in stream.open_shards()]
     kid_a, kid_b = stream.split_shard(open_before[0])
-    shards = stream.describe(spark)
-    roots = {r["shard_id"] for r in find_oldest_possible_shards(shards).collect()}
-    leaves = {r["shard_id"] for r in find_newest_possible_shards(shards).collect()}
-    assert open_before[0] in roots  # closed parent still a root (history)
-    assert kid_a in leaves and kid_b in leaves and open_before[0] not in leaves
+    lineage = {s["shard_id"]: s for s in stream._meta()["shards"]}
+    assert lineage[open_before[0]]["closed"]  # closed parent kept (history)
+    assert {lineage[k]["parent_shard_id"] for k in (kid_a, kid_b)} == {open_before[0]}
+    assert {s["shard_id"] for s in stream.open_shards()} == {kid_a, kid_b, open_before[1]}
     # writes after the split land in children; trim_horizon sees everything
     stream.put_records(make_records("post", 10))
     assert stream.read_batch(spark, TrimHorizon()).count() == 20
@@ -120,9 +161,7 @@ def test_merge_shards_single_child(spark, stream):
     a, b = [s["shard_id"] for s in stream.open_shards()]
     stream.put_records(make_records("x", 6))
     kid = stream.merge_shards(a, b)
-    shards = stream.describe(spark)
-    leaves = {r["shard_id"] for r in find_newest_possible_shards(shards).collect()}
-    assert leaves == {kid}
+    assert [s["shard_id"] for s in stream.open_shards()] == [kid]
     stream.put_records(make_records("y", 4))
     df = stream.read_batch(spark, TrimHorizon())
     assert df.count() == 10
@@ -366,3 +405,84 @@ def test_put_file_names_carry_the_data_range(spark, tmp_path):
         pairs = _name_and_data_ranges(s)
         assert len(pairs) >= 2
         assert all(name == data for name, data in pairs), pairs
+
+
+# -- one start position, four reads ----------------------------------------
+
+PARITY_POSITIONS = {
+    "trim_horizon": (TrimHorizon(), None),
+    "latest": (Latest(), None),
+    "at_timestamp_past": (AtTimestamp(T0 + timedelta(minutes=90)), None),
+    "at_timestamp_future": (
+        AtTimestamp(T0 + timedelta(days=400)),
+        T0 + timedelta(minutes=150),
+    ),
+}
+
+
+def _pyds_options(path, iterator, now):
+    opts = {"path": path}
+    if isinstance(iterator, Latest):
+        opts["starting_position"] = "latest"
+    elif isinstance(iterator, AtTimestamp):
+        opts["starting_position"] = f"at_timestamp:{iterator.since.isoformat()}"
+    if now is not None:
+        opts["now"] = now.isoformat()
+    return opts
+
+
+def _drained(spark, sdf, out):
+    q = (
+        sdf.writeStream.format("parquet")
+        .option("path", str(out / "data"))
+        .option("checkpointLocation", str(out / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    # explicit schema: a zero-row drain leaves no data files to infer from
+    return spark.read.schema(sdf.schema).parquet(str(out / "data"))
+
+
+@pytest.mark.parametrize("position", list(PARITY_POSITIONS))
+def test_start_position_parity_across_the_four_reads(spark, stream, tmp_path, position):
+    """SimStream.read_batch/read_stream and the kinesis_sim_py batch and
+    stream readers keep the same records at every start position, on a
+    stream resharded mid-history whose last put arrived earlier than the
+    one before it: an at_timestamp read keeps arrival ts >= since on every
+    shard, old or new, and is not a sequence position."""
+    from akka_streams_kinesis_spark.sources import pyds
+
+    def put(tag, hours):
+        records = [(f"user{i}", f"{tag}{i}".encode()) for i in range(8)]
+        return stream.put_records(records, ts=T0 + timedelta(hours=hours))
+
+    placed = {"a": put("a", 0), "b": put("b", 2)}
+    stream.split_shard("shardId-000000000000")
+    placed.update(c=put("c", 3), d=put("d", 1))  # d arrives "earlier" than c
+    want = {
+        "trim_horizon": "abcd",
+        "latest": "",
+        "at_timestamp_past": "bc",
+        "at_timestamp_future": "c",  # clamped to now = T0+2.5h
+    }[position]
+    want = {(r["shard_id"], r["sequence_number"]) for t in want for r in placed[t]}
+
+    iterator, now = PARITY_POSITIONS[position]
+    opts = _pyds_options(stream.path, iterator, now)
+    pyds.register(spark)
+    reads = {
+        "read_batch": stream.read_batch(spark, iterator, now=now),
+        "read_stream": _drained(
+            spark, stream.read_stream(spark, iterator, now=now), tmp_path / "file"
+        ),
+        "pyds batch": spark.read.format(pyds.FORMAT_NAME).options(**opts).load(),
+        "pyds stream": _drained(
+            spark,
+            spark.readStream.format(pyds.FORMAT_NAME).options(**opts).load(),
+            tmp_path / "pyds",
+        ),
+    }
+    for name, df in reads.items():
+        got = {(r["shard_id"], r["sequence_number"]) for r in df.collect()}
+        assert got == want, name

@@ -259,18 +259,21 @@ def test_planning_opens_no_put_file(long_stream, monkeypatch):
     def refuse(*a, **k):
         raise AssertionError(f"planning opened a put file: {a[:1]}")
 
-    reader = pyds.KinesisSimStreamReader({"path": long_stream.path})
-    start = reader.initialOffset()
-    latest = pyds.KinesisSimBatchReader(
-        {"path": long_stream.path, "starting_position": "latest"}
-    )
     for name in ("read_metadata", "read_table", "ParquetFile"):
         monkeypatch.setattr(pq, name, refuse)
+    for position in ("trim_horizon", "latest", "at_timestamp:2024-01-01T00:05:00"):
+        opts = {"path": long_stream.path, "starting_position": position}
+        pyds.KinesisSimStreamReader(opts).initialOffset()
+    reader = pyds.KinesisSimStreamReader({"path": long_stream.path})
+    start = reader.initialOffset()
     end = reader.latestOffset()
     assert sum(end.values()) == 60
     parts = reader.partitions(start, end)
     assert sum(len(p.files) for p in parts) == 24
-    assert {p.shard_id: p.lo for p in latest.partitions()} == end
+    latest = pyds.KinesisSimBatchReader(
+        {"path": long_stream.path, "starting_position": "latest"}
+    )
+    assert latest.partitions() == []  # a latest batch read ships no file
 
 
 def test_foreign_parquet_in_shard_dir_is_rejected(stream):
@@ -288,3 +291,16 @@ def test_foreign_parquet_in_shard_dir_is_rejected(stream):
         pyds.KinesisSimBatchReader({"path": stream.path}).partitions()
     with pytest.raises(ValueError, match=re.escape(foreign)):
         stream.next_sequence_numbers()
+
+
+def test_batch_read_of_a_stream_without_records_is_empty(spark, tmp_path):
+    # no shard dir ⇒ no partition, which Spark runs as one read of None
+    pyds.register(spark)
+    empty = SimStream.create(str(tmp_path / "empty"), n_shards=2)
+    assert _batch(spark, empty.path).count() == 0
+
+
+@pytest.mark.parametrize("position", ["earliest", "latest:2024-01-01", "at_timestamp"])
+def test_unknown_starting_position_is_rejected(stream, position):
+    with pytest.raises(ValueError, match="starting_position"):
+        pyds.KinesisSimStreamReader({"path": stream.path, "starting_position": position})
